@@ -139,7 +139,9 @@ object VectorKernels {
         acc += v.getDouble(j) * r
         j += 1
       }
-      if (acc >= 0) bucket += (1L << b)
+      // !(acc < 0), not acc >= 0: a NaN sum sets the bit, like the
+      // SQL CASE form under Spark's NaN-is-largest ordering
+      if (!(acc < 0)) bucket += (1L << b)
       b += 1
     }
     bucket

@@ -1,7 +1,9 @@
 package graft.shelf
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
 import java.security.MessageDigest
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
@@ -39,8 +41,9 @@ object Checksums {
   /** Relative-path → sha256 manifest of every file under `dir`
     * (utils.py:26-39). Throws when the directory holds no files.
     */
-  def checksumFolder(dir: Path): SortedMap[String, String] = {
-    val entries = folderManifest(dir)
+  def checksumFolder(dir: Path,
+                     hash: Path => String = checksumFile): SortedMap[String, String] = {
+    val entries = folderManifest(dir, hash)
     require(entries.nonEmpty, s"""No files found in "$dir" to checksum""")
     entries
   }
@@ -52,11 +55,12 @@ object Checksums {
     * the whole run. Ingest-time [[checksumFolder]] keeps the non-empty
     * guard for reference parity.
     */
-  def folderManifest(dir: Path): SortedMap[String, String] = {
+  def folderManifest(dir: Path,
+                     hash: Path => String = checksumFile): SortedMap[String, String] = {
     val entries = Files.walk(dir).iterator().asScala
       .filter(Files.isRegularFile(_))
       .filterNot(p => IgnoreFiles.contains(p.getFileName.toString))
-      .map(p => dir.relativize(p).toString -> checksumFile(p))
+      .map(p => dir.relativize(p).toString -> hash(p))
       .toSeq
     SortedMap(entries: _*)
   }
@@ -89,4 +93,64 @@ object Checksums {
       Files.writeString(gi, content)
     }
   }
+}
+
+/** Stat-validated SHA-256 cache for snapshot data files — the git index
+  * technique (https://git-scm.com/docs/racy-git). A file whose stat
+  * identity (device, inode, size, mtime, ctime) is unchanged since it
+  * was hashed gets its recorded hash back without a byte being read.
+  * ctime is part of the identity because no user call can set it back:
+  * a same-size rewrite with a reset mtime, or a rename over the file,
+  * still misses.
+  *
+  * An entry is stored only when the stat taken before hashing equals
+  * the one taken after, and the file's ctime is more than [[RacyNanos]]
+  * older than the moment hashing began (git's racy-entry rule): a write
+  * in the same timestamp tick as the hash can never hide behind an
+  * unchanged stat. A mismatch drops the entry and re-hashes in full.
+  * Entries live in process memory, keyed by absolute path. Where the
+  * platform has no `unix:*` attributes every call hashes in full.
+  */
+private[graft] object StatCache {
+
+  private final case class Stat(dev: Long, ino: Long, size: Long,
+                                mtimeNs: Long, ctimeNs: Long)
+
+  private val RacyNanos = TimeUnit.SECONDS.toNanos(2)
+
+  private val entries = new ConcurrentHashMap[Path, (Stat, String)]()
+
+  private def stat(p: Path): Option[Stat] =
+    try {
+      val a = Files.readAttributes(p, "unix:dev,ino,size,lastModifiedTime,ctime")
+      def ns(k: String) = a.get(k).asInstanceOf[FileTime].to(TimeUnit.NANOSECONDS)
+      def long(k: String) = a.get(k).asInstanceOf[java.lang.Long].longValue
+      Some(Stat(long("dev"), long("ino"), long("size"),
+        ns("lastModifiedTime"), ns("ctime")))
+    } catch { case _: UnsupportedOperationException => None }
+
+  def checksumFile(path: Path): String = {
+    val key = path.toAbsolutePath.normalize
+    val before = stat(key)
+    before.flatMap(s => Option(entries.get(key)).filter(_._1 == s)) match {
+      case Some((_, cs)) => cs
+      case None =>
+        entries.remove(key)
+        val started = TimeUnit.MILLISECONDS.toNanos(System.currentTimeMillis())
+        val cs = Checksums.checksumFile(key)
+        before
+          .filter(s => started - s.ctimeNs > RacyNanos && stat(key).contains(s))
+          .foreach(s => entries.put(key, (s, cs)))
+        cs
+    }
+  }
+
+  /** Drop every entry at or under `path`. */
+  def forget(path: Path): Unit = {
+    val prefix = path.toAbsolutePath.normalize
+    entries.keySet.removeIf(_.startsWith(prefix))
+  }
+
+  def isCached(path: Path): Boolean =
+    entries.containsKey(path.toAbsolutePath.normalize)
 }

@@ -23,19 +23,27 @@ object Db {
     spark.sql(sql)
   }
 
-  /** names ∈ short | full | both (__init__.py:136-140, 381-387). */
+  /** names ∈ short | full | both (__init__.py:136-140, 381-387). With
+    * `both`, an alias is registered over its table's full-name frame:
+    * a second `spark.read.parquet` would infer the same schema again.
+    */
   def registerViews(spark: SparkSession, root: Path, tablePaths: Seq[String],
                     names: String): Unit = {
-    val register = (viewName: String, path: String) => {
-      val parquet = Tables.tablePath(root, StepURI.table(path))
-      spark.read.parquet(parquet.toString).createOrReplaceTempView(viewName)
-    }
-    if (names == "full" || names == "both")
-      tablePaths.foreach(p => register(Naming.pathToSnake(p), p))
+    val read = (path: String) =>
+      spark.read.parquet(Tables.tablePath(root, StepURI.table(path)).toString)
+    val full: Map[String, DataFrame] =
+      if (names == "full" || names == "both")
+        tablePaths.map { p =>
+          val df = read(p)
+          df.createOrReplaceTempView(Naming.pathToSnake(p))
+          Naming.pathToSnake(p) -> df
+        }.toMap
+      else Map.empty
     if (names == "short" || names == "both")
       Naming.tableAliases(tablePaths).foreach { case (alias, tableName) =>
-        tablePaths.find(p => Naming.pathToSnake(p) == tableName)
-          .foreach(p => register(alias, p))
+        full.get(tableName)
+          .orElse(tablePaths.find(p => Naming.pathToSnake(p) == tableName).map(read))
+          .foreach(_.createOrReplaceTempView(alias))
       }
   }
 

@@ -127,11 +127,14 @@ final class Shelf(val root: Path, sparkProvider: () => SparkSession,
   def audit(fix: Boolean = false): Seq[String] =
     catalog.steps.keys.toSeq.sorted.flatMap { uri =>
       // reference semantics: directory snapshots re-fold their manifest
-      // (__init__.py:324-350, tables skipped). Directory TABLES are this
-      // engine's cluster-scale extension (write.single_file: false), so
-      // they get the symmetric manifest-fold audit; single-file tables
-      // stay exempt, exactly like the reference.
-      if (uri.scheme == "snapshot") Snapshots.audit(root, uri, fix).left.toOption
+      // (__init__.py:324-350, tables skipped). File snapshots re-hash
+      // too: staleness checks trust unchanged stats (StatCache), so
+      // audit is the one command that reads every byte and catches bit
+      // rot. Directory TABLES are this engine's cluster-scale extension
+      // (write.single_file: false), so they get the symmetric
+      // manifest-fold audit; single-file tables stay exempt, exactly
+      // like the reference.
+      if (uri.scheme == "snapshot") Snapshots.audit(root, uri, fix, store).left.toOption
       else Tables.audit(root, uri, fix).left.toOption
     }
 

@@ -44,14 +44,17 @@ final case class Snapshot(uri: StepURI,
     core ++ typed ++ extra
   }
 
-  /** Fresh ⇔ data exists and re-hashes to the recorded checksum
-    * (snapshots.py:175-184).
+  /** Fresh ⇔ data exists and hashes to the recorded checksum
+    * (snapshots.py:175-184). Each data file's hash goes through
+    * [[StatCache]], so an unchanged file is not re-read; a directory is
+    * still walked on every check, so added or removed files are caught.
     */
   def isFresh(root: Path): Boolean = {
     val p = dataPath(root)
     if (!Files.exists(p)) false
-    else if (snapshotType == "file") Checksums.checksumFile(p) == checksum
-    else Checksums.checksumManifest(Checksums.checksumFolder(p)) == checksum
+    else if (snapshotType == "file") StatCache.checksumFile(p) == checksum
+    else Checksums.checksumManifest(
+      Checksums.checksumFolder(p, StatCache.checksumFile)) == checksum
   }
 
   /** Restore from the store into the data path. Directory restore deletes
@@ -155,28 +158,36 @@ object Snapshots {
       extra = doc.view.filterKeys(k => !known.contains(k)).toMap)
   }
 
-  /** Audit: recompute the manifest fold for directory snapshots and
-    * compare to the recorded checksum; optionally rewrite the sidecar
-    * (__init__.py:315-350).
+  /** Audit: the full re-hash, never served from [[StatCache]]. A
+    * directory snapshot re-folds its manifest and `fix` rewrites the
+    * sidecar (__init__.py:315-350). A file snapshot re-hashes its data
+    * and `fix` restores the recorded bytes from the store. A mismatch
+    * also drops the cached hashes of the audited data, so the next
+    * staleness check reads it again.
     */
-  def audit(root: Path, uri: StepURI, fix: Boolean): Either[String, Unit] = {
+  def audit(root: Path, uri: StepURI, fix: Boolean,
+            store: Store): Either[String, Unit] = {
     val snap = load(root, uri)
-    if (snap.snapshotType != "directory") Right(())
+    val data = snap.dataPath(root)
+    if (!Files.exists(data)) return Right(()) // nothing local to audit
+    // folderManifest (not checksumFolder): an emptied-out snapshot
+    // dir must REPORT as a mismatch, not crash the audit run
+    val manifest =
+      if (snap.snapshotType == "directory") Some(Checksums.folderManifest(data))
+      else None
+    val actual = manifest.fold(Checksums.checksumFile(data))(Checksums.checksumManifest)
+    if (actual == snap.checksum) Right(())
     else {
-      val dir = snap.dataPath(root)
-      if (!Files.exists(dir)) Right(()) // nothing local to audit
+      StatCache.forget(data)
+      if (!fix) Left(s"$uri: checksum mismatch (recorded ${snap.checksum}, actual $actual)")
       else {
-        // folderManifest (not checksumFolder): an emptied-out snapshot
-        // dir must REPORT as a mismatch, not crash the audit run
-        val actual = Checksums.folderManifest(dir)
-        val fold = Checksums.checksumManifest(actual)
-        if (fold == snap.checksum) Right(())
-        else if (!fix) Left(s"$uri: checksum mismatch (recorded ${snap.checksum}, actual $fold)")
-        else {
-          val fixed = snap.copy(checksum = fold, manifest = Some(actual))
-          Yaml.save(fixed.metadataPath(root), fixed.sidecarDoc)
-          Right(())
+        manifest match {
+          case Some(m) =>
+            val fixed = snap.copy(checksum = actual, manifest = Some(m))
+            Yaml.save(fixed.metadataPath(root), fixed.sidecarDoc)
+          case None => snap.fetch(root, store)
         }
+        Right(())
       }
     }
   }

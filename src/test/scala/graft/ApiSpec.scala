@@ -2041,6 +2041,37 @@ class ApiSpec extends AnyFunSuite {
     assert(emptyRes === -1L)
   }
 
+  test("lsh_bucket matches the SQL CASE-sum form, NaN-bearing vectors included") {
+    graft.functions.VectorFunctions.register(spark)
+    val bits = 12
+    // the per-bit CASE form the kernel replaced: Spark orders NaN above
+    // every number, so a NaN dot product sets its bit
+    val caseSum = (0 until bits).map { b =>
+      s"""CASE WHEN aggregate(zip_with(v,
+            transform(sequence(0, size(v) - 1), j ->
+              IF((xxhash64(CAST($b AS BIGINT), CAST(j AS BIGINT)) & 1L) = 0L,
+                 1.0D, -1.0D)),
+            (x, r) -> x * r), 0.0D, (acc, y) -> acc + y) >= 0
+          THEN ${1L << b}L ELSE 0L END"""
+    }.mkString(" + ")
+    val rows = spark.sql(
+      """SELECT * FROM VALUES
+           (0, array(CAST('NaN' AS DOUBLE), 1.0D, -2.0D)),
+           (1, array(1.0D, CAST('NaN' AS DOUBLE))),
+           (2, array(CAST('Infinity' AS DOUBLE), CAST('-Infinity' AS DOUBLE), 0.5D)),
+           (3, array(0.25D, -1.5D, 3.0D, -0.0D)),
+           (4, array(1.0D, CAST(NULL AS DOUBLE))),
+           (5, CAST(array() AS ARRAY<DOUBLE>)),
+           (6, CAST(NULL AS ARRAY<DOUBLE>))
+         AS t(id, v)""")
+      .select(col("id"), expr(s"lsh_bucket(v, $bits)"), expr(caseSum))
+      .collect()
+    assert(rows.length === 7)
+    rows.foreach(r => assert(r.getLong(1) === r.getLong(2), s"vector ${r.getInt(0)}"))
+    assert(rows.find(_.getInt(0) == 0).get.getLong(1) === (1L << bits) - 1,
+      "a NaN sum sets every bit")
+  }
+
   test("vec_sum_agg equals the exploded per-dimension sum") {
     graft.functions.VectorSumAgg.register(spark)
     val e = emb.select(col("vec_id"),

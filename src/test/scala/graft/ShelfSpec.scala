@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{FileSystems, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.shelf._
@@ -349,6 +349,129 @@ class ShelfEndToEndSpec extends AnyFunSuite {
     assert(shelf.audit() === Seq.empty)
   }
 
+  test("audit re-hashes a file snapshot; fix restores it from the store") {
+    val (shelf, root) = freshShelf()
+    val src = Files.createTempFile("audf", ".txt")
+    Files.writeString(src, "original")
+    val uri = shelf.snapshot(src, "ns/audited_file", today = today)
+    val data = Snapshots.load(root, uri).dataPath(root)
+    assert(shelf.isCompleted(uri))
+    assert(shelf.audit() === Seq.empty)
+    // same size, mtime reset: only a full re-hash can see it
+    rewriteInPlace(data, "tampered")
+    val problems = shelf.audit()
+    assert(problems.size === 1 && problems.head.contains("checksum mismatch"),
+      problems)
+    assert(!shelf.isCompleted(uri))
+    assert(shelf.audit(fix = true) === Seq.empty)
+    assert(Files.readString(data) === "original", "fix restores the recorded bytes")
+    assert(shelf.audit() === Seq.empty)
+    assert(shelf.isCompleted(uri))
+  }
+
+  /** Overwrite `p` in place (same inode) with same-size bytes, then set
+    * its mtime back: only ctime still records the write.
+    */
+  private def rewriteInPlace(p: Path, text: String): Unit = {
+    val bytes = text.getBytes("UTF-8")
+    assert(bytes.length === Files.size(p), "in-place rewrite keeps the size")
+    val mtime = Files.getLastModifiedTime(p)
+    val ch = java.nio.channels.FileChannel.open(p,
+      java.nio.file.StandardOpenOption.WRITE)
+    try ch.write(java.nio.ByteBuffer.wrap(bytes), 0) finally ch.close()
+    Files.setLastModifiedTime(p, mtime)
+  }
+
+  /** Wait out the cache's racy window, so the next hash is stored. */
+  private def settle(): Unit = Thread.sleep(2200)
+
+  private def assumeUnixStat(): Unit =
+    assume(FileSystems.getDefault.supportedFileAttributeViews.contains("unix"),
+      "no unix:* file attributes on this platform")
+
+  /** A file snapshot of "aaaa" whose hash the stat cache holds. */
+  private def cachedFileSnapshot(): (Shelf, StepURI, Path) = {
+    assumeUnixStat()
+    val (shelf, root) = freshShelf()
+    val src = Files.createTempFile("statc", ".txt")
+    Files.writeString(src, "aaaa")
+    val uri = shelf.snapshot(src, "ns/stat_cached", today = today)
+    val data = Snapshots.load(root, uri).dataPath(root)
+    settle()
+    assert(shelf.isCompleted(uri))
+    assert(StatCache.isCached(data))
+    (shelf, uri, data)
+  }
+
+  test("stat cache: a same-size in-place rewrite with a reset mtime is stale") {
+    val (shelf, uri, data) = cachedFileSnapshot()
+    assert(shelf.isCompleted(uri), "an unchanged file is served from the cache")
+    rewriteInPlace(data, "bbbb")
+    assert(!shelf.isCompleted(uri))
+  }
+
+  test("stat cache: a file renamed over the snapshot is stale") {
+    val (shelf, uri, data) = cachedFileSnapshot()
+    val tmp = data.resolveSibling("incoming.tmp")
+    Files.writeString(tmp, "bbbb")
+    Files.setLastModifiedTime(tmp, Files.getLastModifiedTime(data))
+    Files.move(tmp, data, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    assert(!shelf.isCompleted(uri))
+  }
+
+  test("stat cache: a rewrite in the hash's own tick is never served from the cache") {
+    val (shelf, root) = freshShelf()
+    val src = Files.createTempFile("racy", ".txt")
+    Files.writeString(src, "aaaa")
+    val uri = shelf.snapshot(src, "ns/racy", today = today)
+    val data = Snapshots.load(root, uri).dataPath(root)
+    // hashed within the racy window of its own write: not stored
+    assert(shelf.isCompleted(uri))
+    assert(!StatCache.isCached(data))
+    rewriteInPlace(data, "bbbb")
+    assert(!shelf.isCompleted(uri))
+  }
+
+  test("stat cache: a file added to or removed from a directory snapshot is stale") {
+    assumeUnixStat()
+    val (shelf, root) = freshShelf()
+    val srcDir = Files.createTempDirectory("statd")
+    Files.writeString(srcDir.resolve("a.txt"), "alpha")
+    Files.writeString(srcDir.resolve("b.txt"), "beta")
+    val uri = shelf.snapshot(srcDir, "ns/stat_dir", today = today)
+    val dir = Snapshots.load(root, uri).dataPath(root)
+    settle()
+    assert(shelf.isCompleted(uri))
+    assert(StatCache.isCached(dir.resolve("a.txt")))
+    Files.writeString(dir.resolve("c.txt"), "gamma")
+    assert(!shelf.isCompleted(uri), "an added file is caught")
+    Files.delete(dir.resolve("c.txt"))
+    assert(shelf.isCompleted(uri))
+    Files.delete(dir.resolve("b.txt"))
+    assert(!shelf.isCompleted(uri), "a removed file is caught")
+  }
+
+  test("stat cache: a second plan over unchanged inputs reads less than one snapshot") {
+    val io = Paths.get("/proc/self/io")
+    assume(Files.isReadable(io), "no per-process I/O counters on this platform")
+    assumeUnixStat()
+    def rchar(): Long = Files.readAllLines(io).asScala
+      .collectFirst { case l if l.startsWith("rchar:") => l.drop(6).trim.toLong }.get
+    val (shelf, root) = freshShelf()
+    val src = Files.createTempFile("bulk", ".bin")
+    val size = 4 << 20
+    Files.write(src, Array.tabulate[Byte](size)(i => (i * 31).toByte))
+    val uri = shelf.snapshot(src, "ns/bulk", today = today)
+    settle()
+    assert(shelf.plan() === Seq.empty)
+    assert(StatCache.isCached(Snapshots.load(root, uri).dataPath(root)))
+    val before = rchar()
+    assert(shelf.plan() === Seq.empty)
+    val read = rchar() - before
+    assert(read < size, s"second plan read $read bytes")
+  }
+
   test("export writes snake-named parquets + manifest (:361-400 export)") {
     val (shelf, root) = freshShelf()
     val script = root.resolve("src/steps/tables/exp/t/2026-08-12.sql")
@@ -681,6 +804,22 @@ class ShelfEndToEndSpec extends AnyFunSuite {
     Files.writeString(dataDir.resolve("a.txt"), "tampered")
     assert(shelf.audit().exists(_.contains("checksum mismatch")))
     assert(shelf.audit(fix = true) === Seq.empty)
+    assert(shelf.audit() === Seq.empty)
+
+    // a tampered FILE snapshot: fix restores the recorded bytes, and
+    // with the cache wiped they round-trip through the mock remote
+    val src = Files.createTempFile("snapfilem", ".txt")
+    Files.writeString(src, "original")
+    val fileUri = shelf.snapshot(src, "mock/file", today = today)
+    val data = Snapshots.load(root, fileUri).dataPath(root)
+    Files.walk(cache).iterator().asScala
+      .filter(Files.isRegularFile(_)).foreach(Files.delete(_))
+    Files.writeString(data, "rotten!!")
+    assert(shelf.audit() ===
+      Seq(s"$fileUri: checksum mismatch (recorded ${Snapshots.load(root, fileUri).checksum}, " +
+        s"actual ${Checksums.checksumFile(data)})"))
+    assert(shelf.audit(fix = true) === Seq.empty)
+    assert(Files.readString(data) === "original")
     assert(shelf.audit() === Seq.empty)
   }
 
