@@ -186,6 +186,23 @@ object Bench {
     }
   }
 
+  /** The budgeted stdout line: `render(queries, unloaded)` with entries
+    * dropped until it is at most `limit` chars — `unloaded` entries
+    * first, then loaded ones, fastest first within each (the slowest
+    * are the most informative). If even the line without entries is
+    * over the limit, `bare` is returned instead.
+    */
+  private[graft] def budgetLine(limit: Int, queries: Seq[(String, Double)],
+                                unloaded: Seq[(String, Double)], bare: String)(
+      render: (Seq[(String, Double)], Seq[(String, Double)]) => String): String = {
+    var q = queries.sortBy(-_._2)
+    var u = unloaded.sortBy(-_._2)
+    var line = render(q, u)
+    while (line.length > limit && u.nonEmpty) { u = u.dropRight(1); line = render(q, u) }
+    while (line.length > limit && q.nonEmpty) { q = q.dropRight(1); line = render(q, u) }
+    if (line.length <= limit) line else bare
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Overridable for off-nominal scales (the sf~1 shakeout runs 10x
@@ -764,22 +781,20 @@ object Bench {
     // because 4 submitters queue shorter than 16). Solo walls at two
     // widths are the comparable quantity. Failures (-1 entries) are
     // excluded; every existing field is unchanged.
-    val unloadedLine = unloaded.filter(_._2 >= 0).sortBy(_._1)
+    def entries(rs: Seq[(String, Double)]): String = rs.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    def line(rs: Seq[(String, Double)]): String = {
-      val qs = rs.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
+    def line(rs: Seq[(String, Double)], us: Seq[(String, Double)]): String = {
       // the state fields ride the budgeted stdout line too (cheap:
       // booleans + usually-empty lists) — the driver's BENCH_r{N}.json
       // records only this line, and the whole point is that THAT
       // artifact names its own cache state without cross-referencing
-      s"""{"metric":"total","value":${f"${wall + buildWall}%.2f"},"unit":"sec","query_sec":${f"$wall%.2f"},"build_sec":${f"$buildWall%.2f"},"host_factor":${f"$hostFactor%.2f"},"host_factor_end":${f"$hostFactorEnd%.2f"},"probe_burst":$probeBurst,"ext_busy_burst":$extBurst,"probe_slow_frac":${f"$probeSlowFrac%.2f"},"contended":$contended,"state_divergent":$stateDivergent,"divergent_queries":${strList(divergentQueries.take(12))},"cpu_inflated":${strList(cpuInflatedOnly.take(12))},"scratch_wiped":$scratchWiped,"n_scratch_cold":${scratchCold.size},"jvm_heap_mb":$jvmHeapMb,"cpu_total_sec":${f"$cpuTotalSec%.2f"},"n_queries":${results.size},"errors":${errors.get + unloadedErrors.get},"loaded_errors":${errors.get},"unloaded_errors":${unloadedErrors.get},"unloaded":$unloadedLine,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"${wall + buildWall}%.2f"},"unit":"sec","query_sec":${f"$wall%.2f"},"build_sec":${f"$buildWall%.2f"},"host_factor":${f"$hostFactor%.2f"},"host_factor_end":${f"$hostFactorEnd%.2f"},"probe_burst":$probeBurst,"ext_busy_burst":$extBurst,"probe_slow_frac":${f"$probeSlowFrac%.2f"},"contended":$contended,"state_divergent":$stateDivergent,"divergent_queries":${strList(divergentQueries.take(12))},"cpu_inflated":${strList(cpuInflatedOnly.take(12))},"scratch_wiped":$scratchWiped,"n_scratch_cold":${scratchCold.size},"jvm_heap_mb":$jvmHeapMb,"cpu_total_sec":${f"$cpuTotalSec%.2f"},"n_queries":${results.size},"errors":${errors.get + unloadedErrors.get},"loaded_errors":${errors.get},"unloaded_errors":${unloadedErrors.get},"unloaded":${entries(us)},"queries":${entries(rs)},"sf":"$sfDir"}"""
     }
-    var kept = results.sortBy(-_._2) // keep the slowest: most informative
-    while (line(kept).length > 1600 && kept.nonEmpty) kept = kept.dropRight(1)
+    val stdoutLine = budgetLine(1600, results.toSeq, unloaded.filter(_._2 >= 0).toSeq,
+      s"""{"metric":"total","value":${f"${wall + buildWall}%.2f"},"unit":"sec","cpu_total_sec":${f"$cpuTotalSec%.2f"},"errors":${errors.get + unloadedErrors.get}}""")(line)
     Graft.clear(spark)
     spark.stop()
-    println(line(kept))
+    println(stdoutLine)
     System.out.flush()
   }
 }

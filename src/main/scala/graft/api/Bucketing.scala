@@ -22,26 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Bucketed copies are session-external tables written once per
-    * (session, sfDir) under memory-backed storage when available.
-    */
-  private val done =
-    scala.collection.concurrent.TrieMap[(Int, String, String), String]()
-
   /** Scratch root shared by every persisted-index artifact. */
   private[graft] def scratchBase: String = base
 
   private def base: String =
     if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bucketed"
     else sys.props("java.io.tmpdir") + "/graft-bucketed"
-
-  /** Drop this session's bucketed tables and forget them (Graft.clear). */
-  private[graft] def clearTables(s: SparkSession): Unit = done.synchronized {
-    val id = System.identityHashCode(s)
-    done.keys.filter(_._1 == id).foreach { k =>
-      done.remove(k).foreach(tbl => s.sql(s"DROP TABLE IF EXISTS $tbl"))
-    }
-  }
 
   /** Write `df` as a bucketed+sorted external table; idempotent per
     * session. Returns the table name to read back.
@@ -77,63 +63,57 @@ object Bucketing {
     // serve one dir's table for the other within a session.)
     val tag = Dedup.tableTag(sfDir)
     val tbl = s"graft_bk_${name}_$tag"
-    // synchronized: concurrent queries (q_join_bucketed ∥ q_agg_bucketed
-    // in Bench) must not race the same table write — TrieMap's
-    // getOrElseUpdate can evaluate the thunk twice under contention.
-    val waitT0 = System.nanoTime()
-    done.synchronized {
-      // lock-wait telemetry — the Sources.ensure rule (name long waits)
-      val waitedMs = (System.nanoTime() - waitT0) / 1000000L
-      if (waitedMs > Dedup.LockWarnAfterMs)
-        System.err.println(
-          s"graft: waited $waitedMs ms for bucketed-table lock on $tbl")
-      done.getOrElseUpdate((System.identityHashCode(s), sfDir, name), {
-        val loc = s"$base/$tbl"
-        // an ABSENT source must mean "never trust (or write) a marker"
-        // — checked directly, because sourceFingerprint hashes absence
-        // into a stable digest that a contains() check can never see
-        // (a marker signed from absence would survive a later corpus
-        // regeneration and serve a stale table forever). `ver` is the
-        // caller's recipe version: bump it when the derivation of `df`
-        // changes without the source files changing.
-        val signable = srcPaths.nonEmpty && Dedup.sourcesPresent(s, srcPaths: _*)
-        val fp = if (!signable) ""
-          else s"v$ver:$buckets:$key:" + Dedup.sourceFingerprint(s, srcPaths: _*)
-        val marker = java.nio.file.Paths.get(loc, "_GRAFT_FP")
-        // data-present clause = true: the attach below Try-reads the
-        // parquet schema, which already degrades cleanly to rebuild
-        // when the files are gone
-        val canAttach = signable && Dedup.markerFresh(marker, fp)(true)
-        // a marker surviving a partial scratch cleanup (files gone) must
-        // mean rebuild, not an AnalysisException — loadBandIndex's rule.
-        // CREATE TABLE IF NOT EXISTS + one retry (the Dedup.attachBucketed
-        // discipline), NOT tableExists-then-CREATE: two sessions sharing
-        // one catalog racing that TOCTOU made the loser's Try fail and
-        // silently fall through to a full re-shuffle rewrite instead of
-        // a metadata attach.
-        def attachOnce(): Unit = if (!s.catalog.tableExists(tbl)) {
-          // `_`-prefixed marker is invisible to the schema read
-          val schema = s.read.parquet(loc).schema.toDDL
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl ($schema) USING PARQUET " +
-            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-            s"LOCATION '$loc'")
-        }
-        val attached = canAttach && scala.util.Try {
-          try attachOnce() catch { case _: Exception => attachOnce() }
-        }.isSuccess
-        ScratchStats.record(s"bk_$name", sfDir, attached)
-        if (!attached) {
-          df.write
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .option("path", loc)
-            .mode("overwrite")
-            .saveAsTable(tbl)
-          if (signable) Dedup.writeMarker(marker, fp)
-        }
-        tbl
-      })
+    // one SessionMemo entry per (session, sfDir, name), dropped at
+    // Graft.clear: concurrent queries (q_join_bucketed ∥ q_agg_bucketed
+    // in Bench) wait for one table write instead of racing it, while
+    // other tables write in parallel
+    SessionMemo.withRelease[String](s, "bucketing.table", (sfDir, name),
+        t => { s.sql(s"DROP TABLE IF EXISTS $t"); () }) {
+      val loc = s"$base/$tbl"
+      // an ABSENT source must mean "never trust (or write) a marker"
+      // — checked directly, because sourceFingerprint hashes absence
+      // into a stable digest that a contains() check can never see
+      // (a marker signed from absence would survive a later corpus
+      // regeneration and serve a stale table forever). `ver` is the
+      // caller's recipe version: bump it when the derivation of `df`
+      // changes without the source files changing.
+      val signable = srcPaths.nonEmpty && Dedup.sourcesPresent(s, srcPaths: _*)
+      val fp = if (!signable) ""
+        else s"v$ver:$buckets:$key:" + Dedup.sourceFingerprint(s, srcPaths: _*)
+      val marker = java.nio.file.Paths.get(loc, "_GRAFT_FP")
+      // data-present clause = true: the attach below Try-reads the
+      // parquet schema, which already degrades cleanly to rebuild
+      // when the files are gone
+      val canAttach = signable && Dedup.markerFresh(marker, fp)(true)
+      // a marker surviving a partial scratch cleanup (files gone) must
+      // mean rebuild, not an AnalysisException — loadBandIndex's rule.
+      // CREATE TABLE IF NOT EXISTS + one retry (the Dedup.attachBucketed
+      // discipline), NOT tableExists-then-CREATE: two sessions sharing
+      // one catalog racing that TOCTOU made the loser's Try fail and
+      // silently fall through to a full re-shuffle rewrite instead of
+      // a metadata attach.
+      def attachOnce(): Unit = if (!s.catalog.tableExists(tbl)) {
+        // `_`-prefixed marker is invisible to the schema read
+        val schema = s.read.parquet(loc).schema.toDDL
+        s.sql(s"CREATE TABLE IF NOT EXISTS $tbl ($schema) USING PARQUET " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
+          s"LOCATION '$loc'")
+      }
+      val attached = canAttach && scala.util.Try {
+        try attachOnce() catch { case _: Exception => attachOnce() }
+      }.isSuccess
+      ScratchStats.record(s"bk_$name", sfDir, attached)
+      if (!attached) {
+        df.write
+          .format("parquet")
+          .bucketBy(buckets, key)
+          .sortBy(key)
+          .option("path", loc)
+          .mode("overwrite")
+          .saveAsTable(tbl)
+        if (signable) Dedup.writeMarker(marker, fp)
+      }
+      tbl
     }
   }
 

@@ -20,8 +20,6 @@ import org.apache.spark.storage.StorageLevel
 object Dedup {
 
   private def pin(df: DataFrame): DataFrame = Pins.pin(df)
-  private[graft] def clearPins(s: org.apache.spark.sql.SparkSession): Unit =
-    Pins.clear(s)
 
   /** Content-hash groups: (hash, n) per distinct payload. */
   def exactDuplicates(docs: DataFrame, textCol: String): DataFrame =
@@ -608,18 +606,6 @@ object Dedup {
     */
   private val IndexFormatVersion = 1
 
-  // external tables attached/written by save/loadBandIndex, per session,
-  // dropped (catalog entry only — the files ARE the index) by Graft.clear
-  private val indexTables =
-    scala.collection.mutable.Buffer.empty[(Int, String)]
-  private[graft] def clearIndexTables(s: org.apache.spark.sql.SparkSession): Unit =
-    indexTables.synchronized {
-      val id = System.identityHashCode(s)
-      val (mine, rest) = indexTables.partition(_._1 == id)
-      mine.foreach { case (_, t) => s.sql(s"DROP TABLE IF EXISTS $t") }
-      indexTables.clear(); indexTables ++= rest
-    }
-
   private[graft] def hadoopFs(spark: org.apache.spark.sql.SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1111,9 +1097,10 @@ object Dedup {
         spark.sql(s"CREATE TABLE IF NOT EXISTS $tbl ($schema) USING PARQUET " +
           s"CLUSTERED BY ($ks) SORTED BY ($ks) INTO $buckets BUCKETS " +
           s"LOCATION '$loc'")
-        indexTables.synchronized {
-          indexTables += ((System.identityHashCode(spark), tbl)); ()
-        }
+        // the session's SessionMemo entry drops the catalog entry (only
+        // — the files ARE the index) at Graft.clear
+        SessionMemo.withRelease[String](spark, "dedup.indexTable", tbl,
+          t => { spark.sql(s"DROP TABLE IF EXISTS $t"); () })(tbl)
       }
       spark.table(tbl)
     }

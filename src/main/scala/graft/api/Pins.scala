@@ -37,8 +37,23 @@ private[graft] object Pins {
   // disk-tier spill for un-hygienic long-lived callers.
   private[api] val MaxPerSession = 256
   private[graft] val MaxBytesConf = "spark.graft.pins.maxBytes"
-  private val pinned =
-    scala.collection.mutable.Buffer.empty[(Int, DataFrame)]
+
+  /** One session's pins, oldest first: a [[SessionMemo]] entry whose
+    * release (Graft.clear) unpersists them all and closes the set, so a
+    * pin racing the clear moves on to the session's next set instead of
+    * landing in a released one.
+    */
+  private final class PinSet {
+    val frames = scala.collection.mutable.Buffer.empty[DataFrame]
+    var open = true
+  }
+
+  private def pinSet(s: SparkSession): PinSet =
+    SessionMemo.withRelease[PinSet](s, "pins", (), p => p.synchronized {
+      p.open = false
+      p.frames.foreach(_.unpersist())
+      p.frames.clear()
+    })(new PinSet)
 
   private def maxBytes(s: SparkSession): Long =
     s.conf.getOption(MaxBytesConf).map(_.toLong)
@@ -52,30 +67,23 @@ private[graft] object Pins {
   private def persistedBytes(s: SparkSession): Long =
     s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
 
-  def pin(df: DataFrame): DataFrame = pinned.synchronized {
+  @annotation.tailrec
+  def pin(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val id = System.identityHashCode(s)
-    if (pinned.count(_._1 == id) >= MaxPerSession) {
-      val i = pinned.indexWhere(_._1 == id)
-      pinned.remove(i)._2.unpersist()
+    val mine = pinSet(s)
+    val pinned = mine.synchronized {
+      if (mine.open) {
+        if (mine.frames.size >= MaxPerSession) mine.frames.remove(0).unpersist()
+        // byte bound: evict oldest-first (blocking, so the next check
+        // sees the freed bytes) while the session's persisted total
+        // exceeds the cap and this session still holds pins to give back
+        val cap = maxBytes(s)
+        while (mine.frames.nonEmpty && persistedBytes(s) > cap)
+          mine.frames.remove(0).unpersist(blocking = true)
+        mine.frames += df
+      }
+      mine.open
     }
-    // byte bound: evict oldest-first (blocking, so the next check sees
-    // the freed bytes) while the session's persisted total exceeds the
-    // cap and this session still holds pins to give back
-    val cap = maxBytes(s)
-    var mine = pinned.count(_._1 == id)
-    while (mine > 0 && persistedBytes(s) > cap) {
-      val i = pinned.indexWhere(_._1 == id)
-      pinned.remove(i)._2.unpersist(blocking = true)
-      mine -= 1
-    }
-    pinned += ((id, df)); df
-  }
-
-  def clear(s: SparkSession): Unit = pinned.synchronized {
-    val id = System.identityHashCode(s)
-    val (mine, rest) = pinned.partition(_._1 == id)
-    mine.foreach(_._2.unpersist())
-    pinned.clear(); pinned ++= rest
+    if (pinned) df else pin(df)
   }
 }

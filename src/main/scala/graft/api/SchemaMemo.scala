@@ -1,56 +1,83 @@
 package graft.api
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.shelf.StatCache
 
-/** Parquet-schema memo keyed on (path, size, mtime): every
+/** Parquet-schema memo keyed on (path, stat identity): every
   * `spark.read.parquet` WITHOUT a user schema re-infers the schema from
   * the footer at DataFrame construction time — pure driver-side latency,
   * paid per query per table (profiled at ~50-100 ms per read, ~20 s
   * serially across the 241-query suite, and it serializes further under
   * 16 concurrent submitters). The schema is metadata, not data: it is
-  * still read from the parquet input once per (file version, JVM), and
-  * the size+mtime key drops the memo the moment the file or directory
-  * changes, so a rewritten scratch table re-infers. Query RESULTS are
-  * never memoized — only the footer's type signature.
+  * still read from the parquet input once per (file version, JVM).
+  * Query RESULTS are never memoized — only the footer's type signature.
+  *
+  * The file version is the stat identity the shelf's [[StatCache]]
+  * reads — (device, inode, size, mtime ns, ctime ns) of a file, or of
+  * every data file under a directory table (names included, so an
+  * added or removed part file misses too). ctime is in the identity
+  * because no user call can set it back: an in-place rewrite under an
+  * unchanged name, size and reset mtime still misses. A path with no
+  * `unix:*` attributes, or one that cannot be stat'ed (absent, or not a
+  * local path), reads through and skips both memos.
   */
 object SchemaMemo {
+  private type Version = Seq[(String, StatCache.Stat)]
+
   private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), StructType]()
+    (String, Version), StructType]()
 
   /** Relation memo (round 22): even with the schema supplied,
     * `s.read.schema(sch).parquet(path)` re-runs DataSource resolution
     * and builds a fresh InMemoryFileIndex (a file listing) per
     * DataFrame construction. A DataFrame is an immutable plan —
     * callers only derive new frames from it — so the RELATION frame
-    * itself is memoized per (session, path, size, mtime): one
-    * resolution per (file version, session), and any rewrite of the
-    * file misses exactly like the schema memo. Plans only, never
-    * results; bounded by #tables x #dirs and cleared wholesale if it
-    * ever exceeds the cap (a long-lived server iterating hundreds of
-    * dirs must not accrete file indexes).
-    *
-    * Invalidation contract (same keying the schema memo always had,
-    * now also covering the cached FILE LIST): for a directory table
-    * the mtime bumps whenever a file is created or deleted inside it —
-    * which every Spark write does (fresh part-file names per job) —
-    * so any rebuild misses. A writer that could rewrite file CONTENTS
-    * in place under unchanged names would evade the key; no writer in
-    * this engine (or Spark) does that.
+    * itself is memoized per (session, path, version): one resolution
+    * per (file version, session), and any rewrite misses exactly like
+    * the schema memo. Plans only, never results; each session's table
+    * is one [[SessionMemo]] entry, bounded by #tables x #dirs and
+    * cleared wholesale if it ever exceeds the cap (a long-lived server
+    * iterating hundreds of dirs must not accrete file indexes).
     */
-  private val dfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long, Long), DataFrame]()
   private val DfMemoCap = 512
 
-  def read(s: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path)
-    val sid = System.identityHashCode(s)
-    val key = (sid, path, f.length(), f.lastModified())
-    if (dfMemo.size() > DfMemoCap) dfMemo.clear()
-    dfMemo.computeIfAbsent(key, _ => {
-      val sch = memo.computeIfAbsent((path, f.length(), f.lastModified()),
-        _ => s.read.parquet(path).schema)
-      s.read.schema(sch).parquet(path)
-    })
+  /** Spark's hidden-path rule: `_`/`.`-prefixed names are not data. */
+  private def isData(p: Path): Boolean = {
+    val n = p.getFileName.toString
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  private def version(path: String): Option[Version] =
+    try {
+      val root = Paths.get(path)
+      if (!Files.isDirectory(root)) StatCache.stat(root).map(st => Seq("" -> st))
+      else {
+        import scala.jdk.CollectionConverters._
+        val walk = Files.walk(root)
+        val files = try walk.iterator().asScala
+          .filter(p => Files.isRegularFile(p) &&
+            root.relativize(p).iterator().asScala.forall(isData))
+          .toVector finally walk.close()
+        val stats = files.map(f => root.relativize(f).toString -> StatCache.stat(f))
+        if (stats.exists(_._2.isEmpty)) None
+        else Some(stats.map { case (n, st) => n -> st.get }.sortBy(_._1))
+      }
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException |
+           _: java.nio.file.InvalidPathException => None
+    }
+
+  def read(s: SparkSession, path: String): DataFrame = version(path) match {
+    case None => s.read.parquet(path)
+    case Some(v) =>
+      val rels = SessionMemo(s, "schemaMemo.relations", ())(
+        new java.util.concurrent.ConcurrentHashMap[(String, Version), DataFrame]())
+      if (rels.size() > DfMemoCap) rels.clear()
+      rels.computeIfAbsent((path, v), _ => {
+        val sch = memo.computeIfAbsent((path, v), _ => s.read.parquet(path).schema)
+        s.read.schema(sch).parquet(path)
+      })
   }
 }

@@ -245,18 +245,8 @@ object Similarity {
     * parent; only the SQLConf (and temp views / function registry) are
     * isolated — exactly the scope the probe flag needs.
     */
-  // keyed by identity hash like every other session-keyed cache in the
-  // library — holding the parent session strongly would keep discarded
-  // sessions alive in a long-lived server that forgets Graft.clear
-  private val probeSessions = new java.util.concurrent.ConcurrentHashMap[
-    Int, org.apache.spark.sql.SparkSession]()
-
-  /** Forget the probe child session cached for `s` (Graft.clear). */
-  private[graft] def clearProbeSession(s: org.apache.spark.sql.SparkSession): Unit =
-    probeSessions.remove(System.identityHashCode(s))
-
   private def probeSession(s: org.apache.spark.sql.SparkSession) =
-    probeSessions.computeIfAbsent(System.identityHashCode(s), _ => {
+    SessionMemo(s, "similarity.probe", ()) {
       val c = s.newSession()
       // DisableUnnecessaryBucketedScan only weighs distribution/ordering
       // needs, not bucket PRUNING — left on, a filter-only probe plans a
@@ -264,7 +254,7 @@ object Similarity {
       c.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       graft.functions.VectorFunctions.register(c)
       c
-    })
+    }
 
   /** Probe a bucketed index table. The query vector and the nProbe
     * winning cell ids are collected to the driver (dim doubles + nProbe

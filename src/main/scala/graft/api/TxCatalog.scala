@@ -1055,10 +1055,6 @@ class TxFileScan(spark: SparkSession, table: TxV2Table,
     */
   private val columnarMode: Boolean =
     !needsFile && !needsPos &&
-      // operational escape hatch (also the before/after lever for
-      // tools.DvScanBench): force the serialized row branch
-      !spark.conf.getOption("spark.graft.dv.forceRowScan")
-        .exists(_.toBoolean) &&
       GraftV2Bridge.supportsBatch(spark, dataRead) &&
       (files.forall(_.dvPos.isEmpty) ||
         dataRead.forall(f => TxDvColumnar.copyable(f.dataType)))

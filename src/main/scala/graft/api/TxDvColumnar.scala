@@ -111,8 +111,8 @@ private[api] object TxDvColumnar {
   /** Copy `keep(0 until k)` rows of `b` into fresh on-heap vectors —
     * only runs for batches that actually contain deletions. The type
     * dispatch resolves ONCE PER COLUMN into a monomorphic copier, not
-    * per row — a per-row DataType match in the inner loop showed up as
-    * the dominant compaction cost in tools.DvScanBench.
+    * per row — a per-row DataType match in the inner loop was the
+    * dominant compaction cost of a DV-bearing scan.
     */
   private def compact(b: ColumnarBatch, schema: StructType,
                       keep: Array[Int], k: Int,

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.api.{Decontamination, Dedup, Packing, Similarity, Sketches, TextAnalysis}
+import graft.api.{Decontamination, Dedup, Packing, SessionMemo, Similarity, Sketches, TextAnalysis}
 import graft.ops.H._
 
 /** Training-data pipeline inventory (SURVEY.md §2B q_dedup_*, q_text_*,
@@ -13,60 +13,15 @@ import graft.ops.H._
   */
 object Pipeline {
 
-  /** A once-cell: the first `value` caller runs the build under the
-    * CELL's monitor (scala lazy-val semantics); racers on the same cell
-    * wait for exactly that build; other cells are independent.
-    * `ifBuilt` lets cleanup unpersist what actually materialized
-    * without triggering a build of its own.
-    */
-  private final class Once[V](thunk: () => V) {
-    @volatile private var built: Option[V] = None
-    lazy val value: V = { val v = thunk(); built = Some(v); v }
-    def ifBuilt: Option[V] = built
-  }
-
-  /** Per-key memoization with the build OUTSIDE the map-wide lock: the
-    * monitor only installs a once-cell (no Spark action inside it), so
-    * first-touch builds serialize per (session, dir) KEY — two racers
-    * on one key still dedupe to one build, while callers for other
-    * keys (another sf dir, another session) proceed instead of queuing
-    * behind a foreign build for its whole duration. Also removes the
-    * re-entrancy deadlock: a build that consults ANOTHER key of the
-    * same cache blocks on that key's cell, never on a monitor its own
-    * caller already holds. Caveat: clearCaches concurrent with a
-    * mid-flight first-touch build can miss that build's persist (the
-    * cell is removed unbuilt); the contract — which Bench honors — is
-    * clear() between quiesced phases.
-    */
-  private def memo[V](cache: scala.collection.concurrent.TrieMap[(Int, String), Once[V]],
-                      key: (Int, String))(build: => V): V =
-    cache.synchronized {
-      cache.getOrElseUpdate(key, new Once(() => build))
-    }.value
-
   /** Shingle frames cached per (session, dir): every dedup query
     * branches over this frame 3-4 times and the shingle construction is
     * the expensive part.
     */
-  private val shCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[DataFrame]]()
-
   private[graft] def shingled(s: SparkSession, dir: String): DataFrame =
     // memoized: the three dedup queries race this key in Bench; a
     // double-build would persist (and compute) the shingles twice.
-    memo(shCache, (System.identityHashCode(s), dir))(
+    SessionMemo.persisted(s, "pipeline.sh", dir)(
       forced(Dedup.shingles(t(s, dir, "documents"), "doc_id", "text", n = 4)))
-
-  /** The packed token-stream digest frame per (session, dir):
-    * q_pack_token_stream and q_pack_shuffle both consume it, and the
-    * BPE encode + two-phase offsets behind it are the expensive part —
-    * without sharing, the shuffle query recomputes the entire pack.
-    * The digest is |stream|/seqLen rows (thousands, not corpus-sized),
-    * so the persist is cheap; the amortized-build accounting lands in
-    * Bench's builds map like the other shared frames.
-    */
-  private val packCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[DataFrame]]()
 
   /** Load-or-build-and-save a deterministic corpus-derived frame as
     * plain parquet under the scratch root, guarded by a source
@@ -92,7 +47,7 @@ object Pipeline {
   }
 
   /** Materialize a persisted shared frame BEFORE its memo hands it out:
-    * the first caller pays the whole build inside the memo lock, so N
+    * the first caller pays the whole build inside its memo cell, so N
     * concurrent first-touch queries wait briefly and then read cached
     * blocks instead of EACH computing every partition of the same lazy
     * persist (Spark dedupes block WRITES, not the computation — the
@@ -104,13 +59,21 @@ object Pipeline {
     */
   private def forced(df: DataFrame): DataFrame = { df.count(); df }
 
+  /** The packed token-stream digest frame per (session, dir):
+    * q_pack_token_stream and q_pack_shuffle both consume it, and the
+    * BPE encode + two-phase offsets behind it are the expensive part —
+    * without sharing, the shuffle query recomputes the entire pack.
+    * The digest is |stream|/seqLen rows (thousands, not corpus-sized),
+    * so the persist is cheap; the amortized-build accounting lands in
+    * Bench's builds map like the other shared frames.
+    */
   private[graft] def packedStream(s: SparkSession, dir: String): DataFrame =
-    // persist WITHOUT a Pins registration (the shCache discipline):
+    // persist WITHOUT a Pins registration (the shingled discipline):
     // pin-capped eviction could unpersist the shared frame mid-session
-    // while this cache still hands it out — clearCaches owns the
+    // while the memo still hands it out — Graft.clear owns the
     // lifecycle instead. ver ties to the pack recipe: BpeNumMerges,
     // BpeVocabCap, seqLen — bump on change.
-    memo(packCache, (System.identityHashCode(s), dir))(
+    SessionMemo.persisted(s, "pipeline.pack", dir)(
       forced(cachedParquet(s, dir, "pack", 1, "documents") {
         graft.api.Packing.packTokenStream(t(s, dir, "documents"),
           "doc_id", "text", bpeMerges(s, dir), seqLen = 128)
@@ -121,20 +84,14 @@ object Pipeline {
     * q_pipeline_e2e_span both consume it — sharing saves the gram
     * exchange + islands pass the second consumer would repeat.
     */
-  private val spanCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[DataFrame]]()
-
   private[graft] def spanCut(s: SparkSession, dir: String): DataFrame =
     // persist without a Pins registration — see packedStream. ver ties
     // to the span recipe (k=8, minLen=3) — bump on change.
-    memo(spanCache, (System.identityHashCode(s), dir))(
+    SessionMemo.persisted(s, "pipeline.span", dir)(
       forced(cachedParquet(s, dir, "spancut", 1, "documents") {
         Dedup.removeSharedSegments(t(s, dir, "documents"),
           "doc_id", "text", k = 8, minLen = 3)
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[DataFrame]]()
 
   /** The 90%-corpus MinHash band index per (session, dir) — persisted
     * as bucketed external tables under the scratch dir (band rows on
@@ -144,9 +101,6 @@ object Pipeline {
     * sign-once / increment-forever shape the 100 TB deployment needs.
     * Shared by the batch incremental query and the streaming replay.
     */
-  private val bandsCache = scala.collection.concurrent
-    .TrieMap[(Int, String), Once[(Dedup.BandIndex, DataFrame)]]()
-
   private[graft] def corpusBands(s: SparkSession, dir: String): Dedup.BandIndex =
     corpusBandsSh(s, dir)._1
 
@@ -163,7 +117,7 @@ object Pipeline {
 
   private[graft] def corpusBandsSh(s: SparkSession,
                                    dir: String): (Dedup.BandIndex, DataFrame) =
-    memo(bandsCache, (System.identityHashCode(s), dir)) {
+    SessionMemo(s, "pipeline.bands", dir) {
       val path = bandsPath(dir)
       val fp = Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
       val loaded = Dedup.loadBandIndex(s, path, fp)
@@ -181,11 +135,8 @@ object Pipeline {
     * bucketed files instead of re-segmenting the 90% corpus. Shared by
     * the batch incremental paragraph query and its streaming replay.
     */
-  private val segIdxCache = scala.collection.concurrent
-    .TrieMap[(Int, String), Once[DataFrame]]()
-
   private[graft] def corpusSegIndex(s: SparkSession, dir: String): DataFrame =
-    memo(segIdxCache, (System.identityHashCode(s), dir)) {
+    SessionMemo(s, "pipeline.segIdx", dir) {
       val path = s"${graft.api.Bucketing.scratchBase}/segs_" +
         graft.api.Dedup.tableTag(dir)
       val fp = Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
@@ -205,65 +156,9 @@ object Pipeline {
     * under a post-hoc doc_id filter.
     */
   private[graft] def incrShingled(s: SparkSession, dir: String): DataFrame =
-    memo(shCache, (System.identityHashCode(s), dir + "#incr"))(
+    SessionMemo.persisted(s, "pipeline.sh", dir + "#incr")(
       forced(Dedup.shingles(t(s, dir, "documents")
         .filter(col("doc_id") % 10 === 0), "doc_id", "text", n = 4)))
-
-  /** Unpersist and forget this session's cached frames (Graft.clear). */
-  private[graft] def clearCaches(s: SparkSession): Unit = {
-    val id = System.identityHashCode(s)
-    // ifBuilt: unpersist only what a cell actually materialized — a
-    // removed cell whose build never ran must not be triggered here
-    shCache.synchronized {
-      shCache.keys.filter(_._1 == id)
-        .foreach(k => shCache.remove(k).flatMap(_.ifBuilt).foreach(_.unpersist()))
-    }
-    pairsCache.synchronized {
-      pairsCache.keys.filter(_._1 == id)
-        .foreach(k => pairsCache.remove(k).flatMap(_.ifBuilt).foreach(_.unpersist()))
-    }
-    clustersCache.synchronized {
-      clustersCache.keys.filter(_._1 == id)
-        .foreach(k => clustersCache.remove(k).flatMap(_.ifBuilt).foreach(_.unpersist()))
-    }
-    spanCache.synchronized {
-      spanCache.keys.filter(_._1 == id)
-        .foreach(k => spanCache.remove(k).flatMap(_.ifBuilt).foreach(_.unpersist()))
-    }
-    packCache.synchronized {
-      packCache.keys.filter(_._1 == id)
-        .foreach(k => packCache.remove(k).flatMap(_.ifBuilt).foreach(_.unpersist()))
-    }
-    bandsCache.synchronized {
-      // table-backed since round 7: entries hold no persisted RDDs, the
-      // catalog entries are dropped by Dedup.clearIndexTables
-      bandsCache.keys.filter(_._1 == id).foreach(bandsCache.remove)
-    }
-    segIdxCache.synchronized {
-      // table-backed like bandsCache — catalog entries dropped by
-      // Dedup.clearIndexTables
-      segIdxCache.keys.filter(_._1 == id).foreach(segIdxCache.remove)
-    }
-    kmeansCache.synchronized {
-      kmeansCache.keys.filter(_._1 == id).foreach(kmeansCache.remove)
-    }
-    tempCache.synchronized {
-      tempCache.keys.filter(_._1 == id).foreach(tempCache.remove)
-    }
-    // driver-literal memos (bounded metadata, no persisted RDDs) —
-    // dropped anyway so a long-lived server iterating many dirs never
-    // accumulates per-dir entries. pqBooks re-loads from its disk TSV;
-    // bpeMerges retrains (one small capped job) on next use.
-    bpeCache.synchronized {
-      bpeCache.keys.filter(_._1 == id).foreach(bpeCache.remove)
-    }
-    pqCache.synchronized {
-      pqCache.keys.filter(_._1 == id).foreach(pqCache.remove)
-    }
-    pplVocabCache.synchronized {
-      pplVocabCache.keys.filter(_._1 == id).foreach(pplVocabCache.remove)
-    }
-  }
 
   /** Perplexity vocabulary per (session, dir) — bounded driver-literal
     * metadata (≤ PplVocab strings), the bpeMerges discipline: the cut
@@ -271,24 +166,10 @@ object Pipeline {
     * top-V job per construct (measured 0.43 s of warm driver time on
     * the loaded suite's serialized driver path).
     */
-  private val pplVocabCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[Seq[String]]]()
-
   private def pplVocabOf(s: SparkSession, dir: String): Seq[String] =
-    memo(pplVocabCache, (System.identityHashCode(s), dir))(
+    SessionMemo(s, "pipeline.pplVocab", dir)(
       TextAnalysis.perplexityVocab(t(s, dir, "documents"),
         "doc_id", "text", PplVocab))
-
-  /** k-means centroids per (session, dir), computed ONCE and shared by
-    * the Spark query and the oracle-SQL resolver: the Lloyd means are
-    * floating-point sums whose exact low bits depend on summation order
-    * (engine- and run-specific), so the cross-engine contract is the
-    * centroid VALUES — both sides rank against literally identical
-    * doubles, exactly like the driver-literal centroids in
-    * q_sim_ivf_bucketed. k×dim doubles of driver metadata.
-    */
-  private val kmeansCache = scala.collection.concurrent
-    .TrieMap[(Int, String), Once[Seq[(Long, Seq[Double])]]]()
 
   /** Load-or-compute-and-save a driver-side literal table as TSV lines
     * under the scratch root, fingerprint + version guarded (the
@@ -325,9 +206,17 @@ object Pipeline {
     }
   }
 
+  /** k-means centroids per (session, dir), computed ONCE and shared by
+    * the Spark query and the oracle-SQL resolver: the Lloyd means are
+    * floating-point sums whose exact low bits depend on summation order
+    * (engine- and run-specific), so the cross-engine contract is the
+    * centroid VALUES — both sides rank against literally identical
+    * doubles, exactly like the driver-literal centroids in
+    * q_sim_ivf_bucketed. k×dim doubles of driver metadata.
+    */
   private[graft] def kmeansCents(s: SparkSession,
                                  dir: String): Seq[(Long, Seq[Double])] =
-    memo(kmeansCache, (System.identityHashCode(s), dir))(
+    SessionMemo(s, "pipeline.kmeans", dir)(
       cachedLines(s, dir, "kmcents", 1, "embeddings") {
           Similarity.kmeansCentroids(t(s, dir, "embeddings"),
               "vec_id", "embedding", k = 16, iters = 2)
@@ -352,18 +241,16 @@ object Pipeline {
     resolvePqBooks(resolveBpeMerges(
       resolveTempThresholds(resolveLshPlanes(resolveKmeans(sql)))))
 
+  private[graft] val PqM = 8
+  private[graft] val PqKsub = 16
+
   /** PQ codebooks per (session, dir): m × ksub × dsub doubles of driver
     * metadata (the k-means discipline), shared by the index build, the
     * search, and the oracle literal.
     */
-  private val pqCache = scala.collection.concurrent
-    .TrieMap[(Int, String), Once[Seq[Seq[(Long, Seq[Double])]]]]()
-  private[graft] val PqM = 8
-  private[graft] val PqKsub = 16
-
   private[graft] def pqBooks(s: SparkSession,
                              dir: String): Seq[Seq[(Long, Seq[Double])]] =
-    memo(pqCache, (System.identityHashCode(s), dir))(
+    SessionMemo(s, "pipeline.pq", dir)(
       cachedLines(s, dir, "pqbooks", 1, "embeddings") {
           val e = t(s, dir, "embeddings")
           Similarity.pqCodebooks(e, e.filter(col("vec_id") < 16),
@@ -449,6 +336,9 @@ object Pipeline {
         }
     }
 
+  private[graft] val BpeNumMerges = 200
+  private[graft] val BpeVocabCap = 65536
+
   /** BPE merges learned once per (session, dir) from the corpus's
     * (word, count) table, CAPPED to the [[BpeVocabCap]] most frequent
     * words before the driver collect — the perplexityScore vocabulary
@@ -463,14 +353,9 @@ object Pipeline {
     * Sorted input for stability; the trainer itself is deterministic
     * (max count, lexicographic tiebreak).
     */
-  private val bpeCache = scala.collection.concurrent
-    .TrieMap[(Int, String), Once[Seq[(String, String)]]]()
-  private[graft] val BpeNumMerges = 200
-  private[graft] val BpeVocabCap = 65536
-
   private[graft] def bpeMerges(s: SparkSession,
                                dir: String): Seq[(String, String)] =
-    memo(bpeCache, (System.identityHashCode(s), dir)) {
+    SessionMemo(s, "pipeline.bpe", dir) {
       {
         val wc = t(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
@@ -590,11 +475,8 @@ object Pipeline {
     * SAME Scala math the Spark query uses (math.pow differs from SQL
     * pow() in last-ulp cases, and a 1-ulp rate difference can flip a
     * floor'd threshold) — the driver-literal technique again.
-    */
-  private val tempCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[Map[String, Double]]]()
-
-  /** Keep RATES (not thresholds): the Spark side feeds them straight to
+    *
+    * Keep RATES (not thresholds): the Spark side feeds them straight to
     * [[graft.api.Mixing.stratifiedSample]] — the public operator the
     * query exists to exercise — and the oracle derives its integer
     * literals through the same deterministic `Mixing.threshold`, so the
@@ -602,7 +484,7 @@ object Pipeline {
     */
   private[graft] def tempRates(s: SparkSession,
                                dir: String): Map[String, Double] =
-    memo(tempCache, (System.identityHashCode(s), dir)) {
+    SessionMemo(s, "pipeline.temp", dir) {
       {
         val counts = t(s, dir, "documents")
           .filter(col("source").isNotNull)
@@ -706,13 +588,6 @@ object Pipeline {
             m => lshPlanesValues(s, m.group(1).toInt, dim)))
     }
 
-  /** Near-dup pair set, persisted: q_dedup_near orders it, and
-    * q_dedup_cluster iterates over it — without the cache the clustering
-    * query would re-run the whole inverted-index pipeline first.
-    */
-  private val clustersCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Once[DataFrame]]()
-
   /** The duplicate-component assignment over [[nearPairs]] — four
     * queries consume it (keep-best, cluster list, cluster-drop,
     * cluster-sizes); without sharing, each re-runs the iterative
@@ -720,18 +595,22 @@ object Pipeline {
     * parquet-caches across processes like the pair set itself.
     */
   private[graft] def corpusClusters(s: SparkSession, dir: String): DataFrame =
-    memo(clustersCache, (System.identityHashCode(s), dir))(
+    SessionMemo.persisted(s, "pipeline.clusters", dir)(
       forced(cachedParquet(s, dir, "dupclusters", 1, "documents") {
         Dedup.duplicateClusters(nearPairs(s, dir))
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
 
+  /** Near-dup pair set, persisted: q_dedup_near orders it, and
+    * q_dedup_cluster iterates over it — without the cache the clustering
+    * query would re-run the whole inverted-index pipeline first.
+    */
   private[graft] def nearPairs(s: SparkSession, dir: String): DataFrame =
     // parquet-backed across processes (the packedStream discipline):
     // exact per-pair jaccard is deterministic, so a cold process with
     // an unchanged corpus attaches the pair set instead of re-running
     // the banded candidate join. ver ties to the recipe (threshold 0.5,
     // default perms/bands) — bump on change.
-    memo(pairsCache, (System.identityHashCode(s), dir))(
+    SessionMemo.persisted(s, "pipeline.pairs", dir)(
       forced(cachedParquet(s, dir, "nearpairs", 1, "documents") {
         Dedup.nearDuplicatePairs(shingled(s, dir), threshold = 0.5)
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))

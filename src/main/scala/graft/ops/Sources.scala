@@ -46,18 +46,6 @@ object Sources {
     sql.replace(ioPlaceholder,
       s"${graft.api.ScratchStats.IoRoot}/${tagOf(oracleSfDir)}")
 
-  private val written =
-    scala.collection.concurrent.TrieMap[(Int, String, String), Unit]()
-
-  /** Forget this session's written-file markers (Graft.clear). */
-  private[graft] def clearWritten(s: SparkSession): Unit = {
-    val id = System.identityHashCode(s)
-    written.keys.filter(_._1 == id).foreach(written.remove)
-  }
-
-  private val ensureLocks = scala.collection.concurrent
-    .TrieMap[(Int, String, String), Object]()
-
   /** Bump when any ensure* write recipe changes shape — stale markers
     * from an older recipe must not satisfy the skip check.
     */
@@ -67,65 +55,43 @@ object Sources {
                      srcTables: Seq[String], ver: Int = 1)
                     (write: String => Unit): String = {
     val out = s"${ioDir(dir)}/$fmt"
-    val key = (System.identityHashCode(s), dir, fmt)
-    // Per-key lock: TrieMap.getOrElseUpdate can evaluate the thunk twice
-    // under contention, and two concurrent writers of one scratch path
-    // destroy each other's _temporary staging — concrete since the
-    // bench's build phase forces stream_incr from three tasks at once
-    // (src_writes + the two pre-built incremental stream replays). A
-    // single global lock would instead serialize ALL scratch writes
-    // behind whichever Spark job holds it; per-key locks keep distinct
-    // formats parallel. putIfAbsent is atomic, so exactly one lock
-    // object ever exists per key (getOrElseUpdate could mint two, and
-    // two threads would then lock different objects).
-    val lock = {
-      val fresh = new Object
-      ensureLocks.putIfAbsent(key, fresh).getOrElse(fresh)
-    }
-    // Telemetry: a long wait here means another task is mid-write on
-    // this scratch path — name it in the log (with wait-ms) instead of
-    // letting the stall surface only as an unattributable slow query
-    // (the round-11 bench anomaly took four artifacts to diagnose; one
-    // such line would have named or cleared the lock hypothesis).
-    val waitT0 = System.nanoTime()
-    lock.synchronized {
-      val waitedMs = (System.nanoTime() - waitT0) / 1000000L
-      if (waitedMs > graft.api.Dedup.LockWarnAfterMs)
-        System.err.println(
-          s"graft: waited $waitedMs ms for scratch-write lock on $out")
-      if (!written.contains(key)) {
-        // Cross-PROCESS write-once: the scratch writes are deterministic
-        // functions of their source tables, so a `_GRAFT_OK` marker
-        // recording the source fingerprint (sorted path:len:mtime:edge
-        // listing with 128 KiB of content evidence per file — O(1) I/O
-        // each) + recipe version lets a
-        // later run skip the rewrite entirely. The bench's 94.7 s
-        // src_writes build line drops to a metadata check on every run
-        // after the first against an unchanged sf dir; a regenerated
-        // testdata dir changes mtimes → fingerprint mismatch → rewrite.
-        // The `_`-prefixed marker is invisible to both Spark reads and
-        // the oracle's extension globs.
-        // ver folds into the fingerprint ONLY when a format actually
-        // declares one — emitting a tag for the default would change
-        // every format's recorded fingerprint shape and rebuild every
-        // scratch cache in every environment for a one-format recipe
-        // change (measured: build_sec 2.3 s -> 11.9 s on the round-12
-        // bench when exactly that happened)
-        val verTag = if (ver > 1) s".$ver" else ""
-        val fp = s"v$ScratchFormatVersion$verTag:" + graft.api.Dedup
-          .sourceFingerprint(s, srcTables.map(n => s"$dir/$n.parquet"): _*)
-        val marker = java.nio.file.Paths.get(out, "_GRAFT_OK")
-        val served = graft.api.Dedup.markerFresh(marker, fp)(
-          graft.api.Dedup.hasDataFiles(out))
-        if (!served) {
-          write(out)
-          graft.api.Dedup.writeMarker(marker, fp)
-        }
-        // warm/cold evidence for the bench artifact: a run whose state
-        // is half-cold must name itself (see ScratchStats scaladoc)
-        graft.api.ScratchStats.record(s"src_$fmt", dir, served)
-        written.put(key, ())
+    // One SessionMemo entry per (session, dir, fmt): two concurrent
+    // writers of one scratch path destroy each other's _temporary
+    // staging — concrete since the bench's build phase forces
+    // stream_incr from three tasks at once (src_writes + the two
+    // pre-built incremental stream replays) — so racers on one key wait
+    // for the single write, while distinct formats write in parallel.
+    graft.api.SessionMemo(s, "sources.written", (dir, fmt)) {
+      // Cross-PROCESS write-once: the scratch writes are deterministic
+      // functions of their source tables, so a `_GRAFT_OK` marker
+      // recording the source fingerprint (sorted path:len:mtime:edge
+      // listing with 128 KiB of content evidence per file — O(1) I/O
+      // each) + recipe version lets a
+      // later run skip the rewrite entirely. The bench's 94.7 s
+      // src_writes build line drops to a metadata check on every run
+      // after the first against an unchanged sf dir; a regenerated
+      // testdata dir changes mtimes → fingerprint mismatch → rewrite.
+      // The `_`-prefixed marker is invisible to both Spark reads and
+      // the oracle's extension globs.
+      // ver folds into the fingerprint ONLY when a format actually
+      // declares one — emitting a tag for the default would change
+      // every format's recorded fingerprint shape and rebuild every
+      // scratch cache in every environment for a one-format recipe
+      // change (measured: build_sec 2.3 s -> 11.9 s on the round-12
+      // bench when exactly that happened)
+      val verTag = if (ver > 1) s".$ver" else ""
+      val fp = s"v$ScratchFormatVersion$verTag:" + graft.api.Dedup
+        .sourceFingerprint(s, srcTables.map(n => s"$dir/$n.parquet"): _*)
+      val marker = java.nio.file.Paths.get(out, "_GRAFT_OK")
+      val served = graft.api.Dedup.markerFresh(marker, fp)(
+        graft.api.Dedup.hasDataFiles(out))
+      if (!served) {
+        write(out)
+        graft.api.Dedup.writeMarker(marker, fp)
       }
+      // warm/cold evidence for the bench artifact: a run whose state
+      // is half-cold must name itself (see ScratchStats scaladoc)
+      graft.api.ScratchStats.record(s"src_$fmt", dir, served)
     }
     out
   }

@@ -113,14 +113,17 @@ object Checksums {
   */
 private[graft] object StatCache {
 
-  private final case class Stat(dev: Long, ino: Long, size: Long,
-                                mtimeNs: Long, ctimeNs: Long)
+  private[graft] final case class Stat(dev: Long, ino: Long, size: Long,
+                                       mtimeNs: Long, ctimeNs: Long)
 
   private val RacyNanos = TimeUnit.SECONDS.toNanos(2)
 
   private val entries = new ConcurrentHashMap[Path, (Stat, String)]()
 
-  private def stat(p: Path): Option[Stat] =
+  /** The stat identity of `p`; None where the platform has no `unix:*`
+    * attributes. Shared with [[graft.api.SchemaMemo]]'s keys.
+    */
+  private[graft] def stat(p: Path): Option[Stat] =
     try {
       val a = Files.readAttributes(p, "unix:dev,ino,size,lastModifiedTime,ctime")
       def ns(k: String) = a.get(k).asInstanceOf[FileTime].to(TimeUnit.NANOSECONDS)

@@ -146,18 +146,6 @@ object Streams {
     spark.table(name)
   }
 
-  /** The three windowed replays (tumble-complete / tumble-append /
-    * session), built ONCE per (session, dir) as three CONCURRENT
-    * streaming queries in one shared child session: they consume the
-    * same file source, so serializing them paid three rounds of source
-    * listing + micro-batch + checkpoint machinery for one file of
-    * input. Concurrent independent streaming queries are the normal
-    * production shape (one SparkSession hosts many streams); the
-    * combined wall is ~the slowest replay instead of the sum.
-    */
-  private val replayCache = scala.collection.concurrent
-    .TrieMap[(Int, String), Map[String, DataFrame]]()
-
   /** Finished-replay memo for the fixed-shape stream operators (those
     * fully determined by (session, dir) — or by a caller-chosen op key
     * that pins the parameters): a finite AvailableNow replay of the
@@ -165,65 +153,17 @@ object Streams {
     * it for every consumer (loaded bench pass, unloaded re-run, repeat
     * calls in one session) re-pays micro-batch + checkpoint + state
     * machinery for bytes that cannot change. One (session, dir, op)
-    * entry holds the replay's memory-sink table; callers re-derive
-    * their cheap batch projections from it. Parameterized replay
-    * BUILDERS (incrementalDedupReplay, cmsSketchStream) stay uncached —
-    * only call sites that fix every parameter may memoize, under a key
+    * [[graft.api.SessionMemo]] entry holds the replay's memory-sink
+    * table; callers re-derive their cheap batch projections from it.
+    * Distinct ops replay in parallel; a second caller of the SAME op
+    * waits for the first replay. Parameterized replay BUILDERS
+    * (incrementalDedupReplay, cmsSketchStream) stay uncached — only
+    * call sites that fix every parameter may memoize, under a key
     * naming that exact parameterization.
     */
-  private val opCache = scala.collection.concurrent
-    .TrieMap[(Int, String, String), DataFrame]()
-  private val opLocks = scala.collection.concurrent
-    .TrieMap[(Int, String, String), Object]()
-  private val opClearEpoch = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Per-key lock (putIfAbsent mints exactly one lock object per key):
-    * a global monitor here would serialize the bench's seven concurrent
-    * build-phase replays behind each other — the very defect
-    * Sources.ensure was cured of this round. Distinct ops replay in
-    * parallel; a second caller of the SAME op blocks until the first
-    * finishes, then reads the cache. The epoch check keeps a clear
-    * honest: a replay in flight when clearReplays runs must not publish
-    * into the post-clear cache (it still returns its result to its own
-    * caller).
-    */
-  @annotation.tailrec
   private[graft] def cachedOp(spark: SparkSession, dir: String, op: String)(
-      body: => DataFrame): DataFrame = {
-    val key = (System.identityHashCode(spark), dir, op)
-    val lock = {
-      val fresh = new Object
-      opLocks.putIfAbsent(key, fresh).getOrElse(fresh)
-    }
-    val ran: Option[DataFrame] = lock.synchronized {
-      // the lock we hold may have been swept by a concurrent
-      // clearReplays between mint and acquire; a sweep removes a lock
-      // only while HOLDING it (see clearReplays), so if the map still
-      // points at our lock here, no fresh lock for this key can run a
-      // duplicate replay until we release. Stale lock → retry fresh.
-      if (!opLocks.get(key).contains(lock)) None
-      else opCache.get(key) match {
-        case Some(df) => Some(df)
-        case None =>
-          val epoch = opClearEpoch.get()
-          val df = body
-          // epoch re-check and put are ATOMIC w.r.t. a clear (both
-          // sides hold opCache's monitor): a clear that completes while
-          // the replay ran flips the epoch first, so this publish is
-          // skipped; a publish that wins the monitor first is swept by
-          // the clear right after. Either way the post-clear cache
-          // never serves a pre-clear replay.
-          opCache.synchronized {
-            if (opClearEpoch.get() == epoch) opCache.put(key, df)
-          }
-          Some(df)
-      }
-    }
-    ran match {
-      case Some(df) => df
-      case None     => cachedOp(spark, dir, op)(body)
-    }
-  }
+      body: => DataFrame): DataFrame =
+    graft.api.SessionMemo(spark, "streams.op", (dir, op))(body)
 
   /** Which persisted replays this process served from disk vs actually
     * replayed — surfaced in BENCH_FULL.json (`replays_warm` /
@@ -277,81 +217,61 @@ object Streams {
       df
     }
 
-  private[graft] def clearReplays(spark0: SparkSession): Unit = {
-    replayCache.synchronized {
-      replayCache.keys.filter(_._1 == System.identityHashCode(spark0))
-        .foreach(replayCache.remove)
-    }
-    opCache.synchronized {
-      opClearEpoch.incrementAndGet()
-      opCache.keys.filter(_._1 == System.identityHashCode(spark0))
-        .foreach(opCache.remove)
-    }
-    // locks are per-session too: sweep them or a long-lived process
-    // that cycles sessions accumulates one Object per (session, dir,
-    // op) forever. Each lock is removed only while HELD, and removal is
-    // conditional on it still being the mapped lock — paired with
-    // cachedOp's held-lock re-check this makes a concurrent duplicate
-    // replay impossible (no reliance on runToMemory's unique sink
-    // names): any thread that acquired a lock before the sweep either
-    // finishes under it (the sweep waits here) or sees it unmapped and
-    // retries on the fresh lock.
-    opLocks.keys.filter(_._1 == System.identityHashCode(spark0))
-      .foreach { key =>
-        opLocks.get(key).foreach { lock =>
-          lock.synchronized { opLocks.remove(key, lock) }
-        }
-      }
-  }
-
+  /** The three windowed replays (tumble-complete / tumble-append /
+    * session), built ONCE per (session, dir) as three CONCURRENT
+    * streaming queries in one shared child session: they consume the
+    * same file source, so serializing them paid three rounds of source
+    * listing + micro-batch + checkpoint machinery for one file of
+    * input. Concurrent independent streaming queries are the normal
+    * production shape (one SparkSession hosts many streams); the
+    * combined wall is ~the slowest replay instead of the sum.
+    */
   private[graft] def windowedReplays(spark0: SparkSession,
                                      dir: String): Map[String, DataFrame] =
-    replayCache.synchronized {
-      replayCache.getOrElseUpdate((System.identityHashCode(spark0), dir), {
-        // cross-process layer (the persistedOp discipline, over all
-        // three sinks at once since they replay concurrently): all
-        // three fresh → read the finished replays; any stale → re-run
-        // the whole trio and republish
-        val keys = Seq("tumble_complete", "tumble_append", "session_complete")
-        val fp = "v2:" + graft.api.Dedup
-          .sourceFingerprint(spark0, s"$dir/events.parquet")
-        def store(k: String) = replayStore(dir, s"win_$k")
-        val allFresh = keys.forall { k =>
-          graft.api.Dedup.markerFresh(
-            java.nio.file.Paths.get(store(k), "_GRAFT_FP"), fp)(
-            graft.api.Dedup.hasDataFiles(s"${store(k)}/data"))
-        }
-        graft.api.ScratchStats.record("replay_windowed", dir, allFresh)
-        if (allFresh) {
-          replayWarm.add("windowed")
-          keys.map(k => k -> spark0.read.parquet(s"${store(k)}/data")).toMap
-        } else {
-          val spark = childSession(spark0, rocksdb = false)
-          def tumbleAgg = eventsStream(spark, dir)
-            .withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "10 minutes"))
-            .agg(count(lit(1)).as("n"),
-              round(sum(col("value").cast(graft.ops.H.D)).cast("double"), 4)
-                .as("sum_value"))
-          val sessAgg = eventsStream(spark, dir)
-            .withWatermark("ts", "1 hour")
-            .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-            .agg(count(lit(1)).as("n_events"))
-          val started = Seq(
-            "tumble_complete" -> startToMemory(tumbleAgg, "complete"),
-            "tumble_append" -> startToMemory(tumbleAgg, "append"),
-            "session_complete" -> startToMemory(sessAgg, "complete"))
-          replayCold.add("windowed")
-          started.map { case (key, (q, name)) =>
-            q.awaitTermination()
-            rmCk(name)
-            key -> graft.api.Dedup.loadOrBuildParquet(spark,
-              s"${store(key)}/data",
-              java.nio.file.Paths.get(store(key), "_GRAFT_FP"), fp)(
-              spark.table(name))._1
-          }.toMap
-        }
-      })
+    graft.api.SessionMemo(spark0, "streams.windowed", dir) {
+      // cross-process layer (the persistedOp discipline, over all
+      // three sinks at once since they replay concurrently): all
+      // three fresh → read the finished replays; any stale → re-run
+      // the whole trio and republish
+      val keys = Seq("tumble_complete", "tumble_append", "session_complete")
+      val fp = "v2:" + graft.api.Dedup
+        .sourceFingerprint(spark0, s"$dir/events.parquet")
+      def store(k: String) = replayStore(dir, s"win_$k")
+      val allFresh = keys.forall { k =>
+        graft.api.Dedup.markerFresh(
+          java.nio.file.Paths.get(store(k), "_GRAFT_FP"), fp)(
+          graft.api.Dedup.hasDataFiles(s"${store(k)}/data"))
+      }
+      graft.api.ScratchStats.record("replay_windowed", dir, allFresh)
+      if (allFresh) {
+        replayWarm.add("windowed")
+        keys.map(k => k -> spark0.read.parquet(s"${store(k)}/data")).toMap
+      } else {
+        val spark = childSession(spark0, rocksdb = false)
+        def tumbleAgg = eventsStream(spark, dir)
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "10 minutes"))
+          .agg(count(lit(1)).as("n"),
+            round(sum(col("value").cast(graft.ops.H.D)).cast("double"), 4)
+              .as("sum_value"))
+        val sessAgg = eventsStream(spark, dir)
+          .withWatermark("ts", "1 hour")
+          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+          .agg(count(lit(1)).as("n_events"))
+        val started = Seq(
+          "tumble_complete" -> startToMemory(tumbleAgg, "complete"),
+          "tumble_append" -> startToMemory(tumbleAgg, "append"),
+          "session_complete" -> startToMemory(sessAgg, "complete"))
+        replayCold.add("windowed")
+        started.map { case (key, (q, name)) =>
+          q.awaitTermination()
+          rmCk(name)
+          key -> graft.api.Dedup.loadOrBuildParquet(spark,
+            s"${store(key)}/data",
+            java.nio.file.Paths.get(store(key), "_GRAFT_FP"), fp)(
+            spark.table(name))._1
+        }.toMap
+      }
     }
 
   /** Tumbling 10-minute counts + exact-decimal sums with a 1-hour
@@ -514,14 +434,20 @@ object Streams {
 
   /** Per-(session, source-glob) scratch dir under java.io.tmpdir —
     * repeated invocations overwrite one directory instead of leaking a
-    * fresh UUID dir per call. The key tag is sha256-derived
+    * fresh UUID dir per call, and Graft.clear removes it with the
+    * session's other memo entries (a frame a replay builder returned
+    * reads this dir, so consume it before the clear — persistedOp
+    * copies it into its store). The key tag is sha256-derived
     * (Dedup.tableTag): a 32-bit hashCode collision between two glob
     * strings in one session would cross-contaminate their replay sinks.
     */
   private def scratchDir(spark0: SparkSession, ns: String,
                          key: String): String =
-    s"${sys.props("java.io.tmpdir")}/$ns/" +
-      s"${System.identityHashCode(spark0)}_${graft.api.Dedup.tableTag(key)}"
+    graft.api.SessionMemo.withRelease[String](spark0, "streams.scratch", (ns, key),
+        d => rmTree(new java.io.File(d))) {
+      s"${sys.props("java.io.tmpdir")}/$ns/" +
+        s"${org.apache.spark.sql.GraftSessionId.of(spark0)}_${graft.api.Dedup.tableTag(key)}"
+    }
 
   private def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))

@@ -212,7 +212,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(first === Set((10L, "click"), (11L, "view")))
     val files1 = dataFiles(store)
     assert(files1.nonEmpty, "cold call published the replay store")
-    Streams.clearReplays(spark) // drop the in-session memo → next call
+    Graft.clear(spark) // drop the in-session memo → next call
     Thread.sleep(1100)          // must go through the disk layer
     val second = Streams.dedupKeys(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -220,7 +220,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(dataFiles(store) === files1,
       "unchanged sources: served from the store, no re-replay rewrite")
     write(Seq((1L, 20L, "buy", 1.0))) // regen: content change
-    Streams.clearReplays(spark)
+    Graft.clear(spark)
     val third = Streams.dedupKeys(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(third === Set((20L, "buy")),
