@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class directly against compiled classes + Spark jars.
 # Usage: scripts/run.sh graft.Verify <sfDir> <outDir>
-# The classes come from this checkout's target/; the Spark jars from
-# $SPARK_HOME/jars, or from the installation of the spark-submit on PATH.
+# The classes come from this checkout's target/ (with src/main/resources,
+# so a checkout built by `sbt compile` alone finds its DataSourceRegister
+# entry); the Spark jars from $SPARK_HOME/jars, or from the installation
+# of the spark-submit on PATH.
 set -euo pipefail
 CLS="$1"; shift
 REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
@@ -23,5 +25,5 @@ exec java $OPENS ${SPARK_EXTRA_JVM:-} \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "$REPO/target/scala-2.13/classes:$SPARK_HOME/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:$REPO/src/main/resources:$SPARK_HOME/jars/*" \
   "$CLS" "$@"

@@ -13,20 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * without the cap, a loop of dedup calls that never clears would fill
   * local disk.
   *
-  * BYTE bound (round 22): the slot cap alone is count-, not
-  * size-aware — 256 slots of corpus-scale MEMORY_AND_DISK index frames
-  * could hold unbounded disk spill in a long-lived session. Each
-  * `pin()` also checks the session's TOTAL persisted bytes (memory +
-  * disk across all cached RDDs, from the driver's storage status) and
-  * evicts pins oldest-first while it exceeds
+  * BYTE bound: the slot cap alone is count-, not size-aware — 256
+  * slots of corpus-scale MEMORY_AND_DISK index frames could hold
+  * unbounded disk spill in a long-lived session. Each `pin()` also sums
+  * the storage bytes (memory + disk tier) of the session's OWN pinned
+  * frames and evicts them oldest-first while that sum exceeds
   * `spark.graft.pins.maxBytes` (default 4x the driver JVM's max heap —
   * far above anything the bench suite persists, so local behavior is
   * unchanged; set it to a fraction of cluster storage in production).
-  * The accounting is session-total, which is deliberately conservative:
-  * a user's own big cache counts against the pin budget, so pins yield
-  * first when storage is tight — the safe direction, because an
-  * evicted pin only recomputes while an evicted user cache may be the
-  * caller's checkpoint.
+  * Another session's cache, or the caller's own non-pin cache, does not
+  * count: pins can only give back pin bytes, so charging them for
+  * storage they cannot release would evict every pin on each call and
+  * still admit the new one.
   */
 private[graft] object Pins {
   // 256: the full concurrent query suite now registers well over 64
@@ -59,13 +57,22 @@ private[graft] object Pins {
     s.conf.getOption(MaxBytesConf).map(_.toLong)
       .getOrElse(4L * Runtime.getRuntime.maxMemory)
 
-  /** All persisted bytes the session's context currently holds (memory
-    * tier + disk tier, every cached RDD). Driver-local metadata — one
-    * array walk, no RPC in local mode and one status read on a
-    * cluster.
+  /** Storage bytes (memory + disk tier) the given pinned frames hold:
+    * each frame's cache RDD, looked up in the driver's storage status.
+    * Frames that share one cache entry count once; a cache not yet
+    * materialized holds nothing.
     */
-  private def persistedBytes(s: SparkSession): Long =
-    s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+  private def pinnedBytes(s: SparkSession, frames: Seq[DataFrame]): Long = {
+    val cache = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val rdds = frames.flatMap(f => cache.lookupCachedData(
+        f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]))
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.cachedColumnBuffers.id).toSet
+    s.sparkContext.getRDDStorageInfo
+      .collect { case i if rdds(i.id) => i.memSize + i.diskSize }.sum
+  }
 
   @annotation.tailrec
   def pin(df: DataFrame): DataFrame = {
@@ -75,10 +82,9 @@ private[graft] object Pins {
       if (mine.open) {
         if (mine.frames.size >= MaxPerSession) mine.frames.remove(0).unpersist()
         // byte bound: evict oldest-first (blocking, so the next check
-        // sees the freed bytes) while the session's persisted total
-        // exceeds the cap and this session still holds pins to give back
+        // sees the freed bytes) while this session's pins exceed the cap
         val cap = maxBytes(s)
-        while (mine.frames.nonEmpty && persistedBytes(s) > cap)
+        while (mine.frames.nonEmpty && pinnedBytes(s, mine.frames.toSeq) > cap)
           mine.frames.remove(0).unpersist(blocking = true)
         mine.frames += df
       }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A DataSource-V2 [[TableCatalog]] over [[TxTable]] commit logs — the
-  * SQL-DML front door the V1 `format("txtable")` path cannot provide:
+  * SQL DDL/DML front door with warehouse-path identifiers:
   *
   * {{{
   *   spark.sql.catalog.gx           = graft.api.TxCatalog
@@ -34,14 +34,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Identifiers map to warehouse paths (`gx.db.t` →
   * `<warehouse>/db/t`), namespaces are directories, and a table IS its
   * `_txlog` — no separate metastore state to drift. Every statement
-  * re-resolves [[loadTable]], so SQL reads always see the current head
-  * (fresher than the V1 session-catalog route, which caches the
-  * CREATE-time relation until `REFRESH TABLE`); each loaded table pins
-  * ONE snapshot for the statement — the same per-relation isolation
-  * `spark.read` promises.
+  * re-resolves [[loadTable]], so SQL reads always see the current head;
+  * each loaded table pins ONE snapshot for the statement — the same
+  * per-relation isolation `spark.read` promises.
   *
-  * The V1 source (`TxTableSource`) stays the `format("txtable")` /
-  * streaming route; this catalog is additive. Reference anchor: the
+  * `format("txtable")` reads and `USING txtable` session-catalog tables
+  * resolve to the same [[TxV2Table]] through [[TxTableSource]] (the
+  * TableProvider); this catalog adds what only a catalog can: warehouse
+  * identifiers, CREATE/REPLACE/ALTER/DROP, namespaces, `CALL`
+  * procedures and `readStream`/`writeStream` by table name.
+  *
+  * Reference anchor: the
   * reference's tables are named entries in a catalog JSON resolved to
   * parquet paths (catalog.py:18, tables.py:62) — here the resolution
   * is a Spark catalog plugin and the parquet paths are transactional.
@@ -197,10 +200,8 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
       case _: NumberFormatException => throw new IllegalArgumentException(
         s"txtable versions are commit numbers, got '$version'")
     }
-    val head = TxTable.latestVersion(spark, p)
-    require(v >= 1 && v <= head,
-      s"versionAsOf $v out of range for $p (versions 1..$head)")
-    new TxV2Table(spark, p, fullName(ident), pinned = Some(v), dvDml = dvDml)
+    new TxV2Table(spark, p, fullName(ident),
+      pinned = Some(TxTable.requireVersion(spark, p, v)), dvDml = dvDml)
   }
 
   /** SQL `TIMESTAMP AS OF t` — `timestamp` arrives in MICROseconds
@@ -233,15 +234,15 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
     // identifiers ARE locations in this catalog; an external LOCATION
     // would strand the table (every later resolution computes the
     // warehouse path and finds nothing) — reject instead of silently
-    // accepting and losing it. The V1 route (`CREATE TABLE ... USING
-    // txtable LOCATION p`) serves external paths.
+    // accepting and losing it. The session catalog (`CREATE TABLE ...
+    // USING txtable LOCATION p`) serves external paths.
     Option(properties.get(TableCatalog.PROP_LOCATION))
       .map(_.stripSuffix("/")).filter(_ != pathOf(ident)).foreach(loc =>
         throw new UnsupportedOperationException(
           s"TxCatalog tables live at <warehouse>/<ns>/<name>; an external " +
             s"LOCATION ('$loc') would be unreachable by later statements. " +
-            "Use CREATE TABLE ... USING txtable LOCATION (the V1 route) " +
-            "for external paths"))
+            "Use CREATE TABLE ... USING txtable LOCATION (the session " +
+            "catalog) for external paths"))
     schema.fieldNames.foreach(TxRowLevel.requireNotReserved)
     // COMMENT / user TBLPROPERTIES persist in the commit log (the
     // propsB64 field); Spark-injected keys (owner, self-location,
@@ -514,15 +515,15 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
-/** One txtable snapshot as a DSv2 [[Table]]. Reads plan through
-  * Spark's OWN `ParquetScanBuilder` over a commit-log-backed file
-  * index ([[GraftTxParquetIndex]]) — the identical native vectorized
-  * scan + log-metadata file pruning + parquet row-group pushdown the
-  * V1 `TxFileIndex` relation gets, now behind a catalog identifier.
-  * Writes route through the transactional verbs as a [[V1Write]]
-  * (`INSERT INTO` → one [[TxTable.append]] commit, `INSERT OVERWRITE`
-  * → one [[TxTable.overwrite]] commit) — the DSv2 mirror of the V1
-  * `InsertableRelation` guard that keeps SQL DML off Spark's
+/** One txtable snapshot as a DSv2 [[Table]] — the table behind every
+  * batch read, whether by catalog identifier, `format("txtable")` or a
+  * `USING txtable` session table ([[TxProvidedTable]]). Reads plan
+  * through Spark's OWN `ParquetScanBuilder` over a commit-log-backed
+  * file index ([[GraftTxParquetIndex]]): native vectorized scan,
+  * log-metadata file pruning, parquet row-group pushdown. Writes route
+  * through the transactional verbs as a [[V1Write]] (`INSERT INTO` →
+  * one [[TxTable.append]] commit, `INSERT OVERWRITE` → one
+  * [[TxTable.overwrite]] commit), which keeps SQL DML off Spark's
   * destructive native file-write path.
   */
 class TxV2Table(spark: SparkSession, val path: String, ident: String,
@@ -624,7 +625,7 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
     // defense-in-depth against tables created OUTSIDE validateTableSpec
-    // (the V1 `USING txtable LOCATION` route, programmatic stage): a
+    // (`format("txtable")`, `USING txtable LOCATION`, programmatic stage): a
     // data column named '_file'/'_pos' would be silently pruned by the
     // composed builder and shadowed by synthesized provenance — fail
     // loudly at scan construction instead
@@ -637,8 +638,7 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
     // keeps vectorized batches + parquet row-group pushdown (filters
     // and read schema translated to physical names). DV-free unmapped
     // tables — the steady state; compact/optimize purge both — keep
-    // the native plan, so plan parity with V1 is unchanged where it
-    // is pinned.
+    // the native plan.
     if (state.dels.nonEmpty || TxTable.isMapped(state))
       return new TxDvScanBuilder(spark, this, options)
     val index = new GraftTxParquetIndex(spark, new Path(path),
@@ -1986,6 +1986,10 @@ class TxV1WriteBuilder(spark: SparkSession, path: String,
           replaceCond match {
             case Some(cond) => TxTable.replaceWhere(spark, path, cond, data)
             case None if overwriteAll || overwrite =>
+              TxTable.overwrite(spark, path, data)
+            case None if TxTable.latestVersion(spark, path) == 0 =>
+              // a CTAS into a fresh `USING txtable LOCATION`: the first
+              // write defines the table (createRelation's Append rule)
               TxTable.overwrite(spark, path, data)
             case None if clustered =>
               // indexed ingest parity with the V1 sink's

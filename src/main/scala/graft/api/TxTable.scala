@@ -352,6 +352,18 @@ object TxTable {
   def latestVersion(spark: SparkSession, path: String): Long =
     logVersions(fs(spark, path), path)._1.lastOption.getOrElse(0L)
 
+  /** `v` when it names a committed version of the table, else a loud
+    * error: folding "everything <= v" would silently serve the HEAD for
+    * any too-large v, and a pinned report would read a wrong snapshot.
+    */
+  private[graft] def requireVersion(spark: SparkSession, path: String,
+                                    v: Long): Long = {
+    val head = latestVersion(spark, path)
+    require(v >= 1 && v <= head,
+      s"versionAsOf $v out of range for $path (versions 1..$head)")
+    v
+  }
+
   /** The folded table state at a version — live files, landed txns,
     * per-file cluster-column (lo, hi) stats, and the column the stats
     * describe — resolved from the newest checkpoint at-or-below the
@@ -1187,8 +1199,8 @@ object TxTable {
     * 100k-file table costs O(commits) metadata RPCs instead of 100k
     * serial round-trips. A file the log references but the store lost
     * fails loudly with the commit-log framing (the silent alternative
-    * is a partial scan reading as a smaller table). Shared by the V1
-    * [[TxFileIndex]] and the V2 catalog scan.
+    * is a partial scan reading as a smaller table). Used by the
+    * [[TxV2Table]] scans.
     */
   private[graft] def liveFileStatuses(spark: SparkSession, path: String,
                                       st: State)
@@ -2541,7 +2553,7 @@ object TxTable {
   def compact(spark: SparkSession, path: String, numFiles: Int = 1): Long =
     rewriteHead(spark, path, "compact", Some(numFiles))(identity)
 
-  /** One `listStatus` per staging directory (the [[TxFileIndex]]
+  /** One `listStatus` per staging directory (the [[liveFileStatuses]]
     * costing): live-file sizes in O(commits) metadata RPCs, never one
     * round-trip per file. Files the store lost report size 0 — the
     * caller treats them conservatively.

@@ -1,13 +1,14 @@
 package graft.api
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import java.util
+
 import org.apache.spark.sql.{SparkSession, SQLContext}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.GraftV2Bridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** [[TxTable]] as a REGISTERED Spark data source — the integration that
   * turns the commit-log table layer from a function API into a table
@@ -20,30 +21,61 @@ import org.apache.spark.sql.types.StructType
   *   CREATE TABLE t USING txtable LOCATION '/data/events'       -- SQL DDL
   * }}}
   *
-  * Integration shape: a custom [[FileIndex]] under a plain
-  * `HadoopFsRelation` — the seam Delta Lake reads through
-  * (TahoeLogFileIndex). The index lists exactly the COMMIT LOG's live
-  * files for the pinned version and prunes them against the log's
-  * recorded metadata — cluster-column ranges, z-order rectangles,
-  * truncated string bounds, bloom point-sets ([[TxTable.prunedFiles]],
-  * the same per-file predicates [[TxTable.readRange]]/readBox/
-  * readPoints evaluate) — inside `listFiles`, where Spark hands it the
-  * query's data filters. Everything above the index is Spark's NATIVE
-  * parquet path: `FileSourceScanExec` with vectorized reads, footer/
-  * row-group pushdown (`PushedFilters` in the plan), whole-stage
-  * codegen, and exact filter evaluation — no `RDD[Row]` seam, no
-  * per-row conversion (the V1 `PrunedFilteredScan` this replaced
-  * materialized every surviving row as an external Row).
+  * ONE connector: as a [[TableProvider]], every batch read — by format,
+  * through a `USING txtable` session-catalog table, or a `CREATE
+  * TEMPORARY VIEW … USING txtable` — resolves to the same [[TxV2Table]]
+  * the [[TxCatalog]] serves, pinned at `versionAsOf`: Spark's native
+  * vectorized parquet scan over the commit log's live files, log-metadata
+  * file pruning, parquet row-group pushdown, and the columnar
+  * deletion-vector / column-mapping scan where the snapshot needs it.
+  *
+  * The provided table declares only `BATCH_READ`, `V1_BATCH_WRITE` and
+  * `TRUNCATE` (what SQL `INSERT OVERWRITE` plans through). Spark falls
+  * back to a provider's V1 interfaces whenever `BATCH_WRITE`,
+  * `MICRO_BATCH_READ` or `STREAMING_WRITE` is missing (the Delta
+  * `DeltaTableV2` pattern), so `df.write`, `readStream` and `writeStream`
+  * by format keep the V1 halves below: [[CreatableRelationProvider]]
+  * (SaveModes → transactional verbs), the change-feed [[TxTableStreamSource]]
+  * and the txn-tagged [[TxTableSink]]. SQL `INSERT INTO` / `INSERT
+  * OVERWRITE` on a session table plan as V2 appends/overwrites through
+  * [[TxV1WriteBuilder]] — one commit each, never Spark's native file
+  * write.
   *
   * Correctness stance: file pruning is an optimization, never a
   * correctness filter — a file is dropped only when the log's metadata
-  * PROVES no row can match, and the native scan still evaluates the
-  * real predicates on every row it reads.
+  * PROVES no row can match, and the scan still evaluates the real
+  * predicates on every row it reads.
   */
-class TxTableSource extends RelationProvider with CreatableRelationProvider
+class TxTableSource extends TableProvider with CreatableRelationProvider
     with StreamSinkProvider with StreamSourceProvider with DataSourceRegister {
 
   override def shortName(): String = "txtable"
+
+  /** Spark hands [[getTable]] the schema it already holds — a session
+    * table's metastore schema, or the writing frame's on `df.write` —
+    * instead of inferring one per statement.
+    */
+  override def supportsExternalMetadata(): Boolean = true
+
+  /** Nothing to infer: the log IS the schema, and [[getTable]] reads it
+    * from the pinned snapshot. An empty result declares nothing, so a
+    * `CREATE TABLE … USING txtable LOCATION p` stores no schema copy
+    * for the log to outgrow, and a format read folds the log once.
+    */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new StructType()
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    val path = Option(opts.get("path")).orElse(Option(opts.get("location")))
+      .getOrElse(throw new IllegalArgumentException(
+        "txtable needs a path: spark.read.format(\"txtable\").load(path)"))
+    val spark = SparkSession.active
+    val pinned = Option(opts.get("versionAsOf"))
+      .map(v => TxTable.requireVersion(spark, path, v.toLong))
+    new TxProvidedTable(spark, path, pinned, schema)
+  }
 
   /** The STREAMING source half:
     * `spark.readStream.format("txtable").load(path)` serves the
@@ -175,200 +207,57 @@ class TxTableSource extends RelationProvider with CreatableRelationProvider
       case Ignore if exists   => () // documented no-op
       case Ignore             => TxTable.overwrite(spark, path, data)
     }
-    createRelation(sqlContext, parameters - "txn" - "evolve")
-  }
-
-  /** SNAPSHOT SEMANTICS of the returned relation: the version is
-    * pinned HERE, so the relation serves exactly this snapshot for its
-    * lifetime — the per-relation isolation `spark.read` promises. For
-    * a catalog table (`CREATE TABLE t USING txtable LOCATION p`) Spark
-    * CACHES the resolved relation, so `SELECT ... FROM t` keeps
-    * serving the CREATE-time snapshot until `REFRESH TABLE t` (or a
-    * SQL INSERT through it, whose command invalidates the plan cache)
-    * re-resolves it — the spec pins refresh-then-see-new-commit.
-    */
-  override def createRelation(sqlContext: SQLContext,
-                              parameters: Map[String, String]): BaseRelation = {
-    val path = parameters.getOrElse("path",
-      throw new IllegalArgumentException(
-        "txtable needs a path: spark.read.format(\"txtable\").load(path)"))
-    val spark = sqlContext.sparkSession
-    val head = TxTable.latestVersion(spark, path)
-    val version = parameters.get("versionAsOf").map(_.toLong) match {
-      case Some(v) =>
-        // hard-validate the bound: folding "everything <= v" would
-        // silently serve the HEAD for any too-large v — a pinned
-        // report would read wrong-snapshot data with no error
-        require(v >= 1 && v <= head,
-          s"versionAsOf $v out of range for $path (versions 1..$head)")
-        v
-      case None => head
+    // the V1 write contract returns a relation; the data is read back
+    // through getTable, so this one only names the written schema
+    val written = data.schema
+    new BaseRelation {
+      override def sqlContext: SQLContext = spark.sqlContext
+      override def schema: StructType = written
     }
-    // ONE log fold per relation: schema, file statuses and every
-    // listFiles derive from this snapshot. Sound because the version
-    // is pinned here and data files are immutable.
-    val state = TxTable.snapshotState(spark, path, version)
-    require(state.files.nonEmpty, s"version $version of $path holds no files")
-    // a DV-bearing snapshot cannot plan as a native HadoopFsRelation
-    // (nothing in that scan drops (file, position) rows), and a
-    // column-MAPPED one cannot either (the native relation reads files
-    // by logical names; a renamed column would silently null-fill):
-    // serve both through a PrunedFilteredScan over the DV-applied,
-    // mapping-translated snapshot read — correct, with file-level
-    // pruning. The steady state is DV-free and unmapped (compact /
-    // optimize purge both) and keeps the native vectorized plan; the
-    // V2 catalog route keeps vectorized batches + parquet pushdown
-    // even while mapped.
-    if (state.dels.nonEmpty || TxTable.isMapped(state))
-      return new TxDvV1Relation(spark, path, state)
-    new TxInsertableHadoopFsRelation(
-      new TxFileIndex(spark, path, version, state),
-      TxTable.stateSchema(spark, path, state), spark, path)
   }
 }
 
-/** V1 read of a snapshot carrying position deletes (merge-on-read):
-  * filters prune FILES through the same log metadata as the native
-  * path, rows come from the DV-applied snapshot read, and residual
-  * filters are re-applied by Spark (`unhandledFilters` returns all).
-  * Also an [[InsertableRelation]], so SQL INSERT through a
-  * `USING txtable` table keeps routing to the transactional verbs
-  * while the table happens to carry DVs.
-  */
-class TxDvV1Relation(spark: SparkSession, path: String,
-                     state: TxTable.State)
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
-
-  override def sqlContext: SQLContext = spark.sqlContext
-  override val schema: StructType =
-    TxMapping.stripMapping(TxTable.stateSchema(spark, path, state))
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter])
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.functions.col
-    val (ranges, points, strRanges) = TxTableRelation.constraints(filters)
-    val kept = TxTable.prunedFiles(state, ranges, points, strRanges)
-    if (kept.isEmpty)
-      return spark.sparkContext.emptyRDD[org.apache.spark.sql.Row]
-    val base = TxTable.readStateFiles(spark, path, state, kept)
-    val filtered = filters.flatMap(TxFilters.toColumn)
-      .foldLeft(base)(_.filter(_))
-    (if (requiredColumns.isEmpty) filtered
-     else filtered.select(requiredColumns.map(col).toIndexedSeq: _*)).rdd
-  }
-
-  override def insert(data: org.apache.spark.sql.DataFrame,
-                      overwrite: Boolean): Unit = {
-    if (overwrite) TxTable.overwrite(spark, path, data)
-    else TxTable.append(spark, path, data, txn = None)
-    ()
-  }
-}
-
-/** The relation behind every `format("txtable")` read — a
-  * [[HadoopFsRelation]] (so reads plan as Spark's NATIVE vectorized
-  * parquet scan through [[TxFileIndex]]) that ALSO implements
-  * [[InsertableRelation]], which is what routes SQL DML through the
-  * transactional verbs: in Spark's `DataSourceAnalysis` the
-  * `InsertableRelation` case is matched BEFORE the `HadoopFsRelation`
-  * case (rules.scala), so `INSERT INTO t` / `INSERT OVERWRITE t` on a
-  * `CREATE TABLE ... USING txtable` table plan as
-  * `InsertIntoDataSourceCommand` → [[insert]] → one atomic
-  * [[TxTable.append]]/[[TxTable.overwrite]] commit — never as
-  * `InsertIntoHadoopFsRelationCommand`, Spark's native file write.
+/** The table behind `format("txtable")` reads and `USING txtable`
+  * session-catalog tables: the catalog's [[TxV2Table]], cut to the
+  * capabilities Spark must not route around the V1 write and streaming
+  * halves of [[TxTableSource]]. `declared` is the schema Spark holds
+  * for it — empty for format reads, the metastore's for a session
+  * table, the query's for a CTAS into a fresh `LOCATION` (and the
+  * frame's on `df.write`, which only asks for capabilities and then
+  * writes through V1):
   *
-  * That routing is THE load-bearing guard, not a convenience: the
-  * native command's overwrite path DELETES the whole table root
-  * (`deleteMatchingPartitions` — commit log, history, every data file)
-  * BEFORE it first touches the `FileFormat`, so no format-level hook
-  * could fire in time; and its append path lands bare parquet into the
-  * table root — unlogged, invisible to every reader, and vacuumable.
-  * [[TxTableWriteGuardFormat]] below stays as a tripwire for any OTHER
-  * native write route.
+  *  - a path with no log yet serves `declared`, so a CTAS can plan its
+  *    append (the write then lands version 1 as an overwrite);
+  *  - a non-empty `declared` that differs from the log's schema fails
+  *    analysis with Spark's user-schema mismatch error — the check V1
+  *    `readDataSourceTable` applies — which is how an `ALTER TABLE … ADD
+  *    COLUMNS` (it rewrites only the metastore, never the log) surfaces.
+  *    The check runs when the schema is first read, not in `getTable`,
+  *    so `DROP TABLE` (which loads the table) still works.
   *
-  * INSERT always commits at the HEAD, even through a relation pinned
-  * to an older `versionAsOf` — writes target the table, reads target
-  * the snapshot (the Delta semantics).
+  * SQL `TRUNCATE TABLE` stays refused: it is not a txtable verb on this
+  * route (`INSERT OVERWRITE` and [[TxTable.overwrite]] are).
   */
-class TxInsertableHadoopFsRelation(index: TxFileIndex,
-                                   tableSchema: StructType,
-                                   spark: SparkSession, path: String,
-                                   opts: Map[String, String] = Map.empty)
-    extends HadoopFsRelation(
-      index,
-      partitionSchema = StructType(Nil),
-      dataSchema = tableSchema,
-      bucketSpec = None,
-      fileFormat = new TxTableWriteGuardFormat(path),
-      options = opts)(spark)
-    with InsertableRelation {
+private[api] class TxProvidedTable(spark: SparkSession, path: String,
+                                   pinned: Option[Long], declared: StructType)
+    extends TxV2Table(spark, path, s"txtable.`$path`", pinned) {
 
-  override def insert(data: org.apache.spark.sql.DataFrame,
-                      overwrite: Boolean): Unit = {
-    if (overwrite) TxTable.overwrite(spark, path, data)
-    else TxTable.append(spark, path, data, txn = None)
-    ()
-  }
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ,
+      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
-  /** The case-class `copy` would LAUNDER this subclass away: on every
-    * table-relation-cache HIT, `FindDataSourceTable.readDataSourceTable`
-    * rebuilds the relation as `fsRelation.copy(options = merged)` to
-    * fold per-query options in — and a plain `HadoopFsRelation` copy no
-    * longer implements [[InsertableRelation]], so the SECOND and every
-    * later `INSERT` on the same catalog table would silently fall to
-    * Spark's native `InsertIntoHadoopFsRelationCommand` (whose
-    * overwrite mode deletes the table root, log and all, before any
-    * format hook can fire — reproduced before this override existed).
-    * Overriding `copy` keeps every rebuilt relation this class, so DML
-    * stays routed through the commit log no matter how many times the
-    * analyzer re-derives the relation.
-    */
-  override def copy(location: FileIndex,
-                    partitionSchema: StructType,
-                    dataSchema: StructType,
-                    bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec],
-                    fileFormat: org.apache.spark.sql.execution.datasources.FileFormat,
-                    options: Map[String, String])(
-                    sparkSession: SparkSession): HadoopFsRelation =
-    location match {
-      case tx: TxFileIndex =>
-        new TxInsertableHadoopFsRelation(tx, dataSchema, sparkSession,
-          path, options)
-      case other => // a rebuild swapped the index out: plain relation,
-        // losing writability rather than mis-routing writes
-        HadoopFsRelation(other, partitionSchema, dataSchema, bucketSpec,
-          fileFormat, options)(sparkSession)
+  override lazy val schema: StructType =
+    if (snapVersion == 0) {
+      require(declared.nonEmpty, s"no txtable at $path")
+      declared
+    } else {
+      val logged = TxMapping.stripMapping(mappedSchema)
+      if (declared.nonEmpty) GraftV2Bridge.requireDeclaredSchema(declared, logged)
+      logged
     }
-}
 
-/** Tripwire [[ParquetFileFormat]]: reading never calls `prepareWrite`,
-  * so subclassing only the write half leaves the native vectorized
-  * read path byte-identical — but any write route that reaches the
-  * format level (a future Spark rule reordering, a hand-built plan)
-  * fails LOUDLY with the supported alternatives instead of silently
-  * landing unlogged files next to the commit log. Not sufficient on
-  * its own for `INSERT OVERWRITE` (the native command deletes the
-  * table root before `prepareWrite` runs — see
-  * [[TxInsertableHadoopFsRelation]], the guard that actually
-  * intercepts DML at analysis time); necessary as defense in depth.
-  */
-class TxTableWriteGuardFormat(path: String) extends ParquetFileFormat {
-  override def prepareWrite(sparkSession: org.apache.spark.sql.SparkSession,
-                            job: org.apache.hadoop.mapreduce.Job,
-                            options: Map[String, String],
-                            dataSchema: StructType)
-      : org.apache.spark.sql.execution.datasources.OutputWriterFactory =
-    throw new UnsupportedOperationException(
-      s"direct file writes into the txtable at $path are not supported " +
-        "(they would bypass the commit log): use SQL INSERT INTO / " +
-        "INSERT OVERWRITE on the registered table, " +
-        "df.write.format(\"txtable\"), or the TxTable API verbs " +
-        "(append / overwrite / merge / deleteWhere)")
-  override def toString: String = "TxTableParquet"
+  override def truncateTable(): Boolean =
+    throw GraftV2Bridge.truncateUnsupported(this)
 }
 
 /** A streaming offset that IS a commit version — the natural cursor of
@@ -493,7 +382,7 @@ class TxTableSink(spark: SparkSession, path: String, appId: String,
 
 object TxTableSource {
   /** Test observability: the relative file names the most recent
-    * `listFiles` FOR A GIVEN TABLE PATH kept after log pruning (the
+    * native scan FOR A GIVEN TABLE PATH kept after log pruning (the
     * spec pins pruning without reaching into the scan's internals).
     * Keyed by path — the native scan evaluates `listFiles` on a
     * planner thread, not the caller's, so a thread-local could never
@@ -508,51 +397,8 @@ object TxTableSource {
     Option(lastScanFilesByPath.get(path)).getOrElse(Nil)
 }
 
-/** The commit log AS a [[FileIndex]]: `listFiles` is where Spark asks
-  * "which files, given these filters" — answered here from the log
-  * alone (no directory listing, no footer reads), which is the whole
-  * point of a lakehouse log at 100 TB: O(log) planning, not O(table).
-  *
-  * File statuses are fetched once at construction (one metadata RPC
-  * per live file, the listing cost every file index pays) and reused
-  * across every query planned against this relation instance.
-  */
-class TxFileIndex(spark: SparkSession, path: String, version: Long,
-                  state: TxTable.State) extends FileIndex {
-
-  /** One `listStatus` per STAGING DIRECTORY, not one `getFileStatus`
-    * per file: live files group into `data-*` commit dirs, so a
-    * 100k-file table costs O(commits) metadata RPCs here instead of
-    * 100k serial round-trips. A file the log references but the store
-    * lost fails loudly with the commit-log framing (the silent
-    * alternative would be a partial scan reading as a smaller table).
-    */
-  private val byName: Map[String, FileStatus] =
-    TxTable.liveFileStatuses(spark, path, state)
-  private val statuses: Seq[FileStatus] = state.files.map(byName)
-
-  override def rootPaths: Seq[Path] = Seq(new Path(path))
-
-  override def partitionSchema: StructType = StructType(Nil)
-
-  override def sizeInBytes: Long = statuses.map(_.getLen).sum
-
-  override def inputFiles: Array[String] =
-    statuses.map(_.getPath.toString).toArray
-
-  /** The snapshot is immutable by construction — nothing to refresh. */
-  override def refresh(): Unit = ()
-
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = TxTableRelation.keptFiles(state, dataFilters)
-    TxTableSource.lastScanFilesByPath.put(path, kept)
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(byName).toArray))
-  }
-}
-
-/** The pushed-filter → log-constraint mapping, shared by
-  * [[TxFileIndex]] and the specs.
+/** The pushed-filter → log-constraint mapping, shared by the
+  * [[TxV2Table]] scans and the specs.
   */
 object TxTableRelation {
 
@@ -562,8 +408,8 @@ object TxTableRelation {
     * would see), weaken into the log's constraint shapes, keep files
     * whose recorded metadata can satisfy the conjunction.
     * Untranslatable predicates contribute no constraint —
-    * conservative. ONE prune implementation shared by the V1
-    * [[TxFileIndex]] and the V2 catalog scan.
+    * conservative. ONE prune implementation for every [[TxV2Table]]
+    * scan.
     */
   private[graft] def keptFiles(
       state: TxTable.State,

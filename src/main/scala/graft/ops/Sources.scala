@@ -671,10 +671,10 @@ object Sources {
     // TxTable through the REGISTERED SPARK DATA SOURCE: the same range
     // predicate as q_tx_skipping, but expressed as an ordinary
     // DataFrame filter over spark.read.format("txtable") — Catalyst
-    // pushes the conjunction into the relation, which prunes files
-    // from the commit log's recorded stats (api/TxTableSource.scala;
+    // pushes the conjunction into the scan, which prunes files from
+    // the commit log's recorded stats (TxTableRelation.keptFiles;
     // TxTableSpec pins the pruning itself), while Spark re-applies the
-    // real predicate above the scan (unhandledFilters). The oracle
+    // real predicate above the scan. The oracle
     // recomputes from the source table, so a mis-mapped pushed filter,
     // an over-pruned file, or a dropped residual all break the hash.
     Q("q_tx_source",
@@ -1320,8 +1320,8 @@ object Sources {
       // table "sq": SQL DML through the registered CATALOG table —
       // CREATE TABLE ... USING txtable, then INSERT INTO (one append
       // commit) and INSERT OVERWRITE (one overwrite commit ON THE SAME
-      // LOG). Both statements must route through the InsertableRelation
-      // seam, never Spark's native file write (which deletes the table
+      // LOG). Both statements must plan as V1 writes through the commit
+      // log, never Spark's native file write (which deletes the table
       // root on overwrite — TxTableSpec pins the routing and log
       // survival); q_tx_sql_dml then replays BOTH snapshots from the
       // surviving history, so a mis-routed INSERT (lost log, unlogged

@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.sources.Filter
 
 /** Package-placed shim: `DataSourceStrategy.translateFilter` is
-  * `protected[sql]`, and graft's `TxFileIndex` wants Spark's OWN
+  * `protected[sql]`, and graft's log-metadata file pruning
+  * (`TxTableRelation.keptFiles`) wants Spark's OWN
   * Expression → source-Filter translation (hand-rolling it would be a
   * second, driftable copy of non-trivial semantics — null handling,
   * nested fields, collations). One forwarding method, nothing else;

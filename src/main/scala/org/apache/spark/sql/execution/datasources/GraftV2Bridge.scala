@@ -21,8 +21,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 object GraftV2Bridge {
 
   /** Spark's V2 parquet scan builder over a commit-log-backed index:
-    * the DSv2 read path becomes the same native vectorized scan with
-    * non-empty PushedFilters the V1 `TxFileIndex` relation plans.
+    * the DSv2 read path is Spark's native vectorized scan with
+    * non-empty PushedFilters.
     *
     * `fileColScan` handles the ONE shape parquet cannot serve: a
     * required schema containing the `_file` metadata column (the
@@ -175,6 +175,22 @@ object GraftV2Bridge {
   def predicateToV1(p: org.apache.spark.sql.connector.expressions.filter.Predicate)
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)
+
+  /** The user-schema check V1 `DataSource.resolveRelation` applies to a
+    * relation provider handed a declared schema: same types, nullability
+    * compatible, else Spark's own mismatch `AnalysisException`.
+    */
+  def requireDeclaredSchema(declared: StructType, actual: StructType): Unit =
+    if (!org.apache.spark.sql.types.DataType
+        .equalsIgnoreCompatibleNullability(actual, declared))
+      throw org.apache.spark.sql.errors.QueryCompilationErrors
+        .userSpecifiedSchemaMismatchActualSchemaError(declared, actual)
+
+  /** Spark's own "table does not support truncates" `AnalysisException`. */
+  def truncateUnsupported(table: org.apache.spark.sql.connector.catalog.Table)
+      : Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors
+      .tableDoesNotSupportTruncatesError(table)
 }
 
 /** A scan builder that tolerates the `_file` metadata column by
@@ -247,7 +263,7 @@ class GraftMetaAwareParquetScanBuilder(
 
 /** A [[PartitioningAwareFileIndex]] over ONE pinned txtable snapshot:
   * the statuses arrive pre-resolved from the commit log (O(commits)
-  * metadata RPCs, `TxFileIndex`'s contract), `listFiles` delegates
+  * metadata RPCs, [[graft.api.TxTable.liveFileStatuses]]), `listFiles` delegates
   * pruning to the caller's log-metadata closure, and there is no
   * partition discovery at all (a txtable clusters inside files; its
   * pruning index IS the log). Lives here because the parent class is

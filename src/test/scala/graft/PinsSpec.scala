@@ -47,4 +47,55 @@ class PinsSpec extends AnyFunSuite {
       "tiny frames must never trip the default (4x heap) cap")
     graft.Graft.clear(s)
   }
+
+  test("a big non-pin cache leaves the session's pins alone") {
+    val s = spark.newSession()
+    s.conf.set(graft.api.Pins.MaxBytesConf, (1L << 20).toString)
+    // ~4 MB of incompressible doubles, cached but never pinned: over the
+    // 1 MiB cap on its own, and not something a pin eviction can release
+    val big = s.range(500000).selectExpr("rand(7) AS big")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    big.count()
+    val a = s.range(1000).toDF("a").persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(a)
+    a.count()
+    val b = s.range(2000).toDF("b").persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(b)
+    assert(a.storageLevel !== StorageLevel.NONE,
+      "only the session's pinned bytes count against the cap")
+    assert(big.storageLevel !== StorageLevel.NONE)
+    big.unpersist(blocking = true)
+    graft.Graft.clear(s)
+  }
+
+  test("a session's own pins over the cap evict oldest-first; other sessions' pins stay") {
+    val other = spark.newSession()
+    val x = other.range(3000).toDF("x").persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(x)
+    x.count()
+    val s = spark.newSession()
+    s.conf.set(graft.api.Pins.MaxBytesConf, (64L << 10).toString)
+    val small = s.range(1000).toDF("small").persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(small)
+    small.count()
+    // ~400 KB: alone over the 64 KiB cap
+    val big = s.range(50000).selectExpr("rand(3) AS big")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(big)
+    big.count()
+    assert(small.storageLevel !== StorageLevel.NONE,
+      "the small pin alone is under the cap: nothing evicted yet")
+    val c = s.range(1500).toDF("c").persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(c)
+    // oldest-first: small goes first, then big (still over the cap);
+    // a newest-first eviction would drop big and keep small
+    assert(small.storageLevel === StorageLevel.NONE &&
+      big.storageLevel === StorageLevel.NONE,
+      "the session's pins are given back oldest-first until under the cap")
+    assert(c.storageLevel !== StorageLevel.NONE)
+    assert(x.storageLevel !== StorageLevel.NONE,
+      "another session's pins are neither charged nor evicted")
+    graft.Graft.clear(s)
+    graft.Graft.clear(other)
+  }
 }

@@ -7,8 +7,8 @@ import graft.api.TxTable
 /** Merge-on-read deletion vectors (position deletes, the Iceberg-v2
   * shape): a `dv` commit records (file, position) parquet instead of
   * rewriting matched files — O(changed rows) writes — and every read
-  * path applies them: the API snapshot read, the V1 registered source,
-  * the V2 catalog scan (row-based branch), the change feeds, restore,
+  * path applies them: the API snapshot read, the V2 table scan behind
+  * `format("txtable")` and the catalog, the change feeds, restore,
   * and the copy-on-write rewrites (which materialize and purge them).
   */
 class TxDvSpec extends AnyFunSuite {
@@ -76,12 +76,12 @@ class TxDvSpec extends AnyFunSuite {
   test("V1 format(\"txtable\") and the V2 catalog read DV-applied") {
     val p = freshTable()
     TxTable.deleteWhereDv(spark, p, col("id") >= 90)
-    // V1 registered source (PrunedFilteredScan fallback on DV tables)
+    // format("txtable") (the columnar DV scan of the provided TxV2Table)
     val v1 = spark.read.format("txtable").load(p)
     assert(v1.count() === 90L)
     assert(v1.filter(col("id") >= 85).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq === (85L to 89L),
-      "filters still apply correctly through the DV fallback relation")
+      "filters still apply correctly through the DV scan")
     // versionAsOf below the dv commit reads everything, natively
     assert(spark.read.format("txtable").option("versionAsOf", 1)
       .load(p).count() === 100L)
@@ -114,8 +114,8 @@ class TxDvSpec extends AnyFunSuite {
       "every DV'd file was rewritten: the delete set purged to Nil")
     assert(TxTable.read(spark, p).orderBy("id").collect().toSeq === expect,
       "the purge is content-identical")
-    // back to the native V1 plan: the relation is a HadoopFsRelation
-    // again (count through it as a smoke check)
+    // back to the native parquet plan (count through it as a smoke
+    // check)
     assert(spark.read.format("txtable").load(p).count() === expect.size.toLong)
   }
 
@@ -818,5 +818,66 @@ class TxDvSpec extends AnyFunSuite {
     q2.awaitTermination()
     assert(spark.sql("SELECT id FROM gdvs.d ORDER BY id").collect()
       .map(_.getLong(0)).toSeq === Seq(1L, 3L, 9L))
+  }
+
+  /** The executed plan's node class names (no AQE wrapper: these scans
+    * carry no exchange). */
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.collect { case n => n.getClass.getSimpleName }
+
+  private def mappedDvTable(): String = {
+    val p = freshTable()
+    TxTable.deleteWhereDv(spark, p, col("id") % 10 === 3) // v2: DVs
+    TxTable.renameColumn(spark, p, "v", "w")              // v3: mapped too
+    p
+  }
+
+  test("format(\"txtable\") reads of DV-bearing and column-mapped snapshots plan a columnar BatchScan") {
+    val p = mappedDvTable()
+    for (v <- Seq(2L, 3L)) {
+      val df = spark.read.format("txtable").option("versionAsOf", v).load(p)
+        .filter(col("id") > 5L)
+      val nodes = planNodes(df)
+      assert(nodes.contains("BatchScanExec") && nodes.contains("ColumnarToRowExec"),
+        s"v$v must read vectorized through a BatchScan: $nodes")
+      assert(!nodes.exists(n => n.contains("RDDScan") || n.contains("RowDataSourceScan")),
+        s"v$v must not fall back to a row-RDD scan: $nodes")
+      assert(df.queryExecution.executedPlan.toString.contains("TxFileScan"),
+        "the DV / mapping scan serves the snapshot")
+    }
+  }
+
+  test("format(\"txtable\") equals TxTable.read at head and on each side of the dv commit") {
+    val p = mappedDvTable()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    for (v <- 1L to 3L)
+      assert(rows(spark.read.format("txtable").option("versionAsOf", v).load(p)) ===
+        rows(TxTable.readVersion(spark, p, v)), s"versionAsOf $v")
+    val head = spark.read.format("txtable").load(p)
+    assert(head.columns.toSeq === Seq("id", "w", "g"))
+    assert(rows(head) === rows(TxTable.read(spark, p)))
+    assert(rows(head).size === 90, "the dv commit's deletes apply at the head")
+    assert(rows(spark.read.format("txtable").option("versionAsOf", 1).load(p)).size === 100)
+  }
+
+  test("readStream.table on a USING txtable session table fails loudly at start") {
+    val p = freshTable()
+    val tbl = "graft_txdv_stream"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl USING txtable LOCATION '$p'")
+    try {
+      val ck = java.nio.file.Files.createTempDirectory("txdvsck").toString
+      // the provided table declares no MICRO_BATCH_READ (the by-name
+      // streaming read is the TxCatalog's), and a session table has no
+      // V1 fallback: the query is rejected before it starts
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.readStream.table(tbl).writeStream.format("noop")
+          .option("checkpointLocation", ck).start().processAllAvailable()
+      }
+      assert(e.getMessage.contains("does not support either micro-batch"),
+        e.getMessage)
+      assert(TxTable.latestVersion(spark, p) === 1L)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

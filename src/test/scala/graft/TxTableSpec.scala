@@ -700,12 +700,12 @@ class TxTableSpec extends AnyFunSuite {
     // …so the cut is the native scan's: 7 of 8 row groups footer-skipped
     assert(selective <= full / 4,
       s"native pushdown must row-group-skip: read $selective of $full rows")
-    // the relation plans as Spark's NATIVE FileScan (no RDD[Row] seam):
-    // vectorized parquet, predicates in PushedFilters, codegen above
+    // the relation plans as Spark's NATIVE V2 parquet scan (no RDD[Row]
+    // seam): vectorized parquet, predicates in PushedFilters, codegen above
     val plan = sel.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    assert(plan.contains("FileScan parquet"),
-      s"txtable must plan as a native parquet FileScan:\n$plan")
+    assert(plan.contains("BatchScan") && plan.contains("ParquetScan"),
+      s"txtable must plan as a native parquet BatchScan:\n$plan")
     assert(plan.contains("PushedFilters") && !plan.contains("PushedFilters: []")
       && plan.contains("w"),
       s"the native scan must carry the pushed w-filters:\n$plan")
@@ -2084,13 +2084,20 @@ class TxTableSpec extends AnyFunSuite {
       assert(TxTable.read(spark, t).select("id").collect()
         .map(_.getLong(0)).toSet === Set(1L, 101L))
       assert(TxTable.latestVersion(spark, t) === 2L)
-      // ALTER ADD COLUMNS on a V1 source rejects loudly (evolveAppend
-      // is the schema-evolution path)
+      // ALTER ADD COLUMNS: Spark's session catalog rewrites only the
+      // metastore schema (evolveAppend is the schema-evolution path), so
+      // the log stays as it was and the table fails loudly on its next read
+      spark.sql(s"ALTER TABLE $tbl ADD COLUMNS (q BIGINT)")
       intercept[org.apache.spark.sql.AnalysisException] {
-        spark.sql(s"ALTER TABLE $tbl ADD COLUMNS (q BIGINT)")
+        spark.sql(s"SELECT * FROM $tbl").collect()
       }
-      // CTAS routes through the CreatableRelationProvider verbs: a
-      // real commit-log table, not bare parquet
+      assert(TxTable.latestVersion(spark, t) === 2L &&
+        TxTable.read(spark, t).columns.toSeq === Seq("id", "v"),
+        "a metastore-only ALTER leaves the log untouched")
+      spark.sql(s"DROP TABLE $tbl")
+      assert(TxTable.read(spark, t).count() === 2L, "DROP keeps the data")
+      // CTAS into a fresh LOCATION: the first write lands as one
+      // overwrite commit — a real commit-log table, not bare parquet
       val t2 = fresh()
       spark.sql("DROP TABLE IF EXISTS graft_txedge_ctas")
       spark.sql(s"CREATE TABLE graft_txedge_ctas USING txtable " +
@@ -2098,25 +2105,44 @@ class TxTableSpec extends AnyFunSuite {
       assert(TxTable.latestVersion(spark, t2) === 1L &&
         TxTable.read(spark, t2).count() === 1L,
         "CTAS lands one overwrite commit on a fresh log")
+      assert(TxTable.history(spark, t2).map(_.action) === Seq("overwrite"))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       spark.sql("DROP TABLE IF EXISTS graft_txedge_ctas")
     }
   }
 
-  test("the write-guard format trips loudly if a native file write ever reaches it") {
+  test("format reads and USING txtable tables plan over TxV2Table") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     val t = fresh()
+    val tbl = "graft_txroute_spec"
     TxTable.overwrite(spark, t, Seq((1L, "a")).toDF("id", "v"))
-    val rel = new graft.api.TxTableSource()
-      .createRelation(spark.sqlContext, Map("path" -> t))
-      .asInstanceOf[graft.api.TxInsertableHadoopFsRelation]
-    val e = intercept[UnsupportedOperationException] {
-      rel.fileFormat.prepareWrite(spark,
-        org.apache.hadoop.mapreduce.Job.getInstance(),
-        Map.empty, rel.dataSchema)
+    def tables(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+      df.queryExecution.analyzed.collect {
+        case r: DataSourceV2Relation => r.table
+        case other if other.getClass.getSimpleName == "LogicalRelation" => other
+      }
+    def onlyTxV2(df: org.apache.spark.sql.DataFrame): Unit = {
+      val ts = tables(df)
+      assert(ts.size === 1 && ts.head.isInstanceOf[graft.api.TxV2Table],
+        s"must resolve to one DataSourceV2Relation over TxV2Table: $ts")
     }
-    assert(e.getMessage.contains("commit log"))
-    assert(e.getMessage.contains("format(\"txtable\")"))
+    onlyTxV2(spark.read.format("txtable").load(t))
+    onlyTxV2(spark.read.format("txtable").option("versionAsOf", 1).load(t))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl USING txtable LOCATION '$t'")
+    try {
+      onlyTxV2(spark.table(tbl))
+      // SQL INSERT / INSERT OVERWRITE hand the frame to the transactional
+      // verbs (V1Write) — Spark's native file write is not reachable
+      for (stmt <- Seq(s"INSERT INTO $tbl VALUES (2, 'b')",
+                       s"INSERT OVERWRITE $tbl VALUES (2, 'b')")) {
+        val plan = spark.sql(s"EXPLAIN $stmt").head().getString(0)
+        assert(plan.contains("ExecV1") && !plan.contains("InsertIntoHadoopFsRelation"),
+          s"$stmt must plan as a V1Write through the commit log:\n$plan")
+      }
+      assert(TxTable.latestVersion(spark, t) === 1L, "EXPLAIN commits nothing")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("streaming sink without appId or checkpointLocation OPTION rejects loudly") {
