@@ -17,10 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * slots of corpus-scale MEMORY_AND_DISK index frames could hold
   * unbounded disk spill in a long-lived session. Each `pin()` also sums
   * the storage bytes (memory + disk tier) of the session's OWN pinned
-  * frames and evicts them oldest-first while that sum exceeds
-  * `spark.graft.pins.maxBytes` (default 4x the driver JVM's max heap —
-  * far above anything the bench suite persists, so local behavior is
-  * unchanged; set it to a fraction of cluster storage in production).
+  * frames — priced once per call, and only when the context's total
+  * storage is over the cap — and evicts them oldest-first while that
+  * sum exceeds `spark.graft.pins.maxBytes` (default 4x the driver JVM's
+  * max heap — far above anything the bench suite persists, so local
+  * behavior is unchanged; set it to a fraction of cluster storage in
+  * production).
   * Another session's cache, or the caller's own non-pin cache, does not
   * count: pins can only give back pin bytes, so charging them for
   * storage they cannot release would evict every pin on each call and
@@ -57,21 +59,23 @@ private[graft] object Pins {
     s.conf.getOption(MaxBytesConf).map(_.toLong)
       .getOrElse(4L * Runtime.getRuntime.maxMemory)
 
-  /** Storage bytes (memory + disk tier) the given pinned frames hold:
-    * each frame's cache RDD, looked up in the driver's storage status.
-    * Frames that share one cache entry count once; a cache not yet
-    * materialized holds nothing.
+  /** Storage bytes (memory + disk tier) each pinned frame's cache holds,
+    * in frame order. A cache several frames share is charged once, to
+    * the oldest of them — the eviction that releases it. A cache not
+    * yet materialized holds nothing.
     */
-  private def pinnedBytes(s: SparkSession, frames: Seq[DataFrame]): Long = {
+  private def frameBytes(s: SparkSession, frames: Seq[DataFrame],
+                         stored: Map[Int, Long]): Seq[Long] = {
     val cache = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
-    val rdds = frames.flatMap(f => cache.lookupCachedData(
-        f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]))
+    val charged = scala.collection.mutable.Set.empty[Int]
+    frames.map(f => cache.lookupCachedData(
+        f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
       .map(_.cachedRepresentation.cacheBuilder)
       .filter(_.isCachedColumnBuffersLoaded)
-      .map(_.cachedColumnBuffers.id).toSet
-    s.sparkContext.getRDDStorageInfo
-      .collect { case i if rdds(i.id) => i.memSize + i.diskSize }.sum
+      .map(_.cachedColumnBuffers.id)
+      .filter(charged.add)
+      .flatMap(stored.get).getOrElse(0L))
   }
 
   @annotation.tailrec
@@ -81,11 +85,20 @@ private[graft] object Pins {
     val pinned = mine.synchronized {
       if (mine.open) {
         if (mine.frames.size >= MaxPerSession) mine.frames.remove(0).unpersist()
-        // byte bound: evict oldest-first (blocking, so the next check
-        // sees the freed bytes) while this session's pins exceed the cap
+        // byte bound: evict oldest-first while this session's pins
+        // exceed the cap. The context's total storage bounds the pins'
+        // share, so only a total over the cap prices the pins one by one
         val cap = maxBytes(s)
-        while (mine.frames.nonEmpty && pinnedBytes(s, mine.frames.toSeq) > cap)
-          mine.frames.remove(0).unpersist(blocking = true)
+        val stored = s.sparkContext.getRDDStorageInfo
+          .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+        if (stored.values.sum > cap) {
+          val bytes = frameBytes(s, mine.frames.toSeq, stored).toBuffer
+          var total = bytes.sum
+          while (mine.frames.nonEmpty && total > cap) {
+            total -= bytes.remove(0)
+            mine.frames.remove(0).unpersist()
+          }
+        }
         mine.frames += df
       }
       mine.open

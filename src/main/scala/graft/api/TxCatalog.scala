@@ -39,13 +39,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * per-relation isolation `spark.read` promises.
   *
   * `format("txtable")` reads and `USING txtable` session-catalog tables
-  * resolve to the same [[TxV2Table]] through [[TxTableSource]] (the
-  * TableProvider); this catalog adds what only a catalog can: warehouse
-  * identifiers, CREATE/REPLACE/ALTER/DROP, namespaces, `CALL`
-  * procedures and `readStream`/`writeStream` by table name.
+  * resolve to the same [[TxSnapshotTable]] read core through
+  * [[TxTableSource]] (the TableProvider); this catalog adds what only a
+  * catalog can: warehouse identifiers, CREATE/REPLACE/ALTER/DROP,
+  * namespaces, SQL DELETE/UPDATE/MERGE/TRUNCATE, `CALL` procedures and
+  * `readStream`/`writeStream` by table name.
   *
-  * Reference anchor: the
-  * reference's tables are named entries in a catalog JSON resolved to
+  * Reference anchor: the reference's tables are named entries in a catalog JSON resolved to
   * parquet paths (catalog.py:18, tables.py:62) — here the resolution
   * is a Spark catalog plugin and the parquet paths are transactional.
   */
@@ -515,9 +515,10 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
-/** One txtable snapshot as a DSv2 [[Table]] — the table behind every
-  * batch read, whether by catalog identifier, `format("txtable")` or a
-  * `USING txtable` session table ([[TxProvidedTable]]). Reads plan
+/** One txtable snapshot as a DSv2 [[Table]] — the batch-read core every
+  * route shares: `format("txtable")` reads and `USING txtable` session
+  * tables ([[TxProvidedTable]]) use it as is, and the catalog's
+  * [[TxV2Table]] adds the row-level DML surface on top. Reads plan
   * through Spark's OWN `ParquetScanBuilder` over a commit-log-backed
   * file index ([[GraftTxParquetIndex]]): native vectorized scan,
   * log-metadata file pruning, parquet row-group pushdown. Writes route
@@ -526,11 +527,9 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
   * [[TxTable.overwrite]] commit), which keeps SQL DML off Spark's
   * destructive native file-write path.
   */
-class TxV2Table(spark: SparkSession, val path: String, ident: String,
-                pinned: Option[Long], dvDml: Boolean = false)
-    extends Table with SupportsRead with SupportsWrite
-    with SupportsDeleteV2 with SupportsMetadataColumns
-    with SupportsRowLevelOperations {
+class TxSnapshotTable(spark: SparkSession, val path: String, ident: String,
+                      pinned: Option[Long])
+    extends Table with SupportsRead with SupportsWrite {
 
   private[api] lazy val snapVersion: Long =
     pinned.getOrElse(TxTable.latestVersion(spark, path))
@@ -544,18 +543,9 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
     * DV-free tables, which keep the native columnar plan. */
   private[api] lazy val dvPositions: Map[String, Array[Long]] =
     TxTable.delPositions(spark, path, state)
-  private[api] def session: SparkSession = spark
+  private[graft] def session: SparkSession = spark
 
   override def name(): String = ident
-
-  /** The effective row-level DML route: the TABLE's persisted
-    * `graft.dv_dml` property wins over the catalog-level `dv_dml`
-    * option, so the merge-on-read/copy-on-write choice travels with
-    * the table (ALTER TABLE SET TBLPROPERTIES flips it, no session
-    * conf needed) — the Delta property model.
-    */
-  private lazy val dvDmlEffective: Boolean =
-    state.props.get(TxTable.DvDmlProp).map(_.toBoolean).getOrElse(dvDml)
 
   // user-facing: logical names only, mapping metadata stripped — the
   // map is an implementation detail of the log; leaking it here would
@@ -568,6 +558,96 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
     * what scans and writers translate through. */
   private[api] lazy val mappedSchema: StructType =
     TxTable.stateSchema(spark, path, state)
+
+  /** Batch reads, plus the V1 write `INSERT INTO` plans through and the
+    * truncate `INSERT OVERWRITE` needs — nothing Spark could route
+    * around the provider's V1 write, change-feed source and txn sink. */
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ,
+      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
+
+  override def properties(): util.Map[String, String] =
+    // stored first: COMMENT + user TBLPROPERTIES round-trip from the
+    // commit log (per snapshot — time travel reads them as-of); the
+    // computed keys then overwrite any collision
+    (state.props ++ Map(
+      TableCatalog.PROP_PROVIDER -> "txtable",
+      TableCatalog.PROP_LOCATION -> path,
+      "version" -> snapVersion.toString,
+      // merge-on-read observability: >0 means reads apply position
+      // deletes; CALL gx.system.compact_small purges
+      "position_delete_files" -> state.dels.size.toString)).asJava
+
+  /** Column names the scans SYNTHESIZE per row instead of reading from
+    * the files — the catalog table's `_file`/`_pos` metadata columns.
+    * None here: a data column of either name reads as data. */
+  private[api] def provenanceCols: Set[String] = Set.empty
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+      : ScanBuilder = {
+    // a DV-bearing snapshot cannot use the native columnar parquet
+    // scan (nothing there can drop (file, position) rows), and a
+    // column-MAPPED snapshot cannot either (the native builder reads
+    // files by logical names; a renamed column would silently
+    // null-fill): both route through the TxFileScan builder, which
+    // keeps vectorized batches + parquet row-group pushdown (filters
+    // and read schema translated to physical names). DV-free unmapped
+    // tables — the steady state; compact/optimize purge both — keep
+    // the native plan.
+    if (state.dels.nonEmpty || TxTable.isMapped(state))
+      return new TxDvScanBuilder(spark, this, options)
+    val index = new GraftTxParquetIndex(spark, new Path(path),
+      state.files.map(f => f -> fileStatuses(f)),
+      dataFilters => {
+        val kept = TxTableRelation.keptFiles(state, dataFilters)
+        TxTableSource.lastScanFilesByPath.put(path, kept)
+        kept.toSet
+      })
+    GraftV2Bridge.parquetScanBuilder(spark, index, schema, options,
+      provenanceCols,
+      // a required schema carrying `_file` (runtime group filtering's
+      // matching-rows subquery) switches to the row-based file scan,
+      // file-pruned by the same log constraints
+      (rs, pushed) => {
+        val (ranges, points, strRanges) = TxTableRelation.constraints(pushed)
+        new TxFileScan(spark, this,
+          TxTable.prunedFiles(state, ranges, points, strRanges), rs)
+      },
+      // batch scans pass through untouched in behavior; the wrapper
+      // only ADDS toMicroBatchStream so readStream.table(...) works
+      ps => new TxStreamCapableScan(spark, this, ps, options))
+  }
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    require(pinned.isEmpty,
+      s"cannot write to a time-travel snapshot of $path " +
+        s"(VERSION/TIMESTAMP AS OF pins version $snapVersion; " +
+        "writes target the head)")
+    new TxV1WriteBuilder(spark, path, info)
+  }
+
+  override def toString: String = s"${getClass.getSimpleName}($ident@v$snapVersion)"
+}
+
+/** A [[TxCatalog]] table: the [[TxSnapshotTable]] read core plus the
+  * catalog-only surface — streaming by table name, SQL `DELETE` /
+  * `UPDATE` / `MERGE` (copy-on-write or merge-on-read), `TRUNCATE`,
+  * and the `_file`/`_pos` metadata columns those rewrites key on.
+  */
+class TxV2Table(spark: SparkSession, path: String, ident: String,
+                pinned: Option[Long], dvDml: Boolean = false)
+    extends TxSnapshotTable(spark, path, ident, pinned)
+    with SupportsDeleteV2 with SupportsMetadataColumns
+    with SupportsRowLevelOperations {
+
+  /** The effective row-level DML route: the TABLE's persisted
+    * `graft.dv_dml` property wins over the catalog-level `dv_dml`
+    * option, so the merge-on-read/copy-on-write choice travels with
+    * the table (ALTER TABLE SET TBLPROPERTIES flips it, no session
+    * conf needed) — the Delta property model.
+    */
+  private lazy val dvDmlEffective: Boolean =
+    state.props.get(TxTable.DvDmlProp).map(_.toBoolean).getOrElse(dvDml)
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(
@@ -584,18 +664,6 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
       // already commits; non-additive changes (type widening) keep
       // rejecting loudly through the same alterTable policy
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
-
-  override def properties(): util.Map[String, String] =
-    // stored first: COMMENT + user TBLPROPERTIES round-trip from the
-    // commit log (per snapshot — time travel reads them as-of); the
-    // computed keys then overwrite any collision
-    (state.props ++ Map(
-      TableCatalog.PROP_PROVIDER -> "txtable",
-      TableCatalog.PROP_LOCATION -> path,
-      "version" -> snapVersion.toString,
-      // merge-on-read observability: >0 means reads apply position
-      // deletes; CALL gx.system.compact_small purges
-      "position_delete_files" -> state.dels.size.toString)).asJava
 
   /** `_file` is the row-level rewrite's GROUP COLUMN (runtime group
     * filtering resolves it against this declaration) and doubles as
@@ -622,6 +690,9 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
         override def isNullable: Boolean = false
       })
 
+  override private[api] def provenanceCols: Set[String] =
+    Set(TxRowLevel.FileCol, TxRowLevel.PosCol)
+
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
     // defense-in-depth against tables created OUTSIDE validateTableSpec
@@ -630,36 +701,7 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
     // composed builder and shadowed by synthesized provenance — fail
     // loudly at scan construction instead
     schema.fieldNames.foreach(TxRowLevel.requireNotReserved)
-    // a DV-bearing snapshot cannot use the native columnar parquet
-    // scan (nothing there can drop (file, position) rows), and a
-    // column-MAPPED snapshot cannot either (the native builder reads
-    // files by logical names; a renamed column would silently
-    // null-fill): both route through the TxFileScan builder, which
-    // keeps vectorized batches + parquet row-group pushdown (filters
-    // and read schema translated to physical names). DV-free unmapped
-    // tables — the steady state; compact/optimize purge both — keep
-    // the native plan.
-    if (state.dels.nonEmpty || TxTable.isMapped(state))
-      return new TxDvScanBuilder(spark, this, options)
-    val index = new GraftTxParquetIndex(spark, new Path(path),
-      state.files.map(f => f -> fileStatuses(f)),
-      dataFilters => {
-        val kept = TxTableRelation.keptFiles(state, dataFilters)
-        TxTableSource.lastScanFilesByPath.put(path, kept)
-        kept.toSet
-      })
-    GraftV2Bridge.parquetScanBuilder(spark, index, schema, options,
-      // a required schema carrying `_file` (runtime group filtering's
-      // matching-rows subquery) switches to the row-based file scan,
-      // file-pruned by the same log constraints
-      (rs, pushed) => {
-        val (ranges, points, strRanges) = TxTableRelation.constraints(pushed)
-        new TxFileScan(spark, this,
-          TxTable.prunedFiles(state, ranges, points, strRanges), rs)
-      },
-      // batch scans pass through untouched in behavior; the wrapper
-      // only ADDS toMicroBatchStream so readStream.table(...) works
-      ps => new TxStreamCapableScan(spark, this, ps, options))
+    super.newScanBuilder(options)
   }
 
   override def newRowLevelOperationBuilder(
@@ -675,14 +717,6 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
     () => if (dvDmlEffective)
             new TxDeltaRowLevelOperation(spark, this, info.command)
           else new TxRowLevelOperation(spark, this, info.command)
-  }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(pinned.isEmpty,
-      s"cannot write to a time-travel snapshot of $path " +
-        s"(VERSION/TIMESTAMP AS OF pins version $snapVersion; " +
-        "writes target the head)")
-    new TxV1WriteBuilder(spark, path, info)
   }
 
   // ---- SQL DELETE FROM: the file-level transactional delete ----
@@ -729,8 +763,6 @@ class TxV2Table(spark: SparkSession, val path: String, ident: String,
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
     true
   }
-
-  override def toString: String = s"TxV2Table($ident@v$snapVersion)"
 }
 
 object TxRowLevel {
@@ -914,7 +946,7 @@ case class TxFileSplit(abs: String, start: Long, length: Long,
   * keeps whole-file reads: its positions come from a running count a
   * skipped row group would desynchronize.
   */
-class TxDvScanBuilder(spark: SparkSession, table: TxV2Table,
+class TxDvScanBuilder(spark: SparkSession, table: TxSnapshotTable,
                       options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -962,7 +994,7 @@ class TxDvScanBuilder(spark: SparkSession, table: TxV2Table,
   *    parquet row filtering (the rewrite must carry unaffected rows;
   *    a skipped row group would desynchronize the count).
   */
-class TxFileScan(spark: SparkSession, table: TxV2Table,
+class TxFileScan(spark: SparkSession, table: TxSnapshotTable,
                  candidates: Seq[String], required: StructType,
                  dels: Map[String, Array[Long]] = Map.empty,
                  pushed: Array[org.apache.spark.sql.sources.Filter] =
@@ -998,11 +1030,14 @@ class TxFileScan(spark: SparkSession, table: TxV2Table,
 
   private[api] def relFiles: Seq[String] = files.map(_.rel)
 
-  private val dataRead =
-    StructType(required.filterNot(f =>
-      f.name == TxRowLevel.FileCol || f.name == TxRowLevel.PosCol))
-  private def needsFile = required.exists(_.name == TxRowLevel.FileCol)
-  private def needsPos = required.exists(_.name == TxRowLevel.PosCol)
+  // `_file`/`_pos` are synthesized only where the table declares them
+  // as metadata columns; elsewhere a column of that name is data
+  private val meta = table.provenanceCols
+  private val dataRead = StructType(required.filterNot(f => meta(f.name)))
+  private def needsFile =
+    meta(TxRowLevel.FileCol) && required.exists(_.name == TxRowLevel.FileCol)
+  private def needsPos =
+    meta(TxRowLevel.PosCol) && required.exists(_.name == TxRowLevel.PosCol)
 
   override def readSchema(): StructType = required
 
@@ -1010,7 +1045,8 @@ class TxFileScan(spark: SparkSession, table: TxV2Table,
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions
+    if (!meta(TxRowLevel.FileCol)) Array.empty
+    else Array(org.apache.spark.sql.connector.expressions.Expressions
       .column(TxRowLevel.FileCol))
 
   /** Runtime group filtering: the engine hands `_file IN (paths that
@@ -1294,7 +1330,7 @@ class TxRowReaderFactory(
   * statistics) and ADDS the micro-batch stream —
   * `spark.readStream.table("gx.t")`.
   */
-class TxStreamCapableScan(spark: SparkSession, table: TxV2Table,
+class TxStreamCapableScan(spark: SparkSession, table: TxSnapshotTable,
                           delegate: org.apache.spark.sql.connector.read.Scan,
                           options: CaseInsensitiveStringMap)
     extends org.apache.spark.sql.connector.read.Scan
@@ -1352,7 +1388,7 @@ class TxStreamCapableScan(spark: SparkSession, table: TxV2Table,
   *    `maxVersionsPerTrigger` caps each batch in commit-versions, and
   *    the restored committed offset always enters `latestOffset`.
   */
-class TxMicroBatchStream(spark: SparkSession, table: TxV2Table,
+class TxMicroBatchStream(spark: SparkSession, table: TxSnapshotTable,
                          required: StructType,
                          options: CaseInsensitiveStringMap)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -1986,10 +2022,6 @@ class TxV1WriteBuilder(spark: SparkSession, path: String,
           replaceCond match {
             case Some(cond) => TxTable.replaceWhere(spark, path, cond, data)
             case None if overwriteAll || overwrite =>
-              TxTable.overwrite(spark, path, data)
-            case None if TxTable.latestVersion(spark, path) == 0 =>
-              // a CTAS into a fresh `USING txtable LOCATION`: the first
-              // write defines the table (createRelation's Append rule)
               TxTable.overwrite(spark, path, data)
             case None if clustered =>
               // indexed ingest parity with the V1 sink's

@@ -1200,7 +1200,7 @@ object TxTable {
     * serial round-trips. A file the log references but the store lost
     * fails loudly with the commit-log framing (the silent alternative
     * is a partial scan reading as a smaller table). Used by the
-    * [[TxV2Table]] scans.
+    * [[TxSnapshotTable]] scans.
     */
   private[graft] def liveFileStatuses(spark: SparkSession, path: String,
                                       st: State)

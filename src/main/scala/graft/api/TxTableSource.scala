@@ -3,8 +3,9 @@ package graft.api
 import java.util
 
 import org.apache.spark.sql.{SparkSession, SQLContext}
-import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.GraftV2Bridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -23,23 +24,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * ONE connector: as a [[TableProvider]], every batch read — by format,
   * through a `USING txtable` session-catalog table, or a `CREATE
-  * TEMPORARY VIEW … USING txtable` — resolves to the same [[TxV2Table]]
-  * the [[TxCatalog]] serves, pinned at `versionAsOf`: Spark's native
-  * vectorized parquet scan over the commit log's live files, log-metadata
-  * file pruning, parquet row-group pushdown, and the columnar
-  * deletion-vector / column-mapping scan where the snapshot needs it.
+  * TEMPORARY VIEW … USING txtable` — resolves to the same
+  * [[TxSnapshotTable]] read core the [[TxCatalog]]'s tables build on,
+  * pinned at `versionAsOf`: Spark's native vectorized parquet scan over
+  * the commit log's live files, log-metadata file pruning, parquet
+  * row-group pushdown, and the columnar deletion-vector /
+  * column-mapping scan where the snapshot needs it.
   *
-  * The provided table declares only `BATCH_READ`, `V1_BATCH_WRITE` and
-  * `TRUNCATE` (what SQL `INSERT OVERWRITE` plans through). Spark falls
-  * back to a provider's V1 interfaces whenever `BATCH_WRITE`,
-  * `MICRO_BATCH_READ` or `STREAMING_WRITE` is missing (the Delta
-  * `DeltaTableV2` pattern), so `df.write`, `readStream` and `writeStream`
-  * by format keep the V1 halves below: [[CreatableRelationProvider]]
-  * (SaveModes → transactional verbs), the change-feed [[TxTableStreamSource]]
-  * and the txn-tagged [[TxTableSink]]. SQL `INSERT INTO` / `INSERT
-  * OVERWRITE` on a session table plan as V2 appends/overwrites through
-  * [[TxV1WriteBuilder]] — one commit each, never Spark's native file
-  * write.
+  * The provided table ([[TxProvidedTable]]) declares only `BATCH_READ`,
+  * `V1_BATCH_WRITE` and `TRUNCATE` (what SQL `INSERT OVERWRITE` plans
+  * through). Spark falls back to a provider's V1 interfaces whenever
+  * `BATCH_WRITE`, `MICRO_BATCH_READ` or `STREAMING_WRITE` is missing
+  * (the Delta `DeltaTableV2` pattern), so `df.write`, `readStream` and
+  * `writeStream` by format keep the V1 halves below:
+  * [[CreatableRelationProvider]] (SaveModes → transactional verbs), the
+  * change-feed [[TxTableStreamSource]] and the txn-tagged
+  * [[TxTableSink]]. SQL `INSERT INTO` / `INSERT OVERWRITE` on a session
+  * table plan as V2 appends/overwrites through [[TxV1WriteBuilder]] —
+  * one commit each, never Spark's native file write.
   *
   * Correctness stance: file pruning is an optimization, never a
   * correctness filter — a file is dropped only when the log's metadata
@@ -71,6 +73,8 @@ class TxTableSource extends TableProvider with CreatableRelationProvider
     val path = Option(opts.get("path")).orElse(Option(opts.get("location")))
       .getOrElse(throw new IllegalArgumentException(
         "txtable needs a path: spark.read.format(\"txtable\").load(path)"))
+    // TableProvider hands no session: Spark resolves the table while
+    // analyzing the reading session's plan, with that session active
     val spark = SparkSession.active
     val pinned = Option(opts.get("versionAsOf"))
       .map(v => TxTable.requireVersion(spark, path, v.toLong))
@@ -218,33 +222,28 @@ class TxTableSource extends TableProvider with CreatableRelationProvider
 }
 
 /** The table behind `format("txtable")` reads and `USING txtable`
-  * session-catalog tables: the catalog's [[TxV2Table]], cut to the
-  * capabilities Spark must not route around the V1 write and streaming
-  * halves of [[TxTableSource]]. `declared` is the schema Spark holds
-  * for it — empty for format reads, the metastore's for a session
-  * table, the query's for a CTAS into a fresh `LOCATION` (and the
-  * frame's on `df.write`, which only asks for capabilities and then
+  * session-catalog tables: the [[TxSnapshotTable]] read core the
+  * catalog's [[TxV2Table]] builds on, without the catalog-only DML
+  * surface (no SQL DELETE/UPDATE/MERGE, no TRUNCATE TABLE — Spark
+  * refuses both itself — and no `_file`/`_pos` metadata columns, so a
+  * data column of either name reads as data). `declared` is the schema
+  * Spark holds for it — empty for format reads, the metastore's for a
+  * session table, the query's for a CTAS into a fresh `LOCATION` (and
+  * the frame's on `df.write`, which only asks for capabilities and then
   * writes through V1):
   *
   *  - a path with no log yet serves `declared`, so a CTAS can plan its
-  *    append (the write then lands version 1 as an overwrite);
+  *    write, and the first write claims version 1;
   *  - a non-empty `declared` that differs from the log's schema fails
   *    analysis with Spark's user-schema mismatch error — the check V1
   *    `readDataSourceTable` applies — which is how an `ALTER TABLE … ADD
   *    COLUMNS` (it rewrites only the metastore, never the log) surfaces.
   *    The check runs when the schema is first read, not in `getTable`,
   *    so `DROP TABLE` (which loads the table) still works.
-  *
-  * SQL `TRUNCATE TABLE` stays refused: it is not a txtable verb on this
-  * route (`INSERT OVERWRITE` and [[TxTable.overwrite]] are).
   */
 private[api] class TxProvidedTable(spark: SparkSession, path: String,
                                    pinned: Option[Long], declared: StructType)
-    extends TxV2Table(spark, path, s"txtable.`$path`", pinned) {
-
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
+    extends TxSnapshotTable(spark, path, s"txtable.`$path`", pinned) {
 
   override lazy val schema: StructType =
     if (snapVersion == 0) {
@@ -256,8 +255,25 @@ private[api] class TxProvidedTable(spark: SparkSession, path: String,
       logged
     }
 
-  override def truncateTable(): Boolean =
-    throw GraftV2Bridge.truncateUnsupported(this)
+  /** On a path with no log yet the first write defines the table: it
+    * claims exactly version 1 ([[TxTable.createExactlyV1]], the
+    * catalog's CTAS race discipline). A writer that loses that claim
+    * lands on top of the winner as the statement asked — an append, or
+    * an overwrite for `INSERT OVERWRITE` — so no rows are lost.
+    */
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    if (snapVersion > 0) super.newWriteBuilder(info)
+    else new WriteBuilder with SupportsTruncate {
+      private var overwrite = false
+      override def truncate(): WriteBuilder = { overwrite = true; this }
+      override def build(): Write = new V1Write {
+        override def toInsertableRelation: InsertableRelation = (data, _) =>
+          if (!TxTable.createExactlyV1(spark, path, data)) {
+            if (overwrite) TxTable.overwrite(spark, path, data)
+            else TxTable.append(spark, path, data)
+          }
+      }
+    }
 }
 
 /** A streaming offset that IS a commit version — the natural cursor of
@@ -398,7 +414,7 @@ object TxTableSource {
 }
 
 /** The pushed-filter → log-constraint mapping, shared by the
-  * [[TxV2Table]] scans and the specs.
+  * [[TxSnapshotTable]] scans and the specs.
   */
 object TxTableRelation {
 
@@ -408,7 +424,7 @@ object TxTableRelation {
     * would see), weaken into the log's constraint shapes, keep files
     * whose recorded metadata can satisfy the conjunction.
     * Untranslatable predicates contribute no constraint —
-    * conservative. ONE prune implementation for every [[TxV2Table]]
+    * conservative. ONE prune implementation for every [[TxSnapshotTable]]
     * scan.
     */
   private[graft] def keptFiles(

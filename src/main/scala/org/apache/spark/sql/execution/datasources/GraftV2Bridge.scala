@@ -25,24 +25,25 @@ object GraftV2Bridge {
     * non-empty PushedFilters.
     *
     * `fileColScan` handles the ONE shape parquet cannot serve: a
-    * required schema containing the `_file` metadata column (the
-    * row-level rewrite's group id — Spark's runtime group filtering
-    * plans its matching-rows subquery against the ORIGINAL table
-    * relation projecting `_file`). Those scans switch to the caller's
-    * row-based file scan; every `_file`-free scan stays native
-    * columnar parquet.
+    * required schema containing one of the `metaCols` metadata columns
+    * (`_file` is the row-level rewrite's group id — Spark's runtime
+    * group filtering plans its matching-rows subquery against the
+    * ORIGINAL table relation projecting `_file`). Those scans switch to
+    * the caller's row-based file scan; every other scan stays native
+    * columnar parquet. Empty `metaCols`: a plain parquet scan.
     */
   def parquetScanBuilder(spark: SparkSession,
                          index: PartitioningAwareFileIndex,
                          dataSchema: StructType,
                          options: CaseInsensitiveStringMap,
+                         metaCols: Set[String],
                          fileColScan: (StructType, Array[org.apache.spark.sql.sources.Filter]) =>
                            org.apache.spark.sql.connector.read.Scan,
                          wrap: org.apache.spark.sql.connector.read.Scan =>
                            org.apache.spark.sql.connector.read.Scan = identity)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     new GraftMetaAwareParquetScanBuilder(spark, index, dataSchema, options,
-      fileColScan, wrap)
+      metaCols, fileColScan, wrap)
 
   /** Row-based parquet reader for the row-level-operation scan (the
     * copy-on-write rewrite reads WHOLE files — parquet row filtering
@@ -186,19 +187,14 @@ object GraftV2Bridge {
       throw org.apache.spark.sql.errors.QueryCompilationErrors
         .userSpecifiedSchemaMismatchActualSchemaError(declared, actual)
 
-  /** Spark's own "table does not support truncates" `AnalysisException`. */
-  def truncateUnsupported(table: org.apache.spark.sql.connector.catalog.Table)
-      : Throwable =
-    org.apache.spark.sql.errors.QueryCompilationErrors
-      .tableDoesNotSupportTruncatesError(table)
 }
 
-/** A scan builder that tolerates the `_file` metadata column by
+/** A scan builder that tolerates the `metaCols` metadata columns by
   * COMPOSITION over Spark's [[v2.parquet.ParquetScanBuilder]]: column
-  * pruning strips `_file` before the parquet machinery (which would
+  * pruning strips them before the parquet machinery (which would
   * demand a physical column of that name from every footer), every
   * other call delegates verbatim, and a build whose required schema
-  * carries `_file` switches to the caller's row-based scan factory.
+  * carries one switches to the caller's row-based scan factory.
   * All selection policy lives in the graft-side callback; this class
   * exists because the pushdown interface file sources speak
   * (`SupportsPushDownCatalystFilters`) is `private[sql]`.
@@ -208,6 +204,7 @@ class GraftMetaAwareParquetScanBuilder(
     index: PartitioningAwareFileIndex,
     dataSchema: StructType,
     options: CaseInsensitiveStringMap,
+    metaCols: Set[String],
     fileColScan: (StructType, Array[org.apache.spark.sql.sources.Filter]) =>
       org.apache.spark.sql.connector.read.Scan,
     wrap: org.apache.spark.sql.connector.read.Scan =>
@@ -217,15 +214,14 @@ class GraftMetaAwareParquetScanBuilder(
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
-  // the builder PRUNES '_file'/'_pos' before the parquet delegate and
-  // ROUTES reads requiring them to the row branch — a DATA column of
-  // either name would be silently replaced by synthesized provenance,
+  // the builder PRUNES the metadata columns before the parquet delegate
+  // and ROUTES reads requiring them to the row branch — a DATA column of
+  // such a name would be silently replaced by synthesized provenance,
   // so reject it loudly here (policy check mirrored graft-side in
   // TxRowLevel.requireNotReserved; this is the last line of defense)
-  require(!dataSchema.fieldNames.exists(n => n == "_file" || n == "_pos"),
+  require(!dataSchema.fieldNames.exists(metaCols),
     s"data schema carries a reserved metadata column name: " +
-      dataSchema.fieldNames.filter(n => n == "_file" || n == "_pos")
-        .mkString(", "))
+      dataSchema.fieldNames.filter(metaCols).mkString(", "))
 
   private val delegate = v2.parquet.ParquetScanBuilder(
     spark, index, dataSchema, dataSchema, options)
@@ -241,7 +237,7 @@ class GraftMetaAwareParquetScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit = {
     requested = Some(requiredSchema)
     delegate.pruneColumns(StructType(
-      requiredSchema.filterNot(f => f.name == "_file" || f.name == "_pos")))
+      requiredSchema.filterNot(f => metaCols(f.name))))
   }
 
   override def pushAggregation(
@@ -254,7 +250,7 @@ class GraftMetaAwareParquetScanBuilder(
 
   override def build(): org.apache.spark.sql.connector.read.Scan =
     requested match {
-      case Some(rs) if rs.exists(f => f.name == "_file" || f.name == "_pos") =>
+      case Some(rs) if rs.exists(f => metaCols(f.name)) =>
         fileColScan(rs, org.apache.spark.sql.internal.connector.PredicateUtils
           .toV1(delegate.pushedFilters))
       case _ => wrap(delegate.build())

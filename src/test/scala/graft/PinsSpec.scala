@@ -98,4 +98,27 @@ class PinsSpec extends AnyFunSuite {
     graft.Graft.clear(s)
     graft.Graft.clear(other)
   }
+
+  test("eviction stops once the session's remaining pins fit the cap") {
+    val s = spark.newSession()
+    s.conf.set(graft.api.Pins.MaxBytesConf, (100L << 10).toString)
+    // ~64 KB of incompressible doubles each: one fits the 100 KiB cap,
+    // two do not
+    def doubles(seed: Int) = s.range(8000).selectExpr(s"rand($seed) AS d$seed")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val a = doubles(5)
+    graft.api.Pins.pin(a)
+    a.count()
+    val b = doubles(6)
+    graft.api.Pins.pin(b)
+    b.count()
+    assert(a.storageLevel !== StorageLevel.NONE, "a alone fits the cap")
+    val c = s.range(10).toDF("c").persist(StorageLevel.MEMORY_AND_DISK)
+    graft.api.Pins.pin(c)
+    // giving back the oldest pin brings the rest under the cap
+    assert(a.storageLevel === StorageLevel.NONE)
+    assert(b.storageLevel !== StorageLevel.NONE,
+      "a pin is evicted only while the session's pins still exceed the cap")
+    graft.Graft.clear(s)
+  }
 }

@@ -2112,7 +2112,7 @@ class TxTableSpec extends AnyFunSuite {
     }
   }
 
-  test("format reads and USING txtable tables plan over TxV2Table") {
+  test("format reads and USING txtable tables plan over TxSnapshotTable") {
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     val t = fresh()
     val tbl = "graft_txroute_spec"
@@ -2122,17 +2122,19 @@ class TxTableSpec extends AnyFunSuite {
         case r: DataSourceV2Relation => r.table
         case other if other.getClass.getSimpleName == "LogicalRelation" => other
       }
-    def onlyTxV2(df: org.apache.spark.sql.DataFrame): Unit = {
+    // the shared snapshot core, without the catalog's DML surface
+    def onlySnapshot(df: org.apache.spark.sql.DataFrame): Unit = {
       val ts = tables(df)
-      assert(ts.size === 1 && ts.head.isInstanceOf[graft.api.TxV2Table],
-        s"must resolve to one DataSourceV2Relation over TxV2Table: $ts")
+      assert(ts.size === 1 && ts.head.isInstanceOf[graft.api.TxSnapshotTable] &&
+        !ts.head.isInstanceOf[graft.api.TxV2Table],
+        s"must resolve to one DataSourceV2Relation over TxSnapshotTable: $ts")
     }
-    onlyTxV2(spark.read.format("txtable").load(t))
-    onlyTxV2(spark.read.format("txtable").option("versionAsOf", 1).load(t))
+    onlySnapshot(spark.read.format("txtable").load(t))
+    onlySnapshot(spark.read.format("txtable").option("versionAsOf", 1).load(t))
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"CREATE TABLE $tbl USING txtable LOCATION '$t'")
     try {
-      onlyTxV2(spark.table(tbl))
+      onlySnapshot(spark.table(tbl))
       // SQL INSERT / INSERT OVERWRITE hand the frame to the transactional
       // verbs (V1Write) — Spark's native file write is not reachable
       for (stmt <- Seq(s"INSERT INTO $tbl VALUES (2, 'b')",
@@ -2144,6 +2146,76 @@ class TxTableSpec extends AnyFunSuite {
       assert(TxTable.latestVersion(spark, t) === 1L, "EXPLAIN commits nothing")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
+
+  test("USING txtable session tables refuse SQL DELETE, UPDATE and MERGE and expose no _file") {
+    val t = fresh()
+    val tbl = "graft_txnodml_spec"
+    TxTable.overwrite(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl USING txtable LOCATION '$t'")
+    try {
+      // row-level DML is the TxCatalog's: a session table has no
+      // DELETE/UPDATE/MERGE route, and Spark says so before any write
+      for (stmt <- Seq(s"DELETE FROM $tbl WHERE id = 1",
+                       s"UPDATE $tbl SET v = 'z' WHERE id = 1",
+                       s"MERGE INTO $tbl t USING (SELECT 1L AS id, 'q' AS v) s " +
+                         "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v")) {
+        val e = intercept[Exception](spark.sql(stmt).collect())
+        assert(e.getMessage.contains("not support"), s"$stmt: ${e.getMessage}")
+      }
+      intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT _file, _pos FROM $tbl").collect()
+      }
+      assert(TxTable.latestVersion(spark, t) === 1L &&
+        TxTable.read(spark, t).count() === 2L, "log and data untouched")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("format reads keep _file/_pos DATA columns as data, natively and through DVs") {
+    val t = fresh()
+    TxTable.overwrite(spark, t,
+      Seq((1L, 10L, "x"), (2L, 20L, "y"), (3L, 30L, "z")).toDF("id", "_pos", "_file"))
+    def read() = spark.read.format("txtable").load(t)
+      .filter($"_pos" >= 20L).select("id", "_pos", "_file")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    assert(read() === Seq((2L, 20L, "y"), (3L, 30L, "z")), "native scan")
+    TxTable.deleteWhereDv(spark, t, $"id" === 3L)
+    assert(TxTable.history(spark, t).last.action === "dv")
+    assert(read() === Seq((2L, 20L, "y")), "DV scan")
+  }
+
+  test("a format read from a non-active session binds that session") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val t = fresh()
+    TxTable.overwrite(spark, t, Seq((1L, "a")).toDF("id", "v"))
+    val other = spark.newSession()
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val df = other.read.format("txtable").load(t)
+    val table = df.queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation => r.table
+    }.get.asInstanceOf[graft.api.TxSnapshotTable]
+    assert(table.session eq other, "the reading session, not the thread's active one")
+    assert(df.count() === 1L)
+  }
+
+  test("the first write to a fresh LOCATION claims version 1; a losing writer lands on top") {
+    import scala.jdk.CollectionConverters._
+    val t = fresh()
+    val schema = Seq((0L, "")).toDF("id", "v").schema
+    val table = new graft.api.TxTableSource().getTable(schema, Array.empty,
+      Map("path" -> t).asJava)
+    assert(table.schema === schema, "a path with no log serves the declared schema")
+    // another writer creates the table between this statement's analysis
+    // and its write
+    TxTable.overwrite(spark, t, Seq((1L, "a")).toDF("id", "v"))
+    val write = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
+      .newWriteBuilder(null).build()
+      .asInstanceOf[org.apache.spark.sql.connector.write.V1Write]
+    write.toInsertableRelation.insert(Seq((2L, "b")).toDF("id", "v"), false)
+    assert(rows(t) === Set((1L, "a"), (2L, "b")), "neither writer's rows are lost")
+    assert(TxTable.history(spark, t).map(_.action) === Seq("overwrite", "append"))
+  }
+
 
   test("streaming sink without appId or checkpointLocation OPTION rejects loudly") {
     // a shared default appId would make two anonymous queries' txn ids
