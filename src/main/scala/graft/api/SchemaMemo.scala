@@ -2,17 +2,20 @@ package graft.api
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.types.StructType
 import graft.shelf.StatCache
 
-/** Parquet-schema memo keyed on (path, stat identity): every
-  * `spark.read.parquet` WITHOUT a user schema re-infers the schema from
-  * the footer at DataFrame construction time — pure driver-side latency,
-  * paid per query per table (profiled at ~50-100 ms per read, ~20 s
-  * serially across the 241-query suite, and it serializes further under
-  * 16 concurrent submitters). The schema is metadata, not data: it is
-  * still read from the parquet input once per (file version, JVM).
-  * Query RESULTS are never memoized — only the footer's type signature.
+/** Parquet-schema memo keyed on (path, stat identity, inference
+  * flags): every `spark.read.parquet` WITHOUT a user schema re-infers
+  * the schema at DataFrame construction time, and on one file Spark
+  * runs a one-task job just to read that file's footer (85-113 ms wall
+  * per read, local[4]). A miss on a single file decodes the footer on
+  * the calling thread instead ([[footerSchema]]: ~15 ms, no job); a
+  * directory keeps Spark's inference, which also resolves its
+  * partition columns. The schema is metadata, not data: it is read
+  * once per (file version, flags, JVM). Query RESULTS are never
+  * memoized — only the footer's type signature.
   *
   * The file version is the stat identity the shelf's [[StatCache]]
   * reads — (device, inode, size, mtime ns, ctime ns) of a file, or of
@@ -22,24 +25,31 @@ import graft.shelf.StatCache
   * unchanged name, size and reset mtime still misses. A path with no
   * `unix:*` attributes, or one that cannot be stat'ed (absent, or not a
   * local path), reads through and skips both memos.
+  *
+  * The flags are the session settings a footer without Spark's row
+  * metadata decodes under (binaryAsString, int96AsTimestamp,
+  * inferTimestampNTZ, nanosAsLong, respectUnknownTypeAnnotation): one
+  * file read under two settings gets two schemas, in one session or
+  * across sessions.
   */
 object SchemaMemo {
   private type Version = Seq[(String, StatCache.Stat)]
+  private type Key = (String, Version, GraftParquetFooter.Flags)
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Version), StructType]()
+  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, StructType]()
 
   /** Relation memo (round 22): even with the schema supplied,
     * `s.read.schema(sch).parquet(path)` re-runs DataSource resolution
     * and builds a fresh InMemoryFileIndex (a file listing) per
     * DataFrame construction. A DataFrame is an immutable plan —
     * callers only derive new frames from it — so the RELATION frame
-    * itself is memoized per (session, path, version): one resolution
-    * per (file version, session), and any rewrite misses exactly like
-    * the schema memo. Plans only, never results; each session's table
-    * is one [[SessionMemo]] entry, bounded by #tables x #dirs and
-    * cleared wholesale if it ever exceeds the cap (a long-lived server
-    * iterating hundreds of dirs must not accrete file indexes).
+    * itself is memoized per (session, path, version, flags): one
+    * resolution per (file version, flags, session), and any rewrite
+    * misses exactly like the schema memo. Plans only, never results;
+    * each session's table is one [[SessionMemo]] entry, bounded by
+    * #tables x #dirs and cleared wholesale if it ever exceeds the cap
+    * (a long-lived server iterating hundreds of dirs must not accrete
+    * file indexes).
     */
   private val DfMemoCap = 512
 
@@ -69,14 +79,23 @@ object SchemaMemo {
            _: java.nio.file.InvalidPathException => None
     }
 
+  /** The schema `spark.read.parquet(file)` infers for one parquet file,
+    * decoded from its footer on the calling thread: no Spark job.
+    */
+  def footerSchema(s: SparkSession, file: String): StructType =
+    GraftParquetFooter.schema(s, file, GraftParquetFooter.flags(s))
+
   def read(s: SparkSession, path: String): DataFrame = version(path) match {
     case None => s.read.parquet(path)
     case Some(v) =>
+      val flags = GraftParquetFooter.flags(s)
       val rels = SessionMemo(s, "schemaMemo.relations", ())(
-        new java.util.concurrent.ConcurrentHashMap[(String, Version), DataFrame]())
+        new java.util.concurrent.ConcurrentHashMap[Key, DataFrame]())
       if (rels.size() > DfMemoCap) rels.clear()
-      rels.computeIfAbsent((path, v), _ => {
-        val sch = memo.computeIfAbsent((path, v), _ => s.read.parquet(path).schema)
+      rels.computeIfAbsent((path, v, flags), key => {
+        val sch = memo.computeIfAbsent(key, _ =>
+          if (Files.isRegularFile(Paths.get(path))) GraftParquetFooter.schema(s, path, flags)
+          else s.read.parquet(path).schema)
         s.read.schema(sch).parquet(path)
       })
   }

@@ -819,9 +819,10 @@ object TxTable {
   /** Footer-derived schemas, keyed by (path, file) — CONTENT-ADDRESSED
     * (staging names are never reused, files are immutable), so a hit
     * is always exact. Without it EVERY catalog statement on a
-    * non-evolved table pays a driver-side `spark.read.parquet` footer
-    * resolution (~0.1 s + one object-store GET) for a schema that
-    * cannot have changed.
+    * non-evolved table pays a footer decode (one object-store GET) for
+    * a schema that cannot have changed. Staged files are Spark-written
+    * and carry Spark's row-metadata schema, which no session parquet
+    * flag changes, so the key needs no flags.
     */
   private val footerSchemaCache =
     new java.util.LinkedHashMap[(String, String),
@@ -832,7 +833,8 @@ object TxTable {
     }
 
   /** One staged file's footer schema through the content-addressed
-    * cache (staging names are never reused, files are immutable).
+    * cache (staging names are never reused, files are immutable); a
+    * miss decodes the footer on the driver, no Spark job.
     * Mapping metadata is defensively stripped: the mapping is defined
     * by the COMMIT LOG alone (schemaB64); a footer must never re-state
     * it (a user df could carry stale graft.physical metadata).
@@ -844,8 +846,7 @@ object TxTable {
       val hit = footerSchemaCache.get(key)
       if (hit != null) return hit
     }
-    val s = TxMapping.stripMapping(
-      spark.read.parquet(s"$path/$relFile").schema)
+    val s = TxMapping.stripMapping(SchemaMemo.footerSchema(spark, s"$path/$relFile"))
     footerSchemaCache.synchronized { footerSchemaCache.put(key, s); () }
     s
   }

@@ -2,6 +2,7 @@ package graft.shelf
 
 import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.api.SchemaMemo
 
 /** Interactive query surface (`shelf db`): a view per table over its
   * parquet plus unique short aliases, then arbitrary Spark SQL; a bare
@@ -23,28 +24,22 @@ object Db {
     spark.sql(sql)
   }
 
-  /** names ∈ short | full | both (__init__.py:136-140, 381-387). With
-    * `both`, an alias is registered over its table's full-name frame:
-    * a second `spark.read.parquet` would infer the same schema again.
+  /** names ∈ short | full | both (__init__.py:136-140, 381-387). Each
+    * view reads its table through the stat-keyed [[SchemaMemo]]: no
+    * schema-inference job, and an alias shares its table's frame.
     */
   def registerViews(spark: SparkSession, root: Path, tablePaths: Seq[String],
                     names: String): Unit = {
     val read = (path: String) =>
-      spark.read.parquet(Tables.tablePath(root, StepURI.table(path)).toString)
-    val full: Map[String, DataFrame] =
-      if (names == "full" || names == "both")
-        tablePaths.map { p =>
-          val df = read(p)
-          df.createOrReplaceTempView(Naming.pathToSnake(p))
-          Naming.pathToSnake(p) -> df
-        }.toMap
-      else Map.empty
-    if (names == "short" || names == "both")
+      SchemaMemo.read(spark, Tables.tablePath(root, StepURI.table(path)).toString)
+    if (names == "full" || names == "both")
+      tablePaths.foreach(p => read(p).createOrReplaceTempView(Naming.pathToSnake(p)))
+    if (names == "short" || names == "both") {
+      val bySnake = tablePaths.map(p => Naming.pathToSnake(p) -> p).toMap
       Naming.tableAliases(tablePaths).foreach { case (alias, tableName) =>
-        full.get(tableName)
-          .orElse(tablePaths.find(p => Naming.pathToSnake(p) == tableName).map(read))
-          .foreach(_.createOrReplaceTempView(alias))
+        bySnake.get(tableName).foreach(p => read(p).createOrReplaceTempView(alias))
       }
+    }
   }
 
   def toJsonRecords(df: DataFrame): Seq[String] =

@@ -3,6 +3,7 @@ package graft.shelf
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.api.SchemaMemo
 
 /** Table build step: dispatch (SQL / Scala step / subprocess escape
   * hatch), single-parquet-file output with atomic rename, metadata
@@ -184,11 +185,12 @@ object Tables {
     if (uri.scheme == "table") tablePath(root, uri)
     else Snapshots.load(root, uri).dataPath(root)
 
-  /** Read a dependency by extension: parquet tables, csv/json/text
-    * snapshots.
+  /** Read a dependency by extension: parquet tables (through the
+    * stat-keyed [[graft.api.SchemaMemo]]: no schema-inference job),
+    * csv/json/text snapshots.
     */
   def readAny(spark: SparkSession, path: String): DataFrame =
-    if (path.endsWith(".parquet")) spark.read.parquet(path)
+    if (path.endsWith(".parquet")) SchemaMemo.read(spark, path)
     else if (path.endsWith(".csv"))
       spark.read.option("header", "true").option("inferSchema", "true").csv(path)
     else if (path.endsWith(".json")) spark.read.json(path)
@@ -226,7 +228,9 @@ object Tables {
                               dest: Path, runtime: Map[String, Any]): Unit = {
     val config = loadConfig(script)
     val inherited = Metadata.resolveInheritance(root, config, deps)
-    val df = spark.read.parquet(dest.toString)
+    // through the memo: this read seeds it for the file just written, so
+    // downstream steps and db views in this session resolve it for free
+    val df = SchemaMemo.read(spark, dest.toString)
     val errors = Metadata.validate(df, config)
     if (errors.nonEmpty)
       throw new IllegalArgumentException(

@@ -696,6 +696,78 @@ class ShelfEndToEndSpec extends AnyFunSuite {
     }
   }
 
+  /** A shelf with two SQL table steps: `src`, and `dst` reading `{src}`. */
+  private def srcDstShelf(ns: String, srcSql: String, dstSql: String)
+      : (Shelf, Path, StepURI, StepURI) = {
+    val (shelf, root) = freshShelf()
+    def step(name: String, sql: String, deps: Seq[StepURI]): StepURI = {
+      val script = root.resolve(s"src/steps/tables/$ns/$name/2026-08-12.sql")
+      Files.createDirectories(script.getParent)
+      Files.writeString(script, sql)
+      val uri = StepURI.table(s"$ns/$name/2026-08-12")
+      shelf.catalog = shelf.catalog.addStep(uri, deps); shelf.catalog.save()
+      uri
+    }
+    val src = step("src", srcSql, Nil)
+    val dst = step("dst", dstSql, Seq(src))
+    (shelf, root, src, dst)
+  }
+
+  private def editStep(root: Path, uri: StepURI, sql: String): Unit =
+    Files.writeString(root.resolve(s"src/steps/tables/${uri.path}.sql"), sql)
+
+  test("db views and a parquet-only rebuild start no schema-inference job") {
+    import org.apache.spark.GraftJobCounter.jobsIn
+    val spark = SparkTestSession.spark
+    val sc = spark.sparkContext
+    val (shelf, root, src, dst) = srcDstShelf("jobs",
+      "SELECT id AS dim_id, id * 2 AS v FROM range(10)",
+      "SELECT dim_id, v + 1 AS w FROM {src}")
+    assert(shelf.run() === Seq(src, dst))
+
+    // a fresh session, and file versions no memo has seen: the views
+    // resolve from footers decoded on the driver
+    val fresh = spark.newSession()
+    Seq(src, dst).foreach(u => Files.setLastModifiedTime(Tables.tablePath(root, u),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000)))
+    assert(jobsIn(sc)(Db.registerViews(fresh, root, shelf.tablePaths, "both")) === 0)
+    assert(jobsIn(sc)(Db.registerViews(fresh, root, shelf.tablePaths, "both")) === 0)
+    assert(fresh.sql("SELECT sum(w) FROM jobs_dst_20260812").collect()(0).getLong(0) === 100L)
+
+    // a rebuild starts the jobs of its own query and write, nothing more
+    val srcPath = Tables.tablePath(root, src).toString
+    spark.read.schema(spark.read.parquet(srcPath).schema).parquet(srcPath)
+      .createOrReplaceTempView("jobs_baseline_src")
+    val scratch = Files.createTempDirectory("jobs_baseline")
+    val own = jobsIn(sc)(Tables.writeSingleParquet(
+      spark.sql("SELECT dim_id, v + 2 AS w FROM jobs_baseline_src"),
+      scratch.resolve("dst.parquet")))
+    editStep(root, dst, "SELECT dim_id, v + 2 AS w FROM {src}")
+    var rebuilt = Seq.empty[StepURI]
+    assert(jobsIn(sc) { rebuilt = shelf.run() } === own)
+    assert(rebuilt === Seq(dst))
+    assert(shelf.db("SELECT sum(w) FROM jobs_dst_20260812").collect()(0).getLong(0) === 110L)
+  }
+
+  test("a rebuilt column type reaches the downstream step and db in one session") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val (shelf, root, src, dst) = srcDstShelf("retype",
+      "SELECT id AS dim_id, id AS n FROM range(3)",
+      "SELECT dim_id, n FROM {src}")
+    assert(shelf.run() === Seq(src, dst))
+    assert(shelf.db("SELECT n FROM retype_dst_20260812").schema("n").dataType === LongType)
+
+    editStep(root, src, "SELECT id AS dim_id, CAST(id AS STRING) AS n FROM range(3)")
+    assert(shelf.run() === Seq(src, dst))
+    val meta = Yaml.load(Snapshots.metadataPath(root, dst))
+    assert(meta("schema").asInstanceOf[Map[String, Any]]("n") === "string")
+    for (view <- Seq("retype_src_20260812", "retype_dst_20260812")) {
+      val df = shelf.db(s"SELECT n FROM $view ORDER BY n")
+      assert(df.schema("n").dataType === StringType, view)
+      assert(df.collect().map(_.getString(0)).toSeq === Seq("0", "1", "2"), view)
+    }
+  }
+
   test("sort_by write config produces row-group stats that skip") {
     val (shelf, root) = freshShelf()
     val script = root.resolve("src/steps/tables/srt/t/2026-08-12.sql")
