@@ -224,19 +224,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Scratch generation coherence FIRST, before any build can touch a
-    // root: the two scratch roots (/tmp vs /dev/shm) are cleaned
-    // independently by the OS, and a half-cold state is exactly what
-    // made the round-12 gate artifact unreadable (cold src_writes next
-    // to warm pq_books, duplicated first-touch rebuild CPU inside
-    // loaded timings). Mismatched or missing stamps wipe BOTH roots —
-    // the run is then honestly, uniformly cold and the artifact says so.
-    val (scratchGen, scratchWiped) =
-      graft.api.ScratchStats.ensureCoherentGeneration()
-    if (scratchWiped)
-      System.err.println("bench: scratch roots were generation-incoherent " +
-        s"— wiped both; this run builds cold (gen $scratchGen)")
-
     val cpuListener = new CpuListener
     spark.sparkContext.addSparkListener(cpuListener)
 
@@ -327,7 +314,7 @@ object Bench {
       import java.util.concurrent.Executors
       import scala.concurrent._
       import scala.concurrent.duration.Duration
-      // 12-wide: with every non-stream build amortized behind markers,
+      // 12-wide: with every non-stream build served by the build cache,
       // the phase is ~12 stream replays whose cost is query-lifecycle
       // LATENCY (micro-batch planning, state-store startup), not CPU —
       // one slot each lets all replays overlap instead of queueing in
@@ -537,8 +524,8 @@ object Bench {
     // was degraded up to ~20x by GC/memory pressure, not by the plans
     // (q_text_perplexity 61 s here vs ~3 s in a fresh JVM). Graft.clear
     // unpersists everything contract-safely; the persisted band/segment
-    // indexes and scratch files re-ATTACH from disk via their
-    // fingerprint-guarded load paths, so the singles below pay compute
+    // indexes and scratch files re-ATTACH from disk as build-cache
+    // entries, so the singles below pay compute
     // plus at most a metadata check — the fresh-JVM shape.
     Graft.clear(spark)
     spark.catalog.clearCache()
@@ -746,14 +733,12 @@ object Bench {
     def strList(xs: Seq[String]) =
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val memoized = strList(memoizedQueries.toSeq.sorted)
-    // Which finite replays were served from the cross-process result
-    // cache (Streams.persistedOp, fingerprint-gated) vs actually
-    // replayed this process — a warm run's near-zero stream build wall
-    // must say so itself, not read like streams that never existed.
-    val (replaysWarm, replaysCold) = streaming.Streams.replayDiskStats
-    val (scratchWarm, scratchCold) = graft.api.ScratchStats.snapshot
+    // Which build-cache entries this process served vs built — a warm
+    // run's near-zero build wall must say so itself, not read like
+    // builds that never ran.
+    val (scratchWarm, scratchCold) = graft.api.BuildCache.evidence
     Files.writeString(Paths.get(fullOut),
-      s"""{"metric":"total","value":${wall + buildWall},"unit":"sec","query_sec":$wall,"build_sec":$buildWall,"host_ref_sec":$hostRefSec,"host_factor":$hostFactor,"host_ref_sec_end":$hostRefSecEnd,"host_factor_end":$hostFactorEnd,"cal_drift":${f"$calDrift%.2f"},"probe_n":${probeSamples.length},"probe_p10_ms":${f"$probeP10Ms%.1f"},"probe_p90_ms":${f"$probeP90Ms%.1f"},"probe_max_ms":${f"$probeMaxMs%.1f"},"probe_burst":$probeBurst,"probe_slow_frac":${f"$probeSlowFrac%.2f"},"ext_busy_burst":$extBurst,"ext_busy_p90":${f"$extP90%.2f"},"suspect_burst":$suspectBurst,"contended":$contended,"state_divergent":$stateDivergent,"divergent_queries":${strList(divergentQueries)},"divergent_raw":${strList(divergentRaw)},"cpu_inflated":${strList(cpuInflatedOnly)},"scratch_gen":"$scratchGen","scratch_wiped":$scratchWiped,"scratch_warm":${strList(scratchWarm)},"scratch_cold":${strList(scratchCold)},"jvm_heap_mb":$jvmHeapMb,"jvm_gc":"$jvmGc","jvm_launcher":"$jvmLauncher","cpu_total_sec":${f"$cpuTotalSec%.2f"},"errors":${errors.get + unloadedErrors.get},"loaded_errors":${errors.get},"unloaded_errors":${unloadedErrors.get},"memoized":$memoized,"replays_warm":${strList(replaysWarm)},"replays_cold":${strList(replaysCold)},"builds":$buildsFull,"builds_cpu":${cpuMap("build:")},"unloaded":$unloadedFull,"unloaded_cpu":${cpuMap("u:")},"queries":$full,"queries_cpu":${cpuMap("q:")},"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${wall + buildWall},"unit":"sec","query_sec":$wall,"build_sec":$buildWall,"host_ref_sec":$hostRefSec,"host_factor":$hostFactor,"host_ref_sec_end":$hostRefSecEnd,"host_factor_end":$hostFactorEnd,"cal_drift":${f"$calDrift%.2f"},"probe_n":${probeSamples.length},"probe_p10_ms":${f"$probeP10Ms%.1f"},"probe_p90_ms":${f"$probeP90Ms%.1f"},"probe_max_ms":${f"$probeMaxMs%.1f"},"probe_burst":$probeBurst,"probe_slow_frac":${f"$probeSlowFrac%.2f"},"ext_busy_burst":$extBurst,"ext_busy_p90":${f"$extP90%.2f"},"suspect_burst":$suspectBurst,"contended":$contended,"state_divergent":$stateDivergent,"divergent_queries":${strList(divergentQueries)},"divergent_raw":${strList(divergentRaw)},"cpu_inflated":${strList(cpuInflatedOnly)},"scratch_warm":${strList(scratchWarm)},"scratch_cold":${strList(scratchCold)},"jvm_heap_mb":$jvmHeapMb,"jvm_gc":"$jvmGc","jvm_launcher":"$jvmLauncher","cpu_total_sec":${f"$cpuTotalSec%.2f"},"errors":${errors.get + unloadedErrors.get},"loaded_errors":${errors.get},"unloaded_errors":${unloadedErrors.get},"memoized":$memoized,"builds":$buildsFull,"builds_cpu":${cpuMap("build:")},"unloaded":$unloadedFull,"unloaded_cpu":${cpuMap("u:")},"queries":$full,"queries_cpu":${cpuMap("q:")},"sf":"$sfDir"}""")
 
     // Optional per-group diagnostics (task count, run wall, GC ms,
     // spilled bytes) for divergence forensics — written only when the
@@ -788,7 +773,7 @@ object Bench {
       // booleans + usually-empty lists) — the driver's BENCH_r{N}.json
       // records only this line, and the whole point is that THAT
       // artifact names its own cache state without cross-referencing
-      s"""{"metric":"total","value":${f"${wall + buildWall}%.2f"},"unit":"sec","query_sec":${f"$wall%.2f"},"build_sec":${f"$buildWall%.2f"},"host_factor":${f"$hostFactor%.2f"},"host_factor_end":${f"$hostFactorEnd%.2f"},"probe_burst":$probeBurst,"ext_busy_burst":$extBurst,"probe_slow_frac":${f"$probeSlowFrac%.2f"},"contended":$contended,"state_divergent":$stateDivergent,"divergent_queries":${strList(divergentQueries.take(12))},"cpu_inflated":${strList(cpuInflatedOnly.take(12))},"scratch_wiped":$scratchWiped,"n_scratch_cold":${scratchCold.size},"jvm_heap_mb":$jvmHeapMb,"cpu_total_sec":${f"$cpuTotalSec%.2f"},"n_queries":${results.size},"errors":${errors.get + unloadedErrors.get},"loaded_errors":${errors.get},"unloaded_errors":${unloadedErrors.get},"unloaded":${entries(us)},"queries":${entries(rs)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"${wall + buildWall}%.2f"},"unit":"sec","query_sec":${f"$wall%.2f"},"build_sec":${f"$buildWall%.2f"},"host_factor":${f"$hostFactor%.2f"},"host_factor_end":${f"$hostFactorEnd%.2f"},"probe_burst":$probeBurst,"ext_busy_burst":$extBurst,"probe_slow_frac":${f"$probeSlowFrac%.2f"},"contended":$contended,"state_divergent":$stateDivergent,"divergent_queries":${strList(divergentQueries.take(12))},"cpu_inflated":${strList(cpuInflatedOnly.take(12))},"n_scratch_cold":${scratchCold.size},"jvm_heap_mb":$jvmHeapMb,"cpu_total_sec":${f"$cpuTotalSec%.2f"},"n_queries":${results.size},"errors":${errors.get + unloadedErrors.get},"loaded_errors":${errors.get},"unloaded_errors":${unloadedErrors.get},"unloaded":${entries(us)},"queries":${entries(rs)},"sf":"$sfDir"}"""
     }
     val stdoutLine = budgetLine(1600, results.toSeq, unloaded.filter(_._2 >= 0).toSeq,
       s"""{"metric":"total","value":${f"${wall + buildWall}%.2f"},"unit":"sec","cpu_total_sec":${f"$cpuTotalSec%.2f"},"errors":${errors.get + unloadedErrors.get}}""")(line)

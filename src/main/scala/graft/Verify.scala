@@ -62,6 +62,9 @@ object Verify {
       spark.stop(); System.exit(0)
     }
     pool.shutdown()
+    val (served, built) = api.BuildCache.evidence
+    System.err.println(s"[verify] build cache: ${served.size} served, " +
+      s"${built.size} built" + (if (built.isEmpty) "" else built.mkString(": ", " ", "")))
     // release every session-keyed cache; nothing may stay pinned after a
     // run (the library must be embeddable in a long-lived server). The
     // result frames' localCheckpoint RDDs are reaped asynchronously by

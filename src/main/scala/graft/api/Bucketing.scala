@@ -22,100 +22,42 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Scratch root shared by every persisted-index artifact. */
-  private[graft] def scratchBase: String = base
-
-  private def base: String =
-    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bucketed"
-    else sys.props("java.io.tmpdir") + "/graft-bucketed"
-
   /** Write `df` as a bucketed+sorted external table; idempotent per
     * session. Returns the table name to read back.
     *
     * When `srcPaths` names the source files `df` is a deterministic
-    * function of, the write is ALSO idempotent across processes: a
-    * `_GRAFT_FP` marker records the source fingerprint (sorted
-    * path:len:mtime:edge-content listing; 128 KiB read per file) and a
-    * later process whose
-    * sources are unchanged ATTACHES the existing files via
-    * CREATE TABLE ... CLUSTERED BY DDL (the [[graft.api.Dedup]] band-
-    * index discipline) instead of re-shuffling and rewriting the table —
-    * at 100 TB the difference between a metadata check and a full
-    * re-bucketing pass. `df` is by-name, so the skip path never even
-    * plans it. With `srcPaths` empty (or a source absent) the old
-    * always-rewrite behavior is kept.
-    *
-    * Marker IO is java.nio by design: [[scratchBase]] is local by
-    * construction (/dev/shm or java.io.tmpdir). If scratch ever moves
-    * to a non-local FS, the cross-process skip silently never applies
-    * (markerFresh reads nothing, every process rewrites) — route the
-    * marker through the Hadoop FS at that point.
+    * function of, the write is ALSO idempotent across processes: the
+    * table files are a [[BuildCache]] entry keyed by (name, key,
+    * buckets, `ver`, the sources' fingerprint), and a later process
+    * whose sources are unchanged ATTACHES them via CREATE TABLE ...
+    * CLUSTERED BY DDL ([[Dedup.attachBucketed]]) instead of
+    * re-shuffling and rewriting the table — at 100 TB the difference
+    * between a metadata check and a full re-bucketing pass. `df` is
+    * by-name, so the attach path never even plans it. With `srcPaths`
+    * empty (or a source absent) the table is rewritten per session.
+    * `ver` is the caller's recipe version: bump it when the derivation
+    * of `df` changes without the source files changing.
     */
   def ensureBucketed(s: SparkSession, sfDir: String, name: String,
                      df: => DataFrame, key: String,
                      buckets: Int = 8, srcPaths: Seq[String] = Nil,
-                     ver: Int = 1): String = {
-    // sha256-derived tag (Dedup.tableTag), NOT sfDir.hashCode: a 32-bit
-    // hashCode collision between two sf dirs would alias their catalog
-    // table names — the same failure mode the band-index tables already
-    // guard against. (The fingerprint markers would still force a
-    // rewrite on mismatch, but the in-catalog aliasing alone could
-    // serve one dir's table for the other within a session.)
-    val tag = Dedup.tableTag(sfDir)
-    val tbl = s"graft_bk_${name}_$tag"
-    // one SessionMemo entry per (session, sfDir, name), dropped at
-    // Graft.clear: concurrent queries (q_join_bucketed ∥ q_agg_bucketed
-    // in Bench) wait for one table write instead of racing it, while
-    // other tables write in parallel
-    SessionMemo.withRelease[String](s, "bucketing.table", (sfDir, name),
-        t => { s.sql(s"DROP TABLE IF EXISTS $t"); () }) {
-      val loc = s"$base/$tbl"
-      // an ABSENT source must mean "never trust (or write) a marker"
-      // — checked directly, because sourceFingerprint hashes absence
-      // into a stable digest that a contains() check can never see
-      // (a marker signed from absence would survive a later corpus
-      // regeneration and serve a stale table forever). `ver` is the
-      // caller's recipe version: bump it when the derivation of `df`
-      // changes without the source files changing.
-      val signable = srcPaths.nonEmpty && Dedup.sourcesPresent(s, srcPaths: _*)
-      val fp = if (!signable) ""
-        else s"v$ver:$buckets:$key:" + Dedup.sourceFingerprint(s, srcPaths: _*)
-      val marker = java.nio.file.Paths.get(loc, "_GRAFT_FP")
-      // data-present clause = true: the attach below Try-reads the
-      // parquet schema, which already degrades cleanly to rebuild
-      // when the files are gone
-      val canAttach = signable && Dedup.markerFresh(marker, fp)(true)
-      // a marker surviving a partial scratch cleanup (files gone) must
-      // mean rebuild, not an AnalysisException — loadBandIndex's rule.
-      // CREATE TABLE IF NOT EXISTS + one retry (the Dedup.attachBucketed
-      // discipline), NOT tableExists-then-CREATE: two sessions sharing
-      // one catalog racing that TOCTOU made the loser's Try fail and
-      // silently fall through to a full re-shuffle rewrite instead of
-      // a metadata attach.
-      def attachOnce(): Unit = if (!s.catalog.tableExists(tbl)) {
-        // `_`-prefixed marker is invisible to the schema read
-        val schema = s.read.parquet(loc).schema.toDDL
-        s.sql(s"CREATE TABLE IF NOT EXISTS $tbl ($schema) USING PARQUET " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-          s"LOCATION '$loc'")
+                     ver: Int = 1): String =
+    // one SessionMemo entry per (session, sfDir, name): concurrent
+    // queries (q_join_bucketed ∥ q_agg_bucketed in Bench) wait for one
+    // table write instead of racing it, while other tables write in
+    // parallel
+    SessionMemo(s, "bucketing.table", (sfDir, name)) {
+      val loc = BuildCache(s, s"bk_$name", ver, srcPaths, sfDir,
+          Seq("key" -> key, "buckets" -> buckets)) { dir =>
+        // staging names are publisher-unique, so the stage table is too
+        val stage = s"graft_bk_${name}_stage_${BuildCache.tagOf(dir)}"
+        try df.write.format("parquet").bucketBy(buckets, key).sortBy(key)
+          .option("path", dir).mode("overwrite").saveAsTable(stage)
+        finally s.sql(s"DROP TABLE IF EXISTS $stage")
       }
-      val attached = canAttach && scala.util.Try {
-        try attachOnce() catch { case _: Exception => attachOnce() }
-      }.isSuccess
-      ScratchStats.record(s"bk_$name", sfDir, attached)
-      if (!attached) {
-        df.write
-          .format("parquet")
-          .bucketBy(buckets, key)
-          .sortBy(key)
-          .option("path", loc)
-          .mode("overwrite")
-          .saveAsTable(tbl)
-        if (signable) Dedup.writeMarker(marker, fp)
-      }
-      tbl
+      Dedup.attachBucketed(s, s"graft_bk_${name}_${BuildCache.tagOf(loc)}",
+        loc, Seq(key), buckets)
     }
-  }
 
   /** orders⋈customer on custkey with both sides bucketed on the join
     * key: zero-shuffle, zero-sort SortMergeJoin (asserted by

@@ -598,11 +598,11 @@ object Dedup {
                      bands: Int = 32): BandIndex =
     BandIndex(minhashBandRows(corpusSh, numPerms, bands), numPerms, bands)
 
-  // ---- persisted band index -------------------------------------------
+  // ---- persisted band and segment indexes --------------------------------
 
-  /** Bump when the on-disk band-index layout or the shingle/signature
-    * algorithm changes: a stale index must fail the load check, not
-    * silently serve wrong candidates.
+  /** Bump when the on-disk band- or segment-index layout or the
+    * shingle/signature algorithm changes: it is the [[BuildCache]]
+    * version of both index recipes, so a stale index is never served.
     */
   private val IndexFormatVersion = 1
 
@@ -626,473 +626,64 @@ object Dedup {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach { rdd => rdd.unpersist(blocking = false); () }
 
-  /** True iff every path exists on its Hadoop FS — the guard callers
-    * need BEFORE trusting a [[sourceFingerprint]]-keyed marker: the
-    * fingerprint hashes an absent path into a stable digest, so
-    * absence alone can never be detected from the fingerprint string.
+  /** A 64-bit sha256 tag of `path` for scratch and table names —
+    * collision-safe where a 32-bit `hashCode` would alias two paths.
     */
-  def sourcesPresent(spark: org.apache.spark.sql.SparkSession,
-                     paths: String*): Boolean =
-    paths.nonEmpty && paths.forall(p =>
-      hadoopFs(spark, p).exists(new org.apache.hadoop.fs.Path(p)))
-
-  /** The marker-file freshness protocol every cross-process cache
-    * shares (scratch source writes, bucketed-table attach, the
-    * parquet/TSV pipeline caches): fresh ⇔ the marker file exists,
-    * records exactly `fp`, AND `dataPresent` holds — so a marker
-    * surviving a partial scratch cleanup (data gone) means rebuild,
-    * never a downstream read failure. Centralized so the data-present
-    * clause cannot drift out of individual copies again.
-    */
-  private[graft] def markerFresh(marker: java.nio.file.Path, fp: String)
-                                (dataPresent: => Boolean): Boolean =
-    try java.nio.file.Files.isRegularFile(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp &&
-      dataPresent
-    catch { case _: Exception => false }
-
-  private[graft] def writeMarker(marker: java.nio.file.Path,
-                                 fp: String): Unit = {
-    java.nio.file.Files.write(marker, fp.getBytes("UTF-8")); ()
-  }
-
-  /** The load-or-build-and-publish protocol every parquet-backed
-    * cross-process cache composes from [[markerFresh]]/[[writeMarker]]
-    * — centralized for the same reason markerFresh was: three
-    * hand-rolled copies of the check/write/reread sequence is how the
-    * data-present clause drifted out of individual copies before.
-    * Returns (frame, servedFromDisk). Single-writer per dataPath
-    * across processes (the saveBandIndex concurrency scope); `build`
-    * is only evaluated on a miss.
-    */
-  private[graft] def loadOrBuildParquet(
-      spark: org.apache.spark.sql.SparkSession, dataPath: String,
-      marker: java.nio.file.Path, fp: String)(
-      build: => DataFrame): (DataFrame, Boolean) =
-    if (markerFresh(marker, fp)(hasDataFiles(dataPath)))
-      // schema-memoized: the served-from-disk path is hit once per
-      // QUERY (band/segment indexes), and per-call footer inference is
-      // driver latency the loaded phase pays 16-ways concurrently
-      (SchemaMemo.read(spark, dataPath), true)
-    else {
-      build.write.mode("overwrite").parquet(dataPath)
-      writeMarker(marker, fp)
-      (spark.read.parquet(dataPath), false)
-    }
-
-  /** True iff `dir` holds at least one non-`_`-prefixed entry AND every
-    * non-`_` DIRECTORY entry recursively holds data of its own — the
-    * "data actually exists" clause for markers guarding a directory of
-    * written files (the marker itself and _SUCCESS are not data). The
-    * recursion matters for directory-of-directories layouts (the
-    * stream-arrival s0/s1/s2 splits, partitioned and evolve outputs): a
-    * partial cleanup that empties the subdirectories but leaves them in
-    * place used to pass the exists-one-entry check, so the rewrite was
-    * skipped and the replay queries silently streamed zero rows —
-    * exactly the failure markerFresh's contract exists to prevent.
-    * Every subdirectory must hold data (not just one): each sN is a
-    * required micro-batch and each partition directory a required
-    * slice, so one emptied leg means rebuild. Depth-capped as a
-    * symlink-cycle guard; java.nio IO (these scratch dirs are local by
-    * construction — /dev/shm or java.io.tmpdir).
-    */
-  private[graft] def hasDataFiles(dir: String): Boolean = {
-    import scala.jdk.CollectionConverters._
-    def ok(d: java.nio.file.Path, depth: Int): Boolean = {
-      val entries = {
-        val s = java.nio.file.Files.list(d)
-        try s.iterator().asScala
-          .filter(!_.getFileName.toString.startsWith("_")).toList
-        finally s.close()
-      }
-      entries.nonEmpty && entries.forall(p =>
-        !java.nio.file.Files.isDirectory(p) || (depth < 4 && ok(p, depth + 1)))
-    }
-    try ok(java.nio.file.Paths.get(dir), 0)
-    catch { case _: Exception => false }
-  }
-
-  /** Bytes of content evidence hashed from each end of every file. */
-  private[graft] val FingerprintEdgeBytes = 65536
-
-  /** Content fingerprint of source files (any Hadoop FS scheme):
-    * sha256 over the sorted (path, length, mtime, edge-content) listing,
-    * where edge-content is a sha256 of each file's first and last
-    * [[FingerprintEdgeBytes]] bytes. Metadata alone (`path:len:mtime`)
-    * is spoofable: a regenerated corpus restored with preserved
-    * timestamps (tar/rsync with mtime preservation, or a rewrite inside
-    * mtime granularity) would silently serve stale cross-process caches
-    * — a wrong-answer class, not a perf bug. The edge hash is O(1) I/O
-    * per file (≤128 KiB read regardless of file size) and catches any
-    * such regen in practice: parquet writers put row-group offsets and
-    * statistics in the footer, so even a semantically-equal rewrite
-    * changes the tail bytes.
-    */
-  def sourceFingerprint(spark: org.apache.spark.sql.SparkSession,
-                        paths: String*): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    paths.flatMap { p =>
-      val fs = hadoopFs(spark, p)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (!fs.exists(hp)) Seq(s"$p:absent")
-      else {
-        val it = fs.listFiles(hp, true)
-        val b = scala.collection.mutable.Buffer.empty[String]
-        while (it.hasNext) {
-          val st = it.next()
-          val edge = fileEdgeDigest(fs, st.getPath, st.getLen)
-          b += s"${st.getPath}:${st.getLen}:${st.getModificationTime}:$edge"
-        }
-        b.sorted
-      }
-    }.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** sha256 (hex) of a file's first and last [[FingerprintEdgeBytes]]
-    * bytes — the content-evidence half of [[sourceFingerprint]]. A file
-    * smaller than twice the edge window is hashed in full (the two
-    * windows overlap; determinism, not exclusivity, is what matters).
-    * An unreadable file hashes to a per-call-unique nonce (never a
-    * constant — a constant would compare EQUAL across a
-    * persistently-unreadable file's marker-write and marker-check,
-    * serving a cache signed from bytes never observed), so any read
-    * failure forces a rebuild.
-    */
-  private def fileEdgeDigest(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path,
-                             len: Long): String =
-    try {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val in = fs.open(p)
-      try {
-        val head = new Array[Byte](math.min(len, FingerprintEdgeBytes.toLong).toInt)
-        in.readFully(0L, head, 0, head.length)
-        md.update(head)
-        if (len > FingerprintEdgeBytes) {
-          val tailStart = math.max(FingerprintEdgeBytes.toLong, len - FingerprintEdgeBytes)
-          val tail = new Array[Byte]((len - tailStart).toInt)
-          in.readFully(tailStart, tail, 0, tail.length)
-          md.update(tail)
-        }
-      } finally in.close()
-      md.digest().map("%02x".format(_)).mkString
-    } catch { case _: Exception =>
-      // per-CALL unique, not a constant: a file unreadable both when a
-      // marker was written AND at a later freshness check would
-      // otherwise produce EQUAL fingerprints and serve a cache signed
-      // from bytes never observed — the exact inversion of the
-      // documented guarantee. A nonce makes any failed read compare
-      // unequal to everything, so unreadability always means rebuild.
-      "unreadable-" + java.util.UUID.randomUUID().toString.take(8)
-    }
-
-  /** Fingerprints are embedded into hand-built meta.json and parsed
-    * back with a regex — a quote/comma/brace in one would corrupt the
-    * sidecar or silently mis-parse (invalidating the index). Restrict
-    * to a JSON-inert charset up front; [[sourceFingerprint]]'s sha256
-    * hex always passes, and version-prefixed forms (`v1:...`) do too.
-    */
-  private def requireSafeFingerprint(fingerprint: String): Unit =
-    require(fingerprint.nonEmpty && fingerprint.matches("[A-Za-z0-9._:-]+"),
-      "fingerprint must match [A-Za-z0-9._:-]+ (it is embedded in " +
-        s"meta.json and regex-parsed back): got '${fingerprint.take(40)}'")
-
-  /** A publish lock older than this is presumed crashed and stolen. */
-  private[graft] val PublishLockStaleMs = 600000L
-  /** Extra wait past the stale threshold before failing loudly: by then
-    * any legitimate holder has either released or crossed staleness and
-    * been stolen, so only a pathological FS justifies giving up.
-    */
-  private[graft] val PublishLockGraceMs = 120000L
-  /** Wait beyond this emits the first telemetry WARN (then periodic). */
-  private[graft] val LockWarnAfterMs = 5000L
-
-  /** Cross-PROCESS publish lock on an index path: an atomic
-    * create-if-absent of `$path.lock` serializes concurrent publishers.
-    * On the local FS the claim goes through java.nio CREATE_NEW (real
-    * O_EXCL) — Hadoop's Local/ChecksumFileSystem create is
-    * check-then-create, and under full-suite contention two same-JVM
-    * publishers did once both acquire through it (a reader then caught
-    * meta.json absent mid-double-swap); HDFS create(overwrite=false)
-    * is atomic natively. A lock older than [[PublishLockStaleMs]] is presumed
-    * crashed and STOLEN BY ATOMIC RENAME to a stealer-unique name —
-    * only the successful renamer retires it and retries the create, so
-    * two waiters can never both judge-stale and one delete the OTHER's
-    * freshly-created lock (the judge-then-delete TOCTOU).
-    *
-    * A waiter never fails while a live holder exists: it keeps waiting
-    * — WARNing after [[LockWarnAfterMs]] and every 15 s after, so a
-    * degraded-host bench log names the contention instead of hiding it
-    * — until the holder releases or crosses the stale threshold. Only
-    * [[PublishLockStaleMs]]+[[PublishLockGraceMs]] of total wait (an FS
-    * that can neither acquire nor steal) fails loudly; a fixed short
-    * timeout here turned slow-host contention into correctness-path
-    * failures. Object stores WITHOUT atomic create-if-absent fall back
-    * to the external-serialization requirement the scaladoc documents.
-    */
-  private def withPublishLock[T](fs: org.apache.hadoop.fs.FileSystem,
-                                 path: String)(body: => T): T = {
-    val lock = new org.apache.hadoop.fs.Path(s"$path.lock")
-    val t0 = System.currentTimeMillis()
-    val deadline = t0 + PublishLockStaleMs + PublishLockGraceMs
-    var nextWarn = t0 + LockWarnAfterMs
-    var acquired = false
-    while (!acquired) {
-      try {
-        val content = (s"${java.lang.ProcessHandle.current().pid()}@" +
-          s"${System.currentTimeMillis()}").getBytes("UTF-8")
-        if (fs.getScheme == "file") {
-          // Hadoop's local ChecksumFS create(overwrite=false) is
-          // check-then-create — under full-suite contention two
-          // publishers DID both acquire (meta.json vanished under a
-          // reader mid-swap). java.nio CREATE_NEW is a real O_EXCL,
-          // so local acquisition is genuinely atomic; throws
-          // FileAlreadyExistsException (an IOException) on the lost
-          // race, the same signal the wait loop keys on.
-          val p = java.nio.file.Paths.get(lock.toUri.getPath)
-          // unlike fs.create, nio does not create parents — without
-          // this a missing parent reads as a perpetual "lost race"
-          // and the waiter spins to the deadline
-          Option(p.getParent)
-            .foreach(java.nio.file.Files.createDirectories(_))
-          java.nio.file.Files.write(p, content,
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          ()
-        } else {
-          val out = fs.create(lock, false) // atomic on HDFS
-          out.write(content)
-          out.close()
-        }
-        acquired = true
-      } catch { case _: java.io.IOException =>
-        val stale = try {
-          System.currentTimeMillis() -
-            fs.getFileStatus(lock).getModificationTime > PublishLockStaleMs
-        } catch { case _: Exception => false } // vanished: retry create
-        if (stale) {
-          // Atomic-rename steal: the rename succeeds for exactly one
-          // stealer; a rename target that already exists or a lock that
-          // vanished/was replaced mid-judgment just fails the rename and
-          // the loop re-evaluates. Never fs.delete(lock) directly — the
-          // lock under that name may no longer be the stale one judged.
-          val retired = new org.apache.hadoop.fs.Path(
-            s"$path.lock.stale-${java.util.UUID.randomUUID().toString.take(8)}")
-          if (scala.util.Try(fs.rename(lock, retired)).getOrElse(false)) {
-            System.err.println(s"graft: publish lock $lock was stale " +
-              s"(>${PublishLockStaleMs / 1000}s) — stolen")
-            fs.delete(retired, false); ()
-          }
-        } else {
-          val now = System.currentTimeMillis()
-          if (now > deadline)
-            throw new IllegalStateException(
-              s"could not acquire publish lock $lock within " +
-                s"${(deadline - t0) / 1000}s — past the stale threshold " +
-                "plus grace, the filesystem can neither acquire nor steal")
-          if (now >= nextWarn) {
-            System.err.println(s"graft: waiting ${now - t0} ms for publish " +
-              s"lock $lock (held by a concurrent publisher)")
-            nextWarn = now + 15000L
-          }
-          Thread.sleep(500)
-        }
-      }
-    }
-    val waited = System.currentTimeMillis() - t0
-    if (waited > LockWarnAfterMs)
-      System.err.println(s"graft: publish lock $lock acquired after $waited ms")
-    try body finally { fs.delete(lock, false); () }
-  }
-
-  /** The retire→rename→cleanup swap both index publishers share: a
-    * reader sees complete-old or complete-new, never a mix; a failed
-    * rename restores (or loudly names the stranded copy).
-    */
-  private def atomicSwapPublish(fs: org.apache.hadoop.fs.FileSystem,
-                                tmp: String, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(path)
-    val retired = new Path(
-      s"$path.retired-${java.util.UUID.randomUUID().toString.take(8)}")
-    val hadOld = fs.exists(dst)
-    if (hadOld) require(fs.rename(dst, retired),
-      s"atomic publish failed: could not retire old index at $path")
-    if (!fs.rename(new Path(tmp), dst)) {
-      // the restore can itself fail (object-store flakes, permissions
-      // yanked mid-publish) — report what ACTUALLY happened, and where
-      // the stranded copy lives, instead of claiming success
-      val restored = hadOld && fs.rename(retired, dst)
-      throw new IllegalStateException(
-        s"atomic publish failed: rename $tmp -> $path" + (
-          if (restored) " (old index restored)"
-          else if (hadOld) s" (RESTORE ALSO FAILED: old index stranded at $retired)"
-          else " (no prior index existed)"))
-    }
-    if (hadOld) fs.delete(retired, true)
-  }
-
-  private def indexMetaPath(path: String) = s"$path/meta.json"
-  // sha256-derived, not String.hashCode: 32-bit hash collisions between
-  // two index paths would alias their catalog table names, and attach()
-  // would silently serve one index for the other (save would DROP it).
-  // private[graft] so path-deriving callers (Pipeline's scratch-dir
-  // keying) use the same collision-safe tag instead of reinventing a
-  // hashCode-based one.
   private[graft] def tableTag(path: String) =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(path.getBytes("UTF-8")).take(8)
       .map("%02x".format(_)).mkString
 
-  /** Persist a band index AND its corpus shingle frame under `path` as
-    * bucketed external tables — bands on (band_idx, band_hash) so every
-    * increment's band join needs no corpus-side exchange, shingles on
-    * doc_id so candidate verification joins the corpus co-partitioned.
-    * A meta.json sidecar records the signature parameters, the format
-    * version, and the caller's corpus `fingerprint`
-    * ([[sourceFingerprint]]); [[loadBandIndex]] refuses anything that
-    * does not match, so a regenerated corpus or changed algorithm can
-    * never serve a stale index. Returns the table-backed (index,
-    * corpusSh) pair — the session-independent deployment shape: sign
-    * the corpus ONCE, then every later session (cold process included)
-    * attaches the files instead of re-shingling 100 TB.
-    *
-    * CONCURRENCY SCOPE (applies to [[saveSegmentIndex]] too): the
-    * staged-rename publish is atomic against concurrent READERS (they
-    * see complete-old or complete-new), and concurrent PUBLISHERS —
-    * same-JVM or cross-process — serialize on a `$path.lock` file
-    * (atomic create-if-absent; stale locks from crashed publishers are
-    * stolen after [[PublishLockStaleMs]]): staged copies are
-    * publisher-unique, only the swap is locked, and each publisher
-    * lands a complete index — the index ON DISK is last-writer-wins.
-    * The FRAMES a losing publisher gets back are re-pointed at the
-    * winner's files by a post-lock catalog refresh (file listings
-    * re-resolve at execution), but a publisher that swaps AFTER that
-    * refresh can still invalidate them — a caller holding frames
-    * across further concurrent publishes should re-load via
-    * [[loadBandIndex]] instead. Caveat: object stores WITHOUT atomic
-    * create-if-absent still need external publish serialization.
-    * Concurrent ATTACH via the load path needs no lock.
+  /** The band index of `corpusSh` AND the shingle frame itself as one
+    * [[BuildCache]] entry of bucketed external tables — bands on
+    * (band_idx, band_hash) so every increment's band join needs no
+    * corpus-side exchange, shingles on doc_id so candidate verification
+    * joins the corpus co-partitioned. The entry is keyed by the
+    * signature parameters and the fingerprint of `inputs` (the files
+    * `corpusSh` is a deterministic function of), so a regenerated corpus
+    * or changed parameters never serve a stale index, and a cold process
+    * with unchanged inputs attaches the files by DDL instead of
+    * re-shingling: the sign-once, increment-forever deployment shape.
+    * `corpusSh` is by-name: a served entry never plans it. `scope` names
+    * the corpus; entries of other keys under it are superseded.
     */
-  def saveBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    index: BandIndex, corpusSh: DataFrame,
-                    fingerprint: String,
-                    buckets: Int = 8): (BandIndex, DataFrame) = {
-    import org.apache.hadoop.fs.Path
-    requireSafeFingerprint(fingerprint)
-    val tag = tableTag(path)
-    // ATOMIC PUBLISH: the whole index (both bucketed tables + meta.json)
-    // is staged under a temp sibling and RENAMED into place. An
-    // in-place mode("overwrite") would delete and rewrite the parquet
-    // files under a concurrent reader whose catalog tables already
-    // point at `path` — meta.json-last ordering protects against
-    // crashes, not against a reader racing the rewrite. With the
-    // rename, a reader sees either the complete old index or the
-    // complete new one, never a half-written mix (the rename itself is
-    // atomic on HDFS and posix; the delete-then-rename leaves only a
-    // brief "absent → rebuild" window, which is safe).
-    // staging table names are publisher-UNIQUE (like the tmp dir): two
-    // concurrent publishers sharing one catalog must not race a shared
-    // `_stage` name — the test-found same-JVM flavor of the publish race
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val tmp = s"$path.tmp-$nonce"
-    val stage = Seq(s"graft_bands_${tag}_stage_$nonce",
-      s"graft_bandsh_${tag}_stage_$nonce")
-    index.rows.write.format("parquet")
-      .bucketBy(buckets, "band_idx", "band_hash")
-      .sortBy("band_idx", "band_hash")
-      .option("path", s"$tmp/bands").mode("overwrite").saveAsTable(stage(0))
-    corpusSh.write.format("parquet")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .option("path", s"$tmp/shingles").mode("overwrite").saveAsTable(stage(1))
-    // external tables: dropping the staging catalog entries keeps files
-    stage.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val meta = s"""{"version":$IndexFormatVersion,"num_perms":${index.numPerms},""" +
-      s""""bands":${index.bands},"buckets":$buckets,"fingerprint":"$fingerprint"}"""
-    val fs = hadoopFs(spark, path)
-    val out = fs.create(new Path(indexMetaPath(tmp)), true)
-    out.write(meta.getBytes("UTF-8")); out.close()
-    // Swap via a retired sibling, never delete-first (see
-    // atomicSwapPublish), under the cross-process publish lock: staged
-    // copies are publisher-unique (tmp-UUID), so only the swap — plus
-    // the final-table drop, which must pair with the swap so the
-    // attach below re-creates tables over the NEW files — needs
-    // serializing. Two concurrent publishers each land a COMPLETE
-    // index, last-writer-wins, with no retired sibling stranded.
-    val published = withPublishLock(fs, path) {
-      Seq(s"graft_bands_$tag", s"graft_bandsh_$tag")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      atomicSwapPublish(fs, tmp, path)
-      // attach the published files through the same fingerprint-checked
-      // load path a cold session uses — one DDL code path, and the save
-      // is verified readable before anything consumes it. INSIDE the
-      // lock: a concurrent publisher's retire/rename window must not
-      // make OUR just-published index read as absent.
-      loadBandIndex(spark, path, fingerprint).getOrElse(
-        throw new IllegalStateException(
-          s"band index at $path unreadable immediately after publish"))
+  def cachedBandIndex(spark: org.apache.spark.sql.SparkSession, scope: String,
+                      inputs: Seq[String], numPerms: Int = 128, bands: Int = 32,
+                      buckets: Int = 8)(
+      corpusSh: => DataFrame): (BandIndex, DataFrame) = {
+    val loc = BuildCache(spark, "bands", IndexFormatVersion, inputs, scope,
+        Seq("num_perms" -> numPerms, "bands" -> bands, "buckets" -> buckets)) { dir =>
+      val stage = Seq("bands", "bandsh").map(t => s"graft_${t}_stage_${BuildCache.tagOf(dir)}")
+      val sh = corpusSh
+      try {
+        minhashBandRows(sh, numPerms, bands).write.format("parquet")
+          .bucketBy(buckets, "band_idx", "band_hash")
+          .sortBy("band_idx", "band_hash")
+          .option("path", s"$dir/bands").mode("overwrite").saveAsTable(stage(0))
+        sh.write.format("parquet")
+          .bucketBy(buckets, "doc_id").sortBy("doc_id")
+          .option("path", s"$dir/shingles").mode("overwrite").saveAsTable(stage(1))
+      } finally stage.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
-    // Post-lock refresh: if another publisher wins the race right after
-    // our release, our frames were analyzed against a file listing that
-    // retire-and-delete just invalidated — refresh so execution
-    // re-lists whatever is current instead of throwing
-    // FileNotFoundException on retired files. See CONCURRENCY SCOPE for
-    // the residual (a swap landing after THIS refresh still invalidates;
-    // such callers re-load).
-    Seq(s"graft_bands_$tag", s"graft_bandsh_$tag")
-      .foreach(t => scala.util.Try(spark.catalog.refreshTable(t)))
-    published
-  }
-
-  /** Load a [[saveBandIndex]]-persisted index if present AND its
-    * recorded fingerprint/version match — None otherwise (callers then
-    * rebuild+save). In a process whose catalog has not seen the tables
-    * yet, they are attached via CREATE TABLE ... CLUSTERED BY DDL over
-    * the existing files: no data is read, rewritten, or re-shingled.
-    */
-  def loadBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    fingerprint: String): Option[(BandIndex, DataFrame)] = {
-    val fs = hadoopFs(spark, path)
-    val mp = new org.apache.hadoop.fs.Path(indexMetaPath(path))
-    if (!fs.exists(mp)) return None
-    val meta = {
-      val in = fs.open(mp)
-      val txt = new String(in.readAllBytes(), "UTF-8"); in.close()
-      """"(\w+)":\s*("?)([^",}]*)\2""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(3)).toMap
-    }
-    if (meta.get("version").map(_.toInt) != Some(IndexFormatVersion) ||
-        meta.get("fingerprint") != Some(fingerprint)) return None
-    // a crash or partial scratch cleanup can leave meta.json without the
-    // data directories — that is a rebuild, not an AnalysisException
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/bands")) ||
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$path/shingles")))
-      return None
-    val (numPerms, bands, buckets) = (meta("num_perms").toInt,
-      meta("bands").toInt, meta("buckets").toInt)
-    val tag = tableTag(path)
-    Some((BandIndex(attachBucketed(spark, s"graft_bands_$tag",
-        s"$path/bands", Seq("band_idx", "band_hash"), buckets),
-      numPerms, bands),
-      attachBucketed(spark, s"graft_bandsh_$tag", s"$path/shingles",
+    val tag = BuildCache.tagOf(loc)
+    (BandIndex(spark.table(attachBucketed(spark, s"graft_bands_$tag",
+        s"$loc/bands", Seq("band_idx", "band_hash"), buckets)), numPerms, bands),
+      spark.table(attachBucketed(spark, s"graft_bandsh_$tag", s"$loc/shingles",
         Seq("doc_id"), buckets)))
   }
 
-  /** Attach an on-disk bucketed directory as a catalog table —
-    * IDEMPOTENT and race-tolerant: CREATE TABLE IF NOT EXISTS (two
-    * concurrent attachers of the same publish issue identical DDL; the
-    * old tableExists-then-CREATE was a TOCTOU that threw
-    * TableAlreadyExists under the concurrent-publisher test), with one
-    * retry in case a concurrent publisher's locked DROP+swap lands
-    * between our create and read.
+  /** Attach an on-disk bucketed directory as a catalog table and return
+    * its name — IDEMPOTENT and race-tolerant: CREATE TABLE IF NOT EXISTS
+    * (two concurrent attachers of one entry issue identical DDL), with
+    * one retry. Callers name the table after the [[BuildCache]] entry it
+    * reads, so a table never points at a superseded entry.
     */
-  private def attachBucketed(spark: org.apache.spark.sql.SparkSession,
-                             tbl: String, loc: String, keys: Seq[String],
-                             buckets: Int): DataFrame = {
-    def tryOnce(): DataFrame = {
+  private[graft] def attachBucketed(spark: org.apache.spark.sql.SparkSession,
+                                    tbl: String, loc: String, keys: Seq[String],
+                                    buckets: Int): String = {
+    def tryOnce(): Unit =
       if (!spark.catalog.tableExists(tbl)) {
-        val schema = spark.read.parquet(loc).schema.toDDL
+        val schema = SchemaMemo.read(spark, loc).schema.toDDL
         val ks = keys.mkString(", ")
         spark.sql(s"CREATE TABLE IF NOT EXISTS $tbl ($schema) USING PARQUET " +
           s"CLUSTERED BY ($ks) SORTED BY ($ks) INTO $buckets BUCKETS " +
@@ -1102,82 +693,29 @@ object Dedup {
         SessionMemo.withRelease[String](spark, "dedup.indexTable", tbl,
           t => { spark.sql(s"DROP TABLE IF EXISTS $t"); () })(tbl)
       }
-      spark.table(tbl)
-    }
     try tryOnce() catch { case _: Exception => tryOnce() }
+    tbl
   }
 
-  /** Persist the distinct segment-hash index of a corpus (the
+  /** The distinct segment-hash index of a corpus (the
     * [[incrementalParagraphDedupByHash]] reference side) as ONE
-    * bucketed-on-h external table + meta.json — the
-    * segment-once / attach-forever shape: a cold session attaches the
-    * files by DDL, re-segmenting nothing. Same discipline as
-    * [[saveBandIndex]]: fingerprint + segTokens guard (a regenerated
-    * corpus OR a different segmentation invalidates), atomic publish
-    * via staged-rename with a retired sibling (a failed publish leaves
-    * the complete old index, never a half-written mix).
+    * bucketed-on-h external table in a [[BuildCache]] entry keyed by
+    * `segTokens` and the fingerprint of `inputs` — the segment-once,
+    * attach-forever shape of [[cachedBandIndex]]. `hashes` is by-name.
     */
-  def saveSegmentIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String, hashes: DataFrame,
-                       fingerprint: String, segTokens: Int,
-                       buckets: Int = 8): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    requireSafeFingerprint(fingerprint)
-    val tag = tableTag(path)
-    // publisher-unique staging name + tmp dir (the saveBandIndex rule)
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val stage = s"graft_segs_${tag}_stage_$nonce"
-    val tmp = s"$path.tmp-$nonce"
-    hashes.select(col("h")).write.format("parquet")
-      .bucketBy(buckets, "h").sortBy("h")
-      .option("path", s"$tmp/segments").mode("overwrite").saveAsTable(stage)
-    spark.sql(s"DROP TABLE IF EXISTS $stage")
-    val meta = s"""{"version":$IndexFormatVersion,"kind":"segments",""" +
-      s""""seg_tokens":$segTokens,"buckets":$buckets,""" +
-      s""""fingerprint":"$fingerprint"}"""
-    val fs = hadoopFs(spark, path)
-    val out = fs.create(new Path(indexMetaPath(tmp)), true)
-    out.write(meta.getBytes("UTF-8")); out.close()
-    val published = withPublishLock(fs, path) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_segs_$tag")
-      atomicSwapPublish(fs, tmp, path)
-      // verify-load inside the lock — the saveBandIndex rule
-      loadSegmentIndex(spark, path, fingerprint, segTokens).getOrElse(
-        throw new IllegalStateException(
-          s"segment index at $path unreadable immediately after publish"))
+  def cachedSegmentIndex(spark: org.apache.spark.sql.SparkSession, scope: String,
+                         inputs: Seq[String], segTokens: Int, buckets: Int = 8)(
+      hashes: => DataFrame): DataFrame = {
+    val loc = BuildCache(spark, "segs", IndexFormatVersion, inputs, scope,
+        Seq("seg_tokens" -> segTokens, "buckets" -> buckets)) { dir =>
+      val stage = s"graft_segs_stage_${BuildCache.tagOf(dir)}"
+      try hashes.select(col("h")).write.format("parquet")
+        .bucketBy(buckets, "h").sortBy("h")
+        .option("path", s"$dir/segments").mode("overwrite").saveAsTable(stage)
+      finally spark.sql(s"DROP TABLE IF EXISTS $stage")
     }
-    // post-lock refresh — the saveBandIndex rule (see its comment)
-    scala.util.Try(spark.catalog.refreshTable(s"graft_segs_$tag"))
-    published
-  }
-
-  /** Load a [[saveSegmentIndex]]-persisted index if present AND its
-    * fingerprint/segTokens/version match — None otherwise (callers then
-    * rebuild+save). Attaches by DDL over the existing bucketed files;
-    * no data is read or re-segmented.
-    */
-  def loadSegmentIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String, fingerprint: String,
-                       segTokens: Int): Option[DataFrame] = {
-    val fs = hadoopFs(spark, path)
-    val mp = new org.apache.hadoop.fs.Path(indexMetaPath(path))
-    if (!fs.exists(mp)) return None
-    val meta = {
-      val in = fs.open(mp)
-      val txt = new String(in.readAllBytes(), "UTF-8"); in.close()
-      """"(\w+)":\s*("?)([^",}]*)\2""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(3)).toMap
-    }
-    if (meta.get("version").map(_.toInt) != Some(IndexFormatVersion) ||
-        meta.get("kind") != Some("segments") ||
-        meta.get("seg_tokens").map(_.toInt) != Some(segTokens) ||
-        meta.get("fingerprint") != Some(fingerprint)) return None
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/segments")))
-      return None
-    val buckets = meta("buckets").toInt
-    val tag = tableTag(path)
-    Some(attachBucketed(spark, s"graft_segs_$tag", s"$path/segments",
-      Seq("h"), buckets))
+    spark.table(attachBucketed(spark, s"graft_segs_${BuildCache.tagOf(loc)}",
+      s"$loc/segments", Seq("h"), buckets))
   }
 
   /** Incremental near-dup detection: NEW documents against an already-

@@ -216,8 +216,8 @@ object Similarity {
       .select(col("vec_id"), col("cent_id"), round(col("cos"), 4).as("cos"))
   }
 
-  /** Bump when the ivfIndex derivation changes shape — the cross-
-    * process marker must not serve an index built under an old recipe.
+  /** Bump when the ivfIndex derivation changes shape — the build cache
+    * must not serve an index built under an old recipe.
     */
   private val IvfIndexRecipeVersion = 1
 

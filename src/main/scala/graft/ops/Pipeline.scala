@@ -23,28 +23,19 @@ object Pipeline {
     SessionMemo.persisted(s, "pipeline.sh", dir)(
       forced(Dedup.shingles(t(s, dir, "documents"), "doc_id", "text", n = 4)))
 
-  /** Load-or-build-and-save a deterministic corpus-derived frame as
-    * plain parquet under the scratch root, guarded by a source
-    * fingerprint + recipe version (the segment-index discipline,
-    * without bucketing — these frames are consumed by scans, not key
-    * joins). A COLD PROCESS whose sources are unchanged reads the
-    * files instead of recomputing the build — the pack-once /
-    * span-cut-once deployment shape; a regenerated corpus (mtime
-    * change) or a bumped `ver` rebuilds. Single-writer per path
-    * assumed across processes (the saveBandIndex concurrency scope).
+  /** A deterministic corpus-derived frame as a plain-parquet
+    * [[graft.api.BuildCache]] entry keyed by `kind`, `ver` and the
+    * fingerprint of the source table — no bucketing, these frames are
+    * consumed by scans, not key joins. A COLD PROCESS whose sources are
+    * unchanged reads the files instead of recomputing the build (the
+    * pack-once / span-cut-once deployment shape); a rewritten source or
+    * a bumped `ver` rebuilds.
     */
-  private def cachedParquet(s: SparkSession, dir: String, kind: String,
-                            ver: Int, srcTable: String)
-                           (build: => DataFrame): DataFrame = {
-    val path = s"${graft.api.Bucketing.scratchBase}/${kind}_" +
-      graft.api.Dedup.tableTag(dir)
-    val fp = s"v$ver:" +
-      Dedup.sourceFingerprint(s, s"$dir/$srcTable.parquet")
-    val (df, served) = Dedup.loadOrBuildParquet(s, path,
-      java.nio.file.Paths.get(path, "_GRAFT_FP"), fp)(build)
-    graft.api.ScratchStats.record(kind, dir, served)
-    df
-  }
+  private[graft] def cachedParquet(s: SparkSession, dir: String, kind: String,
+                                   ver: Int, srcTable: String)
+                                  (build: => DataFrame): DataFrame =
+    graft.api.SchemaMemo.read(s, graft.api.BuildCache(s, kind, ver,
+      Seq(s"$dir/$srcTable.parquet"), dir)(build.write.mode("overwrite").parquet(_)))
 
   /** Materialize a persisted shared frame BEFORE its memo hands it out:
     * the first caller pays the whole build inside its memo cell, so N
@@ -104,51 +95,23 @@ object Pipeline {
   private[graft] def corpusBands(s: SparkSession, dir: String): Dedup.BandIndex =
     corpusBandsSh(s, dir)._1
 
-  /** THE bands-index scratch path for a corpus dir — sha256-tagged
-    * (Dedup.tableTag), never dir.hashCode (a 32-bit collision would
-    * alias two corpus dirs onto one on-disk index). Single definition
-    * shared with tools/BandIndexProbe: the probe's build-mode wipe must
-    * hit exactly the path the pipeline uses, and a second copy of this
-    * derivation is how that silently stopped being true once already.
-    */
-  private[graft] def bandsPath(dir: String): String =
-    s"${graft.api.Bucketing.scratchBase}/bands_" +
-      graft.api.Dedup.tableTag(dir)
-
   private[graft] def corpusBandsSh(s: SparkSession,
                                    dir: String): (Dedup.BandIndex, DataFrame) =
-    SessionMemo(s, "pipeline.bands", dir) {
-      val path = bandsPath(dir)
-      val fp = Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-      val loaded = Dedup.loadBandIndex(s, path, fp)
-      graft.api.ScratchStats.record("bands", dir, loaded.isDefined)
-      loaded.getOrElse {
-        val corpusSh = shingled(s, dir).filter(col("doc_id") % 10 =!= 0)
-        Dedup.saveBandIndex(s, path, Dedup.buildBandIndex(corpusSh),
-          corpusSh, fp)
-      }
-    }
+    SessionMemo(s, "pipeline.bands", dir)(
+      Dedup.cachedBandIndex(s, dir, Seq(s"$dir/documents.parquet"))(
+        shingled(s, dir).filter(col("doc_id") % 10 =!= 0)))
 
-  /** The persisted corpus segment-hash index per (session, dir) —
-    * load-or-build-and-save under the scratch dir, fingerprint-guarded
-    * (the [[corpusBandsSh]] discipline): a cold session ATTACHES the
-    * bucketed files instead of re-segmenting the 90% corpus. Shared by
-    * the batch incremental paragraph query and its streaming replay.
+  /** The persisted corpus segment-hash index per (session, dir) — a
+    * build-cache entry like [[corpusBandsSh]]: a cold session ATTACHES
+    * the bucketed files instead of re-segmenting the 90% corpus. Shared
+    * by the batch incremental paragraph query and its streaming replay.
     */
   private[graft] def corpusSegIndex(s: SparkSession, dir: String): DataFrame =
-    SessionMemo(s, "pipeline.segIdx", dir) {
-      val path = s"${graft.api.Bucketing.scratchBase}/segs_" +
-        graft.api.Dedup.tableTag(dir)
-      val fp = Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-      val loaded = Dedup.loadSegmentIndex(s, path, fp, segTokens = 15)
-      graft.api.ScratchStats.record("segs", dir, loaded.isDefined)
-      loaded.getOrElse {
-        Dedup.saveSegmentIndex(s, path,
-          Dedup.segmentHashes(t(s, dir, "documents")
-            .filter(col("doc_id") % 10 =!= 0), "doc_id", "text", 15),
-          fp, segTokens = 15)
-      }
-    }
+    SessionMemo(s, "pipeline.segIdx", dir)(
+      Dedup.cachedSegmentIndex(s, dir, Seq(s"$dir/documents.parquet"),
+          segTokens = 15)(
+        Dedup.segmentHashes(t(s, dir, "documents")
+          .filter(col("doc_id") % 10 =!= 0), "doc_id", "text", 15)))
 
   /** Shingles of ONLY the 10% increment slice, filtered BEFORE the
     * shingle transform so a cold session pays 10% of the corpus — the
@@ -171,39 +134,27 @@ object Pipeline {
       TextAnalysis.perplexityVocab(t(s, dir, "documents"),
         "doc_id", "text", PplVocab))
 
-  /** Load-or-compute-and-save a driver-side literal table as TSV lines
-    * under the scratch root, fingerprint + version guarded (the
-    * cachedParquet discipline for k×dim-sized driver metadata). The
-    * doubles round-trip via Double.toString / parseDouble (shortest-
-    * round-trip), so a cold process ranks against the EXACT doubles an
-    * earlier process trained — the training jobs (k-means folds, PQ
-    * rounds) run once per corpus, not once per process, and literal
-    * values become run-invariant (Lloyd's fp sums are merge-order
-    * sensitive; loading removes even that residual variance).
+  /** A driver-side literal table as TSV lines in a
+    * [[graft.api.BuildCache]] entry (the cachedParquet discipline for
+    * k×dim-sized driver metadata). The doubles round-trip via
+    * Double.toString / parseDouble (shortest-round-trip), and every
+    * caller reads the lines back from the entry, so a cold process ranks
+    * against the EXACT doubles an earlier process trained — the
+    * training jobs (k-means folds, PQ rounds) run once per corpus, not
+    * once per process, and literal values become run-invariant (Lloyd's
+    * fp sums are merge-order sensitive; loading removes even that
+    * residual variance).
     */
-  private def cachedLines(s: SparkSession, dir: String, kind: String,
-                          ver: Int, srcTable: String)
-                         (compute: => Seq[String]): Seq[String] = {
-    val path = java.nio.file.Paths.get(
-      s"${graft.api.Bucketing.scratchBase}/${kind}_" +
-        graft.api.Dedup.tableTag(dir))
-    val fp = s"v$ver:" +
-      Dedup.sourceFingerprint(s, s"$dir/$srcTable.parquet")
-    val marker = path.resolve("_GRAFT_FP")
-    val data = path.resolve("data.tsv")
-    val served =
-      Dedup.markerFresh(marker, fp)(java.nio.file.Files.isRegularFile(data))
-    graft.api.ScratchStats.record(kind, dir, served)
-    if (served)
-      new String(java.nio.file.Files.readAllBytes(data), "UTF-8")
-        .split("\n").toSeq.filter(_.nonEmpty)
-    else {
-      val lines = compute
-      java.nio.file.Files.createDirectories(path)
-      java.nio.file.Files.write(data, lines.mkString("\n").getBytes("UTF-8"))
-      Dedup.writeMarker(marker, fp)
-      lines
+  private[graft] def cachedLines(s: SparkSession, dir: String, kind: String,
+                                 ver: Int, srcTable: String)
+                                (compute: => Seq[String]): Seq[String] = {
+    val out = graft.api.BuildCache(s, kind, ver,
+        Seq(s"$dir/$srcTable.parquet"), dir) { out =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "data.tsv"),
+        compute.mkString("\n"))
     }
+    java.nio.file.Files.readString(java.nio.file.Paths.get(out, "data.tsv"))
+      .split("\n").toSeq.filter(_.nonEmpty)
   }
 
   /** k-means centroids per (session, dir), computed ONCE and shared by

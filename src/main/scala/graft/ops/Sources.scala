@@ -19,21 +19,6 @@ import graft.ops.H._
   */
 object Sources {
 
-  /** Per-SF scratch root: the scale-factor tag (sf-dir basename) is part
-    * of the path, so runs against different SFs never cross-read each
-    * other's files — two processes on sf0.01 and sf0.1 each get their
-    * own directory. The oracle SQL carries the same tag: the registered
-    * SQL embeds [[ioPlaceholder]], and SparkEntry.oracleSql resolves it
-    * against [[oracleSfDir]] (set by Verify from its sfDir argument
-    * before the oracle dump), so the DuckDB side always reads the files
-    * the matching Spark run wrote.
-    */
-  private[graft] def tagOf(dir: String): String =
-    new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def ioDir(dir: String) =
-    s"${graft.api.ScratchStats.IoRoot}/${tagOf(dir)}"
-
   /** The sf-dir the oracle SQL should point at; Verify overwrites this
     * with its actual argument before dumping oracle_sql.json.
     */
@@ -41,60 +26,47 @@ object Sources {
 
   private[graft] val ioPlaceholder = "__GRAFT_IO__"
 
-  /** Substitute the scratch-path placeholder for the current SF tag. */
-  private[graft] def resolveOracle(sql: String): String =
-    sql.replace(ioPlaceholder,
-      s"${graft.api.ScratchStats.IoRoot}/${tagOf(oracleSfDir)}")
-
-  /** Bump when any ensure* write recipe changes shape — stale markers
-    * from an older recipe must not satisfy the skip check.
+  /** Each scratch format's source tables and recipe version. Bump a
+    * version when that format's write recipe changes shape.
     */
-  private val ScratchFormatVersion = 1
+  private val recipes: Map[String, (Seq[String], Int)] = Map(
+    "csv" -> (Seq("orders"), 1), "orc" -> (Seq("orders"), 1),
+    "avro" -> (Seq("lineitem"), 1), "jsonl" -> (Seq("nation"), 1),
+    "parq_part" -> (Seq("orders"), 1), "evolve" -> (Seq("nation"), 1),
+    "stream_incr" -> (Seq("documents"), 1),
+    "stream_sem_incr" -> (Seq("embeddings"), 1),
+    "stream_par_incr" -> (Seq("documents"), 1),
+    "graph" -> (Seq("orders", "lineitem"), 1),
+    // 22: staged (atomic) CTAS; 25: column mapping (q_tx_rename)
+    "txtable" -> (Seq("documents", "orders", "lineitem"), 25))
 
-  private def ensure(s: SparkSession, dir: String, fmt: String,
-                     srcTables: Seq[String], ver: Int = 1)
-                    (write: String => Unit): String = {
-    val out = s"${ioDir(dir)}/$fmt"
-    // One SessionMemo entry per (session, dir, fmt): two concurrent
-    // writers of one scratch path destroy each other's _temporary
-    // staging — concrete since the bench's build phase forces
-    // stream_incr from three tasks at once (src_writes + the two
-    // pre-built incremental stream replays) — so racers on one key wait
-    // for the single write, while distinct formats write in parallel.
-    graft.api.SessionMemo(s, "sources.written", (dir, fmt)) {
-      // Cross-PROCESS write-once: the scratch writes are deterministic
-      // functions of their source tables, so a `_GRAFT_OK` marker
-      // recording the source fingerprint (sorted path:len:mtime:edge
-      // listing with 128 KiB of content evidence per file — O(1) I/O
-      // each) + recipe version lets a
-      // later run skip the rewrite entirely. The bench's 94.7 s
-      // src_writes build line drops to a metadata check on every run
-      // after the first against an unchanged sf dir; a regenerated
-      // testdata dir changes mtimes → fingerprint mismatch → rewrite.
-      // The `_`-prefixed marker is invisible to both Spark reads and
-      // the oracle's extension globs.
-      // ver folds into the fingerprint ONLY when a format actually
-      // declares one — emitting a tag for the default would change
-      // every format's recorded fingerprint shape and rebuild every
-      // scratch cache in every environment for a one-format recipe
-      // change (measured: build_sec 2.3 s -> 11.9 s on the round-12
-      // bench when exactly that happened)
-      val verTag = if (ver > 1) s".$ver" else ""
-      val fp = s"v$ScratchFormatVersion$verTag:" + graft.api.Dedup
-        .sourceFingerprint(s, srcTables.map(n => s"$dir/$n.parquet"): _*)
-      val marker = java.nio.file.Paths.get(out, "_GRAFT_OK")
-      val served = graft.api.Dedup.markerFresh(marker, fp)(
-        graft.api.Dedup.hasDataFiles(out))
-      if (!served) {
-        write(out)
-        graft.api.Dedup.writeMarker(marker, fp)
-      }
-      // warm/cold evidence for the bench artifact: a run whose state
-      // is half-cold must name itself (see ScratchStats scaladoc)
-      graft.api.ScratchStats.record(s"src_$fmt", dir, served)
-    }
-    out
-  }
+  private def inputsOf(dir: String, fmt: String): Seq[String] =
+    recipes(fmt)._1.map(n => s"$dir/$n.parquet")
+
+  /** Point each `__GRAFT_IO__/<fmt>` of the oracle SQL at the
+    * [[graft.api.BuildCache]] entry [[ensure]] writes for
+    * [[oracleSfDir]], so the DuckDB side reads the files the matching
+    * Spark run wrote.
+    */
+  private[graft] def resolveOracle(sql: String): String =
+    s"$ioPlaceholder/(\\w+)".r.replaceAllIn(sql, m =>
+      scala.util.matching.Regex.quoteReplacement(graft.api.BuildCache.entryPath(
+        s"src_${m.group(1)}", recipes(m.group(1))._2,
+        inputsOf(oracleSfDir, m.group(1)), oracleSfDir)))
+
+  /** A scratch source write: a deterministic function of its source
+    * tables, so it is a [[graft.api.BuildCache]] entry — a later run
+    * against unchanged sources skips the rewrite entirely (the bench's
+    * src_writes build line drops to a metadata check). One SessionMemo
+    * entry per (session, dir, fmt): concurrent first callers in a
+    * session wait for the single write, while distinct formats write in
+    * parallel.
+    */
+  private[graft] def ensure(s: SparkSession, dir: String, fmt: String)
+                           (write: String => Unit): String =
+    graft.api.SessionMemo(s, "sources.written", (dir, fmt))(
+      graft.api.BuildCache(s, s"src_$fmt", recipes(fmt)._2,
+        inputsOf(dir, fmt), dir)(write))
 
   private def oraclePath(fmt: String) = s"$ioPlaceholder/$fmt"
 
@@ -120,14 +92,14 @@ object Sources {
   // read+aggregate side of the round-trip, not the amortized write).
 
   private def ensureCsv(s: SparkSession, dir: String): String =
-    ensure(s, dir, "csv", Seq("orders")) { out =>
+    ensure(s, dir, "csv") { out =>
       t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
         .write.mode("overwrite").option("header", "true").csv(out)
     }
 
   private def ensureOrc(s: SparkSession, dir: String): String =
-    ensure(s, dir, "orc", Seq("orders")) { out =>
+    ensure(s, dir, "orc") { out =>
       t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
         .write.mode("overwrite").orc(out)
@@ -143,7 +115,7 @@ object Sources {
   private[graft] val AvroFormat = "org.apache.spark.sql.avro.AvroFileFormat"
 
   private def ensureAvro(s: SparkSession, dir: String): String =
-    ensure(s, dir, "avro", Seq("lineitem")) { out =>
+    ensure(s, dir, "avro") { out =>
       t(s, dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_returnflag",
           "l_extendedprice", "l_shipdate")
@@ -151,7 +123,7 @@ object Sources {
     }
 
   private def ensureJsonl(s: SparkSession, dir: String): String =
-    ensure(s, dir, "jsonl", Seq("nation")) { out =>
+    ensure(s, dir, "jsonl") { out =>
       t(s, dir, "nation")
         .select(col("n_nationkey"), col("n_regionkey"),
           struct(length(col("n_name")).cast("long").as("name_len"),
@@ -160,14 +132,14 @@ object Sources {
     }
 
   private def ensurePartitioned(s: SparkSession, dir: String): String =
-    ensure(s, dir, "parq_part", Seq("orders")) { out =>
+    ensure(s, dir, "parq_part") { out =>
       t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
     }
 
   private def ensureEvolve(s: SparkSession, dir: String): String =
-    ensure(s, dir, "evolve", Seq("nation")) { out =>
+    ensure(s, dir, "evolve") { out =>
       val nat = t(s, dir, "nation")
       nat.filter(col("n_nationkey") < 12)
         .select("n_nationkey", "n_regionkey")
@@ -185,7 +157,7 @@ object Sources {
     * (and therefore the streamed pair set) is reproducible.
     */
   private[graft] def ensureStreamIncr(s: SparkSession, dir: String): String =
-    ensure(s, dir, "stream_incr", Seq("documents")) { out =>
+    ensure(s, dir, "stream_incr") { out =>
       val incr = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
       (0 until 3).foreach { i =>
         incr.filter(expr(s"(doc_id div 10) % 3 = $i"))
@@ -201,7 +173,7 @@ object Sources {
     * newcomer ids ascend with batch order).
     */
   private[graft] def ensureStreamSemIncr(s: SparkSession, dir: String): String =
-    ensure(s, dir, "stream_sem_incr", Seq("embeddings")) { out =>
+    ensure(s, dir, "stream_sem_incr") { out =>
       val inc = t(s, dir, "embeddings").filter(col("vec_id") % 20 === 0)
         .select("vec_id", "embedding")
       // an EMPTY increment must still write three (empty) files — the
@@ -226,7 +198,7 @@ object Sources {
     * [[ensureStreamIncr]] split would violate the min-keeper rule).
     */
   private[graft] def ensureStreamParIncr(s: SparkSession, dir: String): String =
-    ensure(s, dir, "stream_par_incr", Seq("documents")) { out =>
+    ensure(s, dir, "stream_par_incr") { out =>
       val inc = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select("doc_id", "text")
       val mx = Option(inc.agg(max("doc_id")).head().get(0))
@@ -259,7 +231,7 @@ object Sources {
     * amortize-behind-fingerprint shape as every other scratch build.
     */
   private[graft] def ensureGraph(s: SparkSession, dir: String): String =
-    ensure(s, dir, "graph", Seq("orders", "lineitem")) { out =>
+    ensure(s, dir, "graph") { out =>
       val raw = t(s, dir, "orders").join(t(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .select((col("o_custkey") * 2).as("src"),
@@ -1207,30 +1179,19 @@ object Sources {
   )
 
   /** Build the demo TxTable once per (session, sf dir), cross-process
-    * cached behind the scratch marker: v1 overwrite = 90% of documents,
+    * cached as a build-cache entry: v1 overwrite = 90% of documents,
     * v2 append = the rest, v3 compact, then vacuum. The version
     * numbering is part of the queries' contract (q_tx_timetravel reads
-    * v1), so a rebuild WIPES any stale table first — committing on top
-    * of an old log would renumber history.
+    * v1); every build starts from an empty directory, so no stale log
+    * can renumber history.
     */
   private def ensureTxBase(s: SparkSession, dir: String): String =
-    // ver 22: staged (atomic) CTAS — catalog-built tables now carry
-    // their data in version 1 (no intermediate empty-create commit)
-    // ver 25: column mapping (q_tx_rename — table "rn")
-    ensure(s, dir, "txtable", Seq("documents", "orders", "lineitem"), ver = 25) { base =>
+    ensure(s, dir, "txtable") { base =>
       import graft.api.TxTable
       val docs = t(s, dir, "documents")
       // table "t": overwrite -> append -> compact (q_tx_timetravel /
       // q_tx_acid / q_tx_cdf); table "u": merge upsert + transactional
-      // delete (q_tx_upsert). Version numbering is part of the queries'
-      // contract, so a rebuild wipes stale tables first — committing
-      // on top of an old log would renumber history.
-      Seq("t", "u", "c", "z", "z3", "p", "r", "d", "e", "ps", "pd", "pc", "s",
-        "sd", "sck", "o", "zd", "sq", "rt", "cs", "ai", "ct", "rw",
-        "sm", "smd", "smk", "dv", "cd", "rn").foreach { n =>
-        graft.api.Dedup.hadoopFs(s, s"$base/$n")
-          .delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true)
-      }
+      // delete (q_tx_upsert)
       val table = s"$base/t"
       TxTable.overwrite(s, table, docs.filter(col("doc_id") % 10 =!= 0))
       TxTable.append(s, table, docs.filter(col("doc_id") % 10 === 0))

@@ -176,9 +176,11 @@ object Tables {
   /** Delete a file or directory tree (partitioned outputs are dirs). */
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
-      if (Files.isDirectory(p))
-        Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      else Files.delete(p)
+      if (Files.isDirectory(p)) {
+        val walk = Files.walk(p)
+        val all = try walk.iterator().asScala.toVector finally walk.close()
+        all.reverse.foreach(Files.deleteIfExists(_))
+      } else Files.delete(p)
     }
 
   def dependencyPath(root: Path, uri: StepURI): Path =

@@ -76,7 +76,7 @@ object Streams {
       // must propagate: swallowed into `false`, a directory-layout
       // table would be streamed through the single-file branch (zero
       // files match) and the EMPTY result would be fingerprint-
-      // published into the replay store as if it were the answer —
+      // published into the replay entry as if it were the answer —
       // the exact silent-empty-stream defect this check exists to fix.
       case _: java.io.FileNotFoundException => false
     }
@@ -111,18 +111,15 @@ object Streams {
     spark
   }
 
-  private def ckBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ck"
-                       else sys.props("java.io.tmpdir") + "/graft-ck"
+  private def ckBase = s"${graft.api.BuildCache.root}/checkpoints"
 
-  private def rmCk(name: String): Unit = {
-    // finite replay is done → checkpoint has no recovery value; drop it
-    // so repeated runs don't accumulate state in shm
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(s"$ckBase/$name"))
-  }
+  /** A finished replay's checkpoint has no recovery value: drop it so
+    * repeated runs don't accumulate state.
+    */
+  private def rmCk(name: String): Unit = rmTree(s"$ckBase/$name")
+
+  private def rmTree(dir: String): Unit =
+    scala.util.Try(graft.shelf.Tables.deleteRecursively(java.nio.file.Paths.get(dir))): Unit
 
   /** Start a stream into a named memory sink; non-blocking. */
   private def startToMemory(stream: DataFrame, outputMode: String) = {
@@ -165,57 +162,30 @@ object Streams {
       body: => DataFrame): DataFrame =
     graft.api.SessionMemo(spark, "streams.op", (dir, op))(body)
 
-  /** Which persisted replays this process served from disk vs actually
-    * replayed — surfaced in BENCH_FULL.json (`replays_warm` /
-    * `replays_cold`) so a warm run's near-zero build_sec is
-    * self-explaining instead of looking like streams that never ran.
-    */
-  private val replayWarm = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val replayCold = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def replayDiskStats: (List[String], List[String]) = {
-    import scala.jdk.CollectionConverters._
-    (replayWarm.asScala.toList.sorted, replayCold.asScala.toList.sorted)
-  }
-
-  private def replayStore(dir: String, op: String): String =
-    s"${graft.api.Bucketing.scratchBase}/replay_${op}_" +
-      graft.api.Dedup.tableTag(dir)
-
   /** CROSS-PROCESS memo for finished finite replays, layered under
-    * [[cachedOp]]: the replay's result parquet is kept under the
-    * scratch root behind a `_GRAFT_FP` marker recording the
-    * content-evidence fingerprint of `srcPaths` (the
-    * [[graft.ops.Pipeline]] cachedParquet discipline — sha256 of each
-    * source file's edges, so even a timestamp-preserving regen
-    * rebuilds). A cold process whose sources are unchanged reads the
-    * finished replay instead of re-paying source listing + micro-batch
-    * + checkpoint + state machinery for bytes that cannot change —
-    * the restart-from-checkpoint deployment shape, which on unchanged
-    * input processes zero new files and serves the sink (the
-    * StreamingSpec resume test pins exactly that contract on a live
-    * checkpoint). Fingerprint gating is deliberately STRICTER than
+    * [[cachedOp]]: the replay's result parquet is a
+    * [[graft.api.BuildCache]] entry keyed by `op`, `ver` and the
+    * fingerprint of `srcPaths`. A cold process whose sources are
+    * unchanged reads the finished replay instead of re-paying source
+    * listing + micro-batch + checkpoint + state machinery for bytes that
+    * cannot change — the restart-from-checkpoint deployment shape,
+    * which on unchanged input processes zero new files and serves the
+    * sink (the StreamingSpec resume test pins exactly that contract on a
+    * live checkpoint). The fingerprint is deliberately STRICTER than
     * resuming the real checkpoint here: a file source keys processed
-    * files by path, so an in-place rewrite (same path, new bytes)
-    * would NOT be reprocessed by a resumed stream — the fingerprint
-    * catches it and forces a full honest re-replay. `ver` pins the
-    * replay recipe; bump it when the plan or parameters change.
-    * Single-writer per store path across processes (the cachedParquet
-    * concurrency scope); `srcPaths` is by-name because staging
-    * (`Sources.ensureStream*`) must run before fingerprinting.
+    * files by path, so an in-place rewrite (same path, new bytes) would
+    * NOT be reprocessed by a resumed stream — the fingerprint catches it
+    * and forces a full honest re-replay. `ver` pins the replay recipe;
+    * bump it when the plan or parameters change. `srcPaths` is by-name
+    * because staging (`Sources.ensureStream*`) must run before
+    * fingerprinting.
     */
   private[graft] def persistedOp(spark: SparkSession, dir: String, op: String,
                                  ver: Int, srcPaths: => Seq[String])(
       body: => DataFrame): DataFrame =
-    cachedOp(spark, dir, op) {
-      val store = replayStore(dir, op)
-      val fp = s"v$ver:" +
-        graft.api.Dedup.sourceFingerprint(spark, srcPaths: _*)
-      val (df, warm) = graft.api.Dedup.loadOrBuildParquet(spark,
-        s"$store/data", java.nio.file.Paths.get(store, "_GRAFT_FP"), fp)(body)
-      (if (warm) replayWarm else replayCold).add(op)
-      graft.api.ScratchStats.record(s"replay_$op", dir, warm)
-      df
-    }
+    cachedOp(spark, dir, op)(graft.api.SchemaMemo.read(spark,
+      graft.api.BuildCache(spark, s"replay_$op", ver, srcPaths, dir)(
+        body.write.mode("overwrite").parquet(_))))
 
   /** The three windowed replays (tumble-complete / tumble-append /
     * session), built ONCE per (session, dir) as three CONCURRENT
@@ -229,24 +199,11 @@ object Streams {
   private[graft] def windowedReplays(spark0: SparkSession,
                                      dir: String): Map[String, DataFrame] =
     graft.api.SessionMemo(spark0, "streams.windowed", dir) {
-      // cross-process layer (the persistedOp discipline, over all
-      // three sinks at once since they replay concurrently): all
-      // three fresh → read the finished replays; any stale → re-run
-      // the whole trio and republish
+      // cross-process layer: the trio is ONE build-cache entry (the
+      // persistedOp discipline), one subdirectory per sink
       val keys = Seq("tumble_complete", "tumble_append", "session_complete")
-      val fp = "v2:" + graft.api.Dedup
-        .sourceFingerprint(spark0, s"$dir/events.parquet")
-      def store(k: String) = replayStore(dir, s"win_$k")
-      val allFresh = keys.forall { k =>
-        graft.api.Dedup.markerFresh(
-          java.nio.file.Paths.get(store(k), "_GRAFT_FP"), fp)(
-          graft.api.Dedup.hasDataFiles(s"${store(k)}/data"))
-      }
-      graft.api.ScratchStats.record("replay_windowed", dir, allFresh)
-      if (allFresh) {
-        replayWarm.add("windowed")
-        keys.map(k => k -> spark0.read.parquet(s"${store(k)}/data")).toMap
-      } else {
+      val out = graft.api.BuildCache(spark0, "replay_windowed", 2,
+          Seq(s"$dir/events.parquet"), dir) { out =>
         val spark = childSession(spark0, rocksdb = false)
         def tumbleAgg = eventsStream(spark, dir)
           .withWatermark("ts", "1 hour")
@@ -262,16 +219,13 @@ object Streams {
           "tumble_complete" -> startToMemory(tumbleAgg, "complete"),
           "tumble_append" -> startToMemory(tumbleAgg, "append"),
           "session_complete" -> startToMemory(sessAgg, "complete"))
-        replayCold.add("windowed")
-        started.map { case (key, (q, name)) =>
+        started.foreach { case (key, (q, name)) =>
           q.awaitTermination()
           rmCk(name)
-          key -> graft.api.Dedup.loadOrBuildParquet(spark,
-            s"${store(key)}/data",
-            java.nio.file.Paths.get(store(key), "_GRAFT_FP"), fp)(
-            spark.table(name))._1
-        }.toMap
+          spark.table(name).write.mode("overwrite").parquet(s"$out/$key")
+        }
       }
+      keys.map(k => k -> graft.api.SchemaMemo.read(spark0, s"$out/$k")).toMap
     }
 
   /** Tumbling 10-minute counts + exact-decimal sums with a 1-hour
@@ -437,22 +391,17 @@ object Streams {
     * fresh UUID dir per call, and Graft.clear removes it with the
     * session's other memo entries (a frame a replay builder returned
     * reads this dir, so consume it before the clear — persistedOp
-    * copies it into its store). The key tag is sha256-derived
+    * copies it into its build-cache entry). The key tag is sha256-derived
     * (Dedup.tableTag): a 32-bit hashCode collision between two glob
     * strings in one session would cross-contaminate their replay sinks.
     */
   private def scratchDir(spark0: SparkSession, ns: String,
                          key: String): String =
     graft.api.SessionMemo.withRelease[String](spark0, "streams.scratch", (ns, key),
-        d => rmTree(new java.io.File(d))) {
-      s"${sys.props("java.io.tmpdir")}/$ns/" +
+        d => rmTree(d)) {
+      s"${graft.api.BuildCache.root}/$ns/" +
         s"${org.apache.spark.sql.GraftSessionId.of(spark0)}_${graft.api.Dedup.tableTag(key)}"
     }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
 
   /** Streaming incremental near-dup detection — continuous corpus
     * ingestion deduped per micro-batch against a STATIC corpus band
@@ -487,7 +436,7 @@ object Streams {
     // the same treatment via rmCk), and a stale partition from an
     // earlier run with more batches can't bleed into the read-back
     val outDir = scratchDir(spark0, "graft-incr", filesGlob)
-    rmTree(new java.io.File(outDir))
+    rmTree(outDir)
     val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
       val sh = graft.api.Dedup.shingles(batch, idCol, textCol)
       try graft.api.Dedup
@@ -536,7 +485,7 @@ object Streams {
     val base = scratchDir(spark0, "graft-semincr", filesGlob)
     val outDir = s"$base/survivors"
     val seenDir = s"$base/seen"
-    rmTree(new java.io.File(base))
+    rmTree(base)
     val corpus = corpusIndex.select(col("vec_id"), col("v"), col("cent_id"))
     val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
       // the prior read MUST exclude this batch's own partition: on
@@ -598,7 +547,7 @@ object Streams {
     val base = scratchDir(spark0, "graft-parincr", filesGlob)
     val outDir = s"$base/cleaned"
     val seenDir = s"$base/seen"
-    rmTree(new java.io.File(base))
+    rmTree(base)
     val corpus = corpusHashes.select(col("h"))
     val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
       val prior = scala.util.Try(spark.read.parquet(seenDir)

@@ -1247,18 +1247,16 @@ class ApiSpec extends AnyFunSuite {
     // serialization serves the SAME literals a cold process would use
     val b = graft.ops.Pipeline.kmeansCents(spark, d)
     assert(a === b, "disk round-trip must reproduce exact doubles")
-    val marker = java.nio.file.Paths.get(
-      s"${graft.api.Bucketing.scratchBase}/kmcents_" +
-        graft.api.Dedup.tableTag(d), "_GRAFT_FP")
-    val fpBefore = Files.readString(marker)
-    // a source mtime bump invalidates: recompute + re-sign, same ids
+    assert(graft.api.BuildCache.outcome("kmcents", d) === ((1, 1)),
+      "the second process-equivalent call is served from disk")
+    // a source mtime bump invalidates: recompute into a new entry, same ids
     val f = dir.resolve("embeddings.parquet").toFile
     assert(f.setLastModified(f.lastModified() + 2000))
     Graft.clear(spark)
     val c = graft.ops.Pipeline.kmeansCents(spark, d)
     assert(c.map(_._1) === a.map(_._1))
-    assert(Files.readString(marker) !== fpBefore,
-      "marker must record the new source fingerprint")
+    assert(graft.api.BuildCache.outcome("kmcents", d) === ((1, 2)),
+      "a changed source must rebuild")
   }
 
   test("shuffleOrder validateUnique rejects duplicate ids eagerly") {
@@ -1271,36 +1269,6 @@ class ApiSpec extends AnyFunSuite {
       spark.range(10).select(col("id").as("doc_id")), "doc_id", seed = 7,
       validateUnique = true)
     assert(ok.select("shuffle_pos").distinct().count() === 10)
-  }
-
-  test("concurrent publishers to one index path serialize on the lock") {
-    val dir = java.nio.file.Files.createTempDirectory("pubrace").toString
-    val sh = Dedup.shingles(docs.limit(20), "doc_id", "text")
-      .persist()
-    sh.count()
-    val idx = Dedup.buildBandIndex(sh)
-    import java.util.concurrent.Executors
-    import scala.concurrent._
-    import scala.concurrent.duration._
-    val pool = Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // two publishers, same path, same content: without the lock one
-    // could retire the other's fresh publish or strand a retired
-    // sibling; with it both complete and the survivor loads cleanly
-    val fp = "a" * 64
-    val fs = Seq.fill(2)(Future(
-      scala.util.Try(Dedup.saveBandIndex(spark, s"$dir/idx", idx, sh, fp))))
-    val results = Await.result(Future.sequence(fs), 4.minutes)
-    pool.shutdown()
-    sh.unpersist()
-    assert(results.forall(_.isSuccess),
-      s"both publishers must complete: ${results.map(_.failed.toOption)}")
-    // the survivor is a complete, fingerprint-matching index
-    assert(Dedup.loadBandIndex(spark, s"$dir/idx", fp).isDefined)
-    // no lock or retired sibling left behind
-    val leftovers = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(n => n.contains(".lock") || n.contains(".retired"))
-    assert(leftovers.isEmpty, s"stranded: ${leftovers.mkString(",")}")
   }
 
   test("removeDuplicatedExtents matches brute-force duplicated-substring coverage") {
@@ -1353,113 +1321,47 @@ class ApiSpec extends AnyFunSuite {
     assert(got(6L) === 0L, "unique text must be untouched")
   }
 
-  test("sourceFingerprint carries content evidence, not just metadata") {
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("fpcontent")
-    val f = dir.resolve("data.bin")
-    Files.write(f, Array.fill(1000)('a'.toByte))
-    val mtime = f.toFile.lastModified()
-    val fp1 = Dedup.sourceFingerprint(spark, f.toString)
-    // the wrong-answer hazard: a regen that preserves BOTH length and
-    // mtime (tar/rsync with timestamp preservation, sub-granularity
-    // rewrites) must still invalidate — metadata-only fingerprints
-    // silently serve stale cross-process caches in exactly this case
-    Files.write(f, Array.fill(1000)('b'.toByte))
-    assert(f.toFile.setLastModified(mtime))
-    val fp2 = Dedup.sourceFingerprint(spark, f.toString)
-    assert(fp1 !== fp2,
-      "same len+mtime, different bytes must change the fingerprint")
-    // and through the marker protocol: the old marker no longer matches
-    val marker = dir.resolve("_FP")
-    Dedup.writeMarker(marker, fp1)
-    assert(!Dedup.markerFresh(marker, fp2)(true),
-      "a stale-content marker must read as not-fresh")
-    // a large file differing only in its tail also invalidates (the
-    // edge windows cover both ends; parquet rewrites always move the
-    // footer, which lives in the tail window)
-    val big = dir.resolve("big.bin")
-    val payload = Array.fill(3 * Dedup.FingerprintEdgeBytes)('x'.toByte)
-    Files.write(big, payload)
-    val bmt = big.toFile.lastModified()
-    val bfp1 = Dedup.sourceFingerprint(spark, big.toString)
-    payload(payload.length - 1) = 'y'.toByte
-    Files.write(big, payload)
-    assert(big.toFile.setLastModified(bmt))
-    assert(Dedup.sourceFingerprint(spark, big.toString) !== bfp1)
-  }
-
-  test("hasDataFiles requires every subdirectory leg to hold data") {
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("dataleg")
-    // flat layout with one data file: present
-    Files.write(dir.resolve("part-0.parquet"), Array[Byte](1))
-    assert(Dedup.hasDataFiles(dir.toString))
-    // marker-only: absent (the marker is not data)
-    val markerOnly = Files.createTempDirectory("dataleg2")
-    Files.write(markerOnly.resolve("_GRAFT_OK"), Array[Byte](1))
-    assert(!Dedup.hasDataFiles(markerOnly.toString))
-    // stream layout s0/s1/s2 with every leg populated: present
-    val nested = Files.createTempDirectory("dataleg3")
-    (0 until 3).foreach { i =>
-      val d = nested.resolve(s"s$i"); Files.createDirectory(d)
-      Files.write(d.resolve("part-0.parquet"), Array[Byte](1))
+  test("a same-size mid-file rewrite with the mtime restored is rebuilt, not served stale") {
+    import java.nio.file.Files
+    // ~203 KiB of plain-encoded, uncompressed longs (no dictionary, no
+    // page checksum): one value's bytes sit mid-file, and changing it to
+    // another non-extreme value leaves the size, every page and chunk
+    // statistic and so the whole footer untouched
+    val dir = Files.createTempDirectory("stalemid")
+    val tmp = dir.resolve("w").toString
+    spark.range(26000).select((col("id") * 2).as("v")).coalesce(1).write
+      .option("compression", "none")
+      .option("parquet.enable.dictionary", "false")
+      .option("parquet.page.write-checksum.enabled", "false")
+      .parquet(tmp)
+    val src = dir.resolve("src.parquet")
+    Files.copy(new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, src)
+    def le(v: Long): Array[Byte] = java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array()
+    val bytes = Files.readAllBytes(src)
+    val len = bytes.length
+    val hits = (0 to len - 8).filter(i => bytes.slice(i, i + 8).sameElements(le(26000L)))
+    assert(hits.size === 1, s"one plain-encoded occurrence of the value: $hits")
+    val off = hits.head
+    assert(len > 200 * 1024 && off > 65536 && off < len - 65536,
+      s"the value must sit outside both 64 KiB edges ($off of $len)")
+    val d = dir.toString
+    def total(): Long = {
+      val tbl = api.Bucketing.ensureBucketed(spark, d, "stalemid",
+        spark.read.parquet(src.toString), "v", srcPaths = Seq(src.toString))
+      spark.table(tbl).agg(sum("v")).head().getLong(0)
     }
-    assert(Dedup.hasDataFiles(nested.toString))
-    // one leg emptied by a partial cleanup: the whole output is gone —
-    // the replay would otherwise silently stream zero rows for s1
-    Files.delete(nested.resolve("s1/part-0.parquet"))
-    assert(!Dedup.hasDataFiles(nested.toString),
-      "an emptied subdirectory leg must mean rebuild")
-  }
-
-  test("publish waiter outlasts a held lock; a stale lock is stolen") {
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("lockwait").toString
-    val sh = Dedup.shingles(docs.limit(10), "doc_id", "text").persist()
-    sh.count()
-    val idx = Dedup.buildBandIndex(sh)
-    val fp = "b" * 64
-    // a FRESH lock held by a (simulated) live publisher: the waiter must
-    // keep waiting — not fail on a fixed short timeout, the round-11
-    // failure mode where slow-host contention became a hard error —
-    // and proceed once the holder releases (~6 s in)
-    val lock = Paths.get(s"$dir/idx.lock")
-    Files.write(lock, "held@test".getBytes)
-    val releaser = new Thread(() => {
-      Thread.sleep(6000); Files.deleteIfExists(lock); ()
-    })
-    releaser.start()
-    val t0 = System.nanoTime()
-    Dedup.saveBandIndex(spark, s"$dir/idx", idx, sh, fp)
-    val waitedSec = (System.nanoTime() - t0) / 1e9
-    releaser.join()
-    assert(waitedSec >= 5.0,
-      s"publisher must have waited for the held lock (waited $waitedSec s)")
-    assert(Dedup.loadBandIndex(spark, s"$dir/idx", fp).isDefined)
-    // a STALE lock (crashed publisher, mtime past the threshold) is
-    // stolen by atomic rename — no judge-then-delete of a fresh lock —
-    // and the publish proceeds promptly
-    Files.write(lock, "crashed@test".getBytes)
-    assert(lock.toFile.setLastModified(
-      System.currentTimeMillis() - Dedup.PublishLockStaleMs - 60000))
-    val t1 = System.nanoTime()
-    Dedup.saveBandIndex(spark, s"$dir/idx", idx, sh, "c" * 64)
-    sh.unpersist()
-    assert((System.nanoTime() - t1) / 1e9 < 60.0,
-      "a stale lock must be stolen, not waited out")
-    assert(Dedup.loadBandIndex(spark, s"$dir/idx", "c" * 64).isDefined)
-    assert(!Files.exists(lock), "the lock must be released after publish")
-  }
-
-  test("index save rejects fingerprints that could corrupt meta.json") {
-    val dir = java.nio.file.Files.createTempDirectory("badfp").toString
-    val sh = Dedup.shingles(docs.limit(5), "doc_id", "text")
-    val idx = Dedup.buildBandIndex(sh)
-    for (bad <- Seq("a\"b", "x,y{", "", "fp with spaces")) {
-      val e = intercept[IllegalArgumentException](
-        Dedup.saveBandIndex(spark, s"$dir/i", idx, sh, bad))
-      assert(e.getMessage.contains("fingerprint"))
-    }
+    val before = total()
+    Graft.clear(spark)
+    // same path, size, ms mtime and edges; only the middle changed
+    val mtime = src.toFile.lastModified()
+    val raf = new java.io.RandomAccessFile(src.toFile, "rw")
+    try { raf.seek(off); raf.write(le(26001L)) } finally raf.close()
+    assert(src.toFile.setLastModified(mtime))
+    assert(Files.size(src) === len.toLong)
+    assert(total() === before + 1, "a stale bucketed table was served")
+    Graft.clear(spark)
   }
 
   test("splitLeakage counts cross-split pairs; group-aware split zeroes them") {
@@ -1775,25 +1677,32 @@ class ApiSpec extends AnyFunSuite {
     val direct = Dedup.incrementalMinhashPairsIndexed(corpusSh,
         Dedup.buildBandIndex(corpusSh), newSh, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val path = java.nio.file.Files.createTempDirectory("bandidx").toString
-    val (savedIdx, savedSh) = Dedup.saveBandIndex(spark, path,
-      Dedup.buildBandIndex(corpusSh), corpusSh, fingerprint = "fp-v1")
+    // the corpus frame is in-memory: a marker file stands in for the
+    // source files it is a deterministic function of
+    val dir = java.nio.file.Files.createTempDirectory("bandidx")
+    val src = java.nio.file.Files.writeString(dir.resolve("corpus.txt"), "v1")
+    def cached() = Dedup.cachedBandIndex(spark, dir.toString, Seq(src.toString))(corpusSh)
+    def outcome = graft.api.BuildCache.outcome("bands", dir.toString)
+    val (savedIdx, savedSh) = cached()
     val viaSaved = Dedup.incrementalMinhashPairsIndexed(savedSh, savedIdx,
         newSh, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaSaved === direct)
-    val loaded = Dedup.loadBandIndex(spark, path, "fp-v1")
-    assert(loaded.isDefined, "matching fingerprint must load")
-    val (loadedIdx, loadedSh) = loaded.get
+    Graft.clear(spark)
+    val (loadedIdx, loadedSh) = cached()
+    assert(outcome === ((1, 1)), "an unchanged fingerprint must load")
     assert(loadedIdx.numPerms === 128 && loadedIdx.bands === 32)
     val viaLoaded = Dedup.incrementalMinhashPairsIndexed(loadedSh, loadedIdx,
         newSh, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaLoaded === direct)
-    // a changed corpus fingerprint (or missing index) must refuse, so a
-    // stale index can never silently serve wrong candidates
-    assert(Dedup.loadBandIndex(spark, path, "fp-v2").isEmpty)
-    assert(Dedup.loadBandIndex(spark, path + "/absent", "fp-v1").isEmpty)
+    // a changed corpus fingerprint must refuse, so a stale index can
+    // never silently serve wrong candidates
+    java.nio.file.Files.writeString(src, "v2")
+    Graft.clear(spark)
+    cached()
+    assert(outcome === ((1, 2)), "a changed fingerprint must rebuild")
+    Graft.clear(spark)
   }
 
   test("segment index round-trips with fingerprint + segTokens guard") {
@@ -1809,23 +1718,23 @@ class ApiSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val fresh = Dedup.segmentHashes(corpus, "doc_id", "text", 3)
     val direct = result(fresh)
-    val path = java.nio.file.Files.createTempDirectory("segidx").toString + "/idx"
-    val saved = Dedup.saveSegmentIndex(spark, path, fresh,
-      fingerprint = "fp-v1", segTokens = 3)
-    assert(result(saved) === direct)
-    val loaded = Dedup.loadSegmentIndex(spark, path, "fp-v1", segTokens = 3)
-    assert(loaded.isDefined, "matching fingerprint + segTokens must load")
-    assert(result(loaded.get) === direct)
-    // stale fingerprint, different segmentation, or absence must refuse
-    assert(Dedup.loadSegmentIndex(spark, path, "fp-v2", 3).isEmpty)
-    assert(Dedup.loadSegmentIndex(spark, path, "fp-v1", 5).isEmpty)
-    assert(Dedup.loadSegmentIndex(spark, path + "absent", "fp-v1", 3).isEmpty)
-    // republish over the existing index (the retired-sibling swap path)
-    val saved2 = Dedup.saveSegmentIndex(spark, path, fresh,
-      fingerprint = "fp-v2", segTokens = 3)
-    assert(result(saved2) === direct)
-    assert(Dedup.loadSegmentIndex(spark, path, "fp-v1", 3).isEmpty,
-      "old fingerprint must refuse after republish")
+    val dir = java.nio.file.Files.createTempDirectory("segidx")
+    val src = java.nio.file.Files.writeString(dir.resolve("corpus.txt"), "v1")
+    def cached(segTokens: Int) = Dedup.cachedSegmentIndex(spark, dir.toString,
+      Seq(src.toString), segTokens)(fresh)
+    def outcome = graft.api.BuildCache.outcome("segs", dir.toString)
+    assert(result(cached(3)) === direct)
+    Graft.clear(spark)
+    assert(result(cached(3)) === direct)
+    assert(outcome === ((1, 1)), "matching fingerprint + segTokens must load")
+    // a different segmentation, or a changed fingerprint, must rebuild
+    cached(5)
+    assert(outcome === ((1, 2)))
+    java.nio.file.Files.writeString(src, "v2")
+    Graft.clear(spark)
+    assert(result(cached(3)) === direct)
+    assert(outcome === ((1, 3)))
+    Graft.clear(spark)
   }
 
   test("funnel/ewma reject non-string, non-integral user keys loudly") {

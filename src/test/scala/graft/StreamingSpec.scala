@@ -177,7 +177,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("persisted replay: cold writes the store, warm serves it, regen rebuilds") {
-    import graft.api.{Bucketing, Dedup}
+    import graft.api.BuildCache
     // own source dir — the shared sfDir store may already be warm from
     // an earlier process, which would make cold/warm observations racy
     val dir = java.nio.file.Files.createTempDirectory("preplay").toString
@@ -199,32 +199,34 @@ class StreamingSpec extends AnyFunSuite {
     }
     write(Seq((1L, 10L, "click", 1.0), (2L, 10L, "click", 2.0),
       (3L, 11L, "view", 3.0)))
-    def dataFiles(store: String): Map[String, Long] = {
-      val d = new java.io.File(s"$store/data")
-      Option(d.listFiles()).getOrElse(Array.empty)
+    def dataFiles(): Map[String, Long] = {
+      val d = BuildCache.root.resolve(s"replay_dedup_keys-${graft.api.Dedup.tableTag(dir)}")
+      Option(d.toFile.listFiles()).getOrElse(Array.empty).flatMap(e =>
+        Option(e.listFiles()).getOrElse(Array.empty))
         .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(f => f.getName -> f.lastModified()).toMap
+        .map(f => f.getPath -> f.lastModified()).toMap
     }
-    val store = s"${Bucketing.scratchBase}/replay_dedup_keys_" +
-      Dedup.tableTag(dir)
+    def outcome = BuildCache.outcome("replay_dedup_keys", dir)
     val first = Streams.dedupKeys(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(first === Set((10L, "click"), (11L, "view")))
-    val files1 = dataFiles(store)
-    assert(files1.nonEmpty, "cold call published the replay store")
+    val files1 = dataFiles()
+    assert(files1.nonEmpty && outcome === ((0, 1)),
+      "cold call published the replay entry")
     Graft.clear(spark) // drop the in-session memo → next call
     Thread.sleep(1100)          // must go through the disk layer
     val second = Streams.dedupKeys(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(second === first)
-    assert(dataFiles(store) === files1,
-      "unchanged sources: served from the store, no re-replay rewrite")
+    assert(dataFiles() === files1 && outcome === ((1, 1)),
+      "unchanged sources: served from the entry, no re-replay rewrite")
     write(Seq((1L, 20L, "buy", 1.0))) // regen: content change
     Graft.clear(spark)
     val third = Streams.dedupKeys(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(third === Set((20L, "buy")),
-      "regenerated source invalidates the store and re-replays")
+      "regenerated source invalidates the entry and re-replays")
+    assert(outcome === ((1, 2)))
   }
 
   test("rate source smoke: unbounded synthetic stream plans and runs") {
