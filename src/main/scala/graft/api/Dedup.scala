@@ -1027,7 +1027,7 @@ object Dedup {
     * threshold, the labels are finished on the driver by union-find
     * ([[unionFindLabels]]) instead of more shuffle rounds. Fixpoint
     * iteration over a tiny frame is driver-ROUND-TRIP bound: a
-    * profiled sf0.1 run (tools/CcProfile, 13.5k edges) spent 6.4 s
+    * profiled sf0.1 run (per-stage trace, 13.5k edges) spent 6.4 s
     * of wall on ~60 scheduling-bound stages and 3.7 s of between-stage
     * driver gaps for work a single driver pass does in milliseconds —
     * the exact shape Kiveris et al. finish locally. Results are

@@ -284,7 +284,7 @@ object Graphs {
     // f1/f2 execute twice — and rounds 2-3 plan ShuffledHashJoin that
     // re-exchanges the FULL und cache per round (no frontier stats at
     // planning; localCheckpoint-free frontiers are shuffle outputs,
-    // but the duplicated subtrees dominate). QProf warm at sf0.1
+    // but the duplicated subtrees dominate). Traced warm at sf0.1
     // local[32]: loop 1.45 s / 22 jobs vs unroll 2.66 s / 18 jobs —
     // the saved driver actions do not pay for the re-execution.
     // Pregel-superstep materialization: every round's NEW frontier is

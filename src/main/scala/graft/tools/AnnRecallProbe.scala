@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN recall harness on CLUSTERED vectors — a deterministic mixture of
@@ -51,10 +51,8 @@ object AnnRecallProbe {
     val nQueries = 24
     val defaultShape = n == 50000 && dim == 32 && nClusters == 64
     val measured = scala.collection.mutable.Buffer.empty[(String, String, Double)]
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkConfig.builder("graft-annrecall",
+      graft.SparkConfig.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.api.Similarity
 

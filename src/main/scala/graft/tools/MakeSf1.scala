@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a ~10x replica of an sf dir (sf0.1 -> "sf1") for the
@@ -16,18 +16,17 @@ import org.apache.spark.sql.functions._
   * exact copies of every document (which would explode pair counts
   * combinatorially and measure a replication artifact instead).
   *
-  * Usage: MakeSf1 [srcDir] [dstDir] [mult]   (defaults sf0.1 ->
-  * /tmp/graft_sf1 x10). Output tables are parquet DIRECTORIES named
+  * Usage: MakeSf1 <srcDir> [dstDir] [mult]   (defaults /tmp/graft_sf1,
+  * x10). Output tables are parquet DIRECTORIES named
   * `<table>.parquet` — the same names the bench resolves.
   */
 object MakeSf1 {
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val src = args(0)
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkConfig.builder("graft-makesf1",
+      graft.SparkConfig.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val OFF = 100000000L // disjoint key spaces per replica

@@ -1,38 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Focused near-dup scale probe: pairs / wall / shuffle bytes at 1x and
   * Nx under the same bijective word-renaming replication as ScaleProbe,
   * plus a content checksum over the pair set so any plan change can
   * prove byte-identical output, not just equal counts.
-  * Usage: NearDupProbe [sfDir] [mult]
+  * Usage: NearDupProbe <sfDir> [mult] [hot]
   */
 object NearDupProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val dir = args(0)
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkConfig.builder("graft-neardupprobe",
+      graft.SparkConfig.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.api.Dedup
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val b = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-          shuffleBytes.addAndGet(b)
-          if (b > 2000000 && sys.env.contains("NDP_STAGES"))
-            println(f"    stage ${sc.stageInfo.stageId}%4d " +
-              f"${b / 1e6}%8.1f MB  ${sc.stageInfo.name.take(90)}")
-        }
-      })
-    def shufSnap(): Long = { Thread.sleep(500); shuffleBytes.get }
+    val counters = graft.obs.SparkCounters.install(spark.sparkContext)
+    def shufSnap(): Long = counters.snapshot("shuffle_write_bytes").toLong
 
     val docs0 = spark.read.parquet(s"$dir/documents.parquet")
     def docsFor(m: Int) = docs0
@@ -55,21 +41,11 @@ object NearDupProbe {
     // `hot` mode: plant a boilerplate 4-gram with df just under maxDf
     // (the worst legal skew) and compare the salted hot-tok join
     // (default hotDf) against the unsalted shape (hotDf = maxDf): the
-    // straggler bound is the max-task / median-task ratio of the
-    // heaviest stage. The planted gram adds NO output pairs (its docs
-    // share only boilerplate, jaccard ≪ threshold) — it exists purely
-    // to blow up one join group.
+    // straggler bound is the max-task / mean-task CPU ratio of the
+    // stage whose slowest task is worst. The planted gram adds NO
+    // output pairs (its docs share only boilerplate, jaccard ≪
+    // threshold) — it exists purely to blow up one join group.
     if (args.contains("hot")) {
-      val taskTimes = scala.collection.concurrent
-        .TrieMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            taskTimes.getOrElseUpdate(te.stageId,
-              scala.collection.mutable.ArrayBuffer.empty[Long])
-              .synchronized { taskTimes(te.stageId) += te.taskInfo.duration }
-        })
       // Derive the plant rate from the df cap, not a fixed fraction of
       // the corpus: a fixed modulus makes df scale with `mult`, so
       // outside one narrow corpus-size band the planted gram would be
@@ -89,22 +65,21 @@ object NearDupProbe {
           s"nothing skewed would be measured")
       for ((hd, label) <- Seq(1000 -> "salted(hotDf=1000)",
                               maxDfCap -> "unsalted(hotDf=maxDf)")) {
-        taskTimes.clear()
+        spark.sparkContext.setJobGroup(label, label, false)
         val sh = Dedup.shingles(planted, "doc_id", "text")
         val t0 = System.nanoTime()
         val pr = Dedup.nearDuplicatePairs(sh, 0.5, maxDf = maxDfCap, hotDf = hd)
         val n = pr.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val ck = checksum(pr)
-        Thread.sleep(500)
         // straggler metric: the stage whose max task is globally worst
-        val (sid, ds) = taskTimes.toSeq.filter(_._2.nonEmpty)
-          .maxBy(_._2.max)
-        val sorted = ds.sorted
-        val med = math.max(1L, sorted(sorted.size / 2))
+        val worst = counters.stages.filter(_.group == label)
+          .maxBy(_.counts("max_task_cpu_s"))
+        val max = worst.counts("max_task_cpu_s")
+        val mean = math.max(1e-3, worst.counts("executor_cpu_s") / worst.counts("tasks"))
         println(f"hot-tok $label%-22s df=$nHot pairs=$n wall=$wall%7.2f s  " +
-          f"ck=$ck  worst-stage=$sid max-task=${sorted.last / 1e3}%.1f s " +
-          f"median-task=${med / 1e3}%.3f s ratio=${sorted.last.toDouble / med}%.1fx")
+          f"ck=$ck  worst-stage=${worst.id} max-task=$max%.1f s " +
+          f"mean-task=$mean%.3f s ratio=${max / mean}%.1fx")
         sh.unpersist()
       }
       spark.stop(); return

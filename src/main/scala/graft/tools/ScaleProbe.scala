@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic 10x scale-up probe: replicates the sf0.1 corpus with
@@ -9,30 +8,23 @@ import org.apache.spark.sql.functions._
   * near-dup candidate generation must grow ~linearly with the corpus
   * (inverted index), NOT quadratically, and the big joins/aggs must
   * stay shuffle-bound rather than exploding.
+  *
+  * Usage: ScaleProbe <sfDir> [mult]
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val dir = args(0)
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkConfig.builder("graft-scaleprobe",
+      graft.SparkConfig.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.api.Dedup
 
-    // running total of shuffle-write bytes across all completed stages:
-    // the probe reports per-block deltas so growth factors expose any
-    // hidden quadratic shuffle, not just wall-clock noise
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
-    def shufSnap(): Long = { Thread.sleep(500); shuffleBytes.get } // listener lag
+    // running total of shuffle-write bytes: the probe reports per-block
+    // deltas so growth factors expose any hidden quadratic shuffle, not
+    // just wall-clock noise
+    val counters = graft.obs.SparkCounters.install(spark.sparkContext)
+    def shufSnap(): Long = counters.snapshot("shuffle_write_bytes").toLong
 
     def tm[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
@@ -485,6 +477,21 @@ object ScaleProbe {
       f"${mult}x=$srN tokens cut ${dsrN}%.2f s  time-growth=${dsrN / dsr1}%.1fx  " +
       f"cut-growth=${srN.toDouble / sr1}%.1fx (expect exactly ${mult}x)")
 
+    // per-gram span removal: the same disjoint-gram argument, so each
+    // replica reproduces the 1x keeper/run structure and the cut mass is
+    // exactly mult x
+    val tsrg1 = System.nanoTime()
+    val sgc1 = Dedup.removeSharedSegmentsByGram(docsFor(1), "doc_id", "text",
+      8, 3).agg(sum("n_removed")).collect()(0).getLong(0)
+    val dsgc1 = (System.nanoTime() - tsrg1) / 1e9
+    val tsrgN = System.nanoTime()
+    val sgcN = Dedup.removeSharedSegmentsByGram(docs, "doc_id", "text",
+      8, 3).agg(sum("n_removed")).collect()(0).getLong(0)
+    val dsgcN = (System.nanoTime() - tsrgN) / 1e9
+    println(f"span-removal-gram (${mult}x corpus): 1x=$sgc1 tokens cut ${dsgc1}%.2f s  " +
+      f"${mult}x=$sgcN tokens cut ${dsgcN}%.2f s  time-growth=${dsgcN / dsgc1}%.1fx  " +
+      f"cut-growth=${sgcN.toDouble / sgc1}%.1fx (expect exactly ${mult}x)")
+
     // exact duplicate-extent removal (delete-all, occurrence-counted) at
     // mult x: replica word-renaming keeps per-replica duplication
     // structure identical and cross-replica grams disjoint, so the cut
@@ -550,6 +557,42 @@ object ScaleProbe {
       f"${mult}x=$bpNtok ${dbpN}%.2f s  time-growth=${dbpN / dbp1}%.1fx  " +
       f"token-growth=${bpNtok.toDouble / bp1tok}%.1fx (expect exactly ${mult}x)  " +
       f"repartition-invariant=${bpRep == bpNtok}")
+
+    // BPE encode-to-ids under the same fixed merges: one row per token,
+    // ids invariant per word, so the id stream is exactly mult x rows
+    val ten1 = System.nanoTime()
+    val en1 = TextAnalysis.bpeEncode(docsForSrc(1), "doc_id", "text", bpeM).count()
+    val den1 = (System.nanoTime() - ten1) / 1e9
+    val tenN = System.nanoTime()
+    val enN = TextAnalysis.bpeEncode(docsForSrc(mult), "doc_id", "text", bpeM).count()
+    val denN = (System.nanoTime() - tenN) / 1e9
+    println(f"bpe-encode (${mult}x corpus): 1x=$en1 ids ${den1}%.2f s  " +
+      f"${mult}x=$enN ids ${denN}%.2f s  time-growth=${denN / den1}%.1fx  " +
+      f"id-growth=${enN.toDouble / en1}%.1fx (expect exactly ${mult}x)")
+
+    // packed token stream: a GLOBAL-order construct, so the per-sequence
+    // digest rows (not just corpus-wide sums: a bug that permutes tokens
+    // between sequences keeps the totals) must not depend on input
+    // partitioning, and the token total is exactly mult x
+    def packedDigest(df: org.apache.spark.sql.DataFrame)
+        : (Long, Set[(Long, Long, Long, Long, Long, Long)]) = {
+      val rows = graft.api.Packing.packTokenStream(df, "doc_id", "text",
+          bpeM, seqLen = 128)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+      (rows.toSeq.map(_._2).sum, rows)
+    }
+    val tps1 = System.nanoTime()
+    val (pt1, _) = packedDigest(docsForSrc(1))
+    val dps1 = (System.nanoTime() - tps1) / 1e9
+    val tpsN = System.nanoTime()
+    val (ptN, pkN) = packedDigest(docsForSrc(mult))
+    val dpsN = (System.nanoTime() - tpsN) / 1e9
+    val (_, pkR) = packedDigest(docsForSrc(mult).repartition(7))
+    println(f"pack-token-stream (${mult}x corpus): 1x=$pt1 toks ${dps1}%.2f s  " +
+      f"${mult}x=$ptN toks ${dpsN}%.2f s  time-growth=${dpsN / dps1}%.1fx  " +
+      f"tok-growth=${ptN.toDouble / pt1}%.1fx (expect exactly ${mult}x)  " +
+      f"repartition-invariant=${pkR == pkN}")
 
     // BPE trainer driver cap: the collect feeding Bpe.train is bounded
     // by a top-V TakeOrdered even as the corpus vocabulary grows mult x

@@ -717,9 +717,10 @@ class ShelfEndToEndSpec extends AnyFunSuite {
     Files.writeString(root.resolve(s"src/steps/tables/${uri.path}.sql"), sql)
 
   test("db views and a parquet-only rebuild start no schema-inference job") {
-    import org.apache.spark.GraftJobCounter.jobsIn
     val spark = SparkTestSession.spark
     val sc = spark.sparkContext
+    def jobsIn(sc: org.apache.spark.SparkContext)(body: => Unit): Int =
+      graft.obs.SparkCounters.during(sc)(body)("jobs").toInt
     val (shelf, root, src, dst) = srcDstShelf("jobs",
       "SELECT id AS dim_id, id * 2 AS v FROM range(10)",
       "SELECT dim_id, v + 1 AS w FROM {src}")

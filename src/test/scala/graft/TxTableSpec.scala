@@ -675,18 +675,8 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.overwriteClustered(spark, t,
       spark.range(4096).select(col("id"), (col("id") + 1000000L).as("w")),
       "id", numFiles = 8)
-    def recordsRead(action: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          acc.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { action; Thread.sleep(500) } // listener bus lag
-      finally spark.sparkContext.removeSparkListener(l)
-      acc.get
-    }
+    def recordsRead(action: => Unit): Long =
+      graft.obs.SparkCounters.during(spark.sparkContext)(action)("input_records").toLong
     val full = recordsRead {
       assert(spark.read.format("txtable").load(t).count() === 4096L)
     }
