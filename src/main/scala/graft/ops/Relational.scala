@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.ExactDistinctAgg
 import graft.ops.H._
 
 /** Core relational inventory: scans, filters, joins, aggregates, set ops,
@@ -236,7 +237,7 @@ object Relational {
                FROM lineitem"""),
       (s, dir) => t(s, dir, "lineitem").agg(
         count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
+        ExactDistinctAgg(col("l_orderkey")).as("n_orders"),
         dsum(col("l_quantity")).as("sum_qty"),
         round(min(col("l_extendedprice")), 4).as("min_price"),
         round(max(col("l_extendedprice")), 4).as("max_price"))),
@@ -249,8 +250,8 @@ object Relational {
       (s, dir) => t(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
-          countDistinct(col("l_partkey")).as("nd_parts"),
-          countDistinct(col("l_suppkey")).as("nd_supps"))
+          ExactDistinctAgg(col("l_partkey")).as("nd_parts"),
+          ExactDistinctAgg(col("l_suppkey")).as("nd_supps"))
         .orderBy("l_returnflag")),
 
     Q("q_agg_minmax_stats",
