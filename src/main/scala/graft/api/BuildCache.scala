@@ -3,6 +3,7 @@ package graft.api
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import graft.shelf.{StatCache, Tables}
@@ -35,6 +36,9 @@ import graft.shelf.{StatCache, Tables}
   *    deleted at `Graft.clear`.
   *  - After a publish, the entries of other keys under the same (recipe,
   *    scope) are deleted, as are stagings whose publisher has exited.
+  *    The first publish of a process also deletes, under the whole root,
+  *    every entry whose key names a local input that no longer exists:
+  *    its fingerprint holds inode and ctime, so no later input can match.
   *
   * Staging names are `<key hash>_<pid>_<nonce>`; every name under the
   * root is a valid SQL identifier fragment, so callers name catalog
@@ -79,6 +83,7 @@ object BuildCache {
         if (!intact(entry, key)) throw e
       }
       sweep(entry)
+      if (orphansSwept.compareAndSet(false, true)) scala.util.Try(sweepOrphans())
       entry.toString
     }
   }
@@ -193,6 +198,35 @@ object BuildCache {
       val owner = p.getFileName.toString.split('_').lift(1).flatMap(_.toLongOption)
       if (owner.forall(pid => !ProcessHandle.of(pid).isPresent)) quietlyDelete(p)
     }
+  }
+
+  private val orphansSwept = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Delete every published entry under [[root]] whose `_KEY` names a
+    * local absolute `input` path that no longer exists, then every (recipe,
+    * scope) directory left empty. Returns the entries deleted. Best
+    * effort: a directory it cannot list or a `_KEY` it cannot parse is
+    * skipped, so the sweep never fails the publish that runs it.
+    */
+  private[graft] def sweepOrphans(): Int = {
+    def children(d: Path): Vector[Path] =
+      try { val s = Files.list(d); try s.iterator().asScala.toVector finally s.close() }
+      catch { case NonFatal(_) => Vector.empty }
+    def orphaned(entry: Path): Boolean =
+      try Files.readAllLines(entry.resolve(KeyFile)).asScala.iterator
+        .takeWhile(_ != "-- manifest").filter(_.startsWith("input "))
+        .map(l => new org.apache.hadoop.fs.Path(l.stripPrefix("input ")).toUri)
+        .exists(u => Option(u.getScheme).forall(_ == "file") &&
+          u.getPath.startsWith("/") && !Files.exists(Paths.get(u.getPath)))
+      catch { case NonFatal(_) => false }
+    children(root).filter(Files.isDirectory(_)).map { dir =>
+      // published entries only: staging names carry `_<pid>_<nonce>`
+      val gone = children(dir)
+        .filter(e => !e.getFileName.toString.contains('_') && orphaned(e))
+      gone.foreach(retire)
+      scala.util.Try(Files.deleteIfExists(dir)) // only if now empty
+      gone.size
+    }.sum
   }
 
   private def quietlyDelete(p: Path): Unit =

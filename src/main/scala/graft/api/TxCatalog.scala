@@ -537,7 +537,7 @@ class TxSnapshotTable(spark: SparkSession, val path: String, ident: String,
     TxTable.snapshotState(spark, path, snapVersion)
   private[api] lazy val fileStatuses
       : Map[String, org.apache.hadoop.fs.FileStatus] =
-    TxTable.liveFileStatuses(spark, path, state)
+    TxTable.liveFileStatuses(spark, path, state.files)
   /** Per-file sorted position deletes of this snapshot (merge-on-read
     * DVs) — the row-based scan's per-partition filter sets; empty for
     * DV-free tables, which keep the native columnar plan. */
@@ -914,19 +914,27 @@ class TxRowLevelScanBuilder(spark: SparkSession, table: TxV2Table,
 
 /** A candidate file of a [[TxFileScan]] — scan-side BOOKKEEPING (the
   * runtime group filter and the rewrite's removed-file set operate at
-  * file granularity); the planned partition unit is [[TxFileSplit]].
+  * file granularity); the planned partition unit is [[TxSplitBin]].
   */
 case class TxFilePartition(rel: String, abs: String, len: Long,
                            dvPos: Array[Long] = Array.empty)
 
-/** One SPLIT of a data file — the partition unit of BOTH scan branches
+/** One SPLIT of a data file — the read unit of BOTH scan branches
   * (positions anchor per split from the parquet footer, so a large
   * file parallelizes exactly like the native scan instead of pinning
   * one task per file — on the rewrite path too, where a 1 GB file
   * would otherwise serialize its UPDATE through a single task).
   */
 case class TxFileSplit(abs: String, start: Long, length: Long,
-                       fileSize: Long, dvPos: Array[Long])
+                       fileSize: Long, dvPos: Array[Long]) {
+  private[api] def file =
+    GraftV2Bridge.partitionedFile(abs, start, length, fileSize)
+}
+
+/** The partition unit of every tx file scan: the splits one task reads,
+  * in order, each opened only when the one before it is drained.
+  */
+case class TxSplitBin(splits: Seq[TxFileSplit])
     extends org.apache.spark.sql.connector.read.InputPartition
 
 /** The scan builder a DV-bearing snapshot reads through: the same
@@ -1102,11 +1110,11 @@ class TxFileScan(spark: SparkSession, table: TxSnapshotTable,
     // first row index from the parquet footer (the reader's own
     // midpoint row-group selection rule)
     val split = GraftV2Bridge.maxSplitBytes(spark, files.map(_.len))
-    files.flatMap { f =>
+    GraftV2Bridge.packSplits(spark, files.flatMap { f =>
       (0L until f.len by split).map(off =>
         TxFileSplit(f.abs, off, math.min(split, f.len - off), f.len,
           f.dvPos))
-    }.toArray
+    }, (s: TxFileSplit) => s.file, split).map(TxSplitBin(_)).toArray
   }
 
   override def createReaderFactory()
@@ -1213,40 +1221,25 @@ class TxRowReaderFactory(
   override def createColumnarReader(
       partition: org.apache.spark.sql.connector.read.InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[TxFileSplit]
-    val it =
-      if (p.dvPos.isEmpty)
-        // untouched file: native batches as-is (filters already
-        // pushed into the reader — row-group skipping intact)
-        batchFn.get(GraftV2Bridge.partitionedFile(
-          p.abs, p.start, p.length, p.fileSize))
-      else
-        // DV-bearing: the row-index-carrying reader + per-batch
-        // compaction keyed on exact parquet row indexes — valid under
-        // row-group/page skipping, no footer read, no running count
-        TxDvColumnar.filtered(
-          dvBatchFn.get(GraftV2Bridge.partitionedFile(
-            p.abs, p.start, p.length, p.fileSize)),
-          p.dvPos, dataRead)
-    new org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-        current
-      override def close(): Unit = ()
-    }
-  }
+        org.apache.spark.sql.vectorized.ColumnarBatch] =
+    TxRowReaderFactory.reader(partition.asInstanceOf[TxSplitBin].splits
+      .iterator.flatMap { p =>
+        if (p.dvPos.isEmpty)
+          // untouched file: native batches as-is (filters already
+          // pushed into the reader — row-group skipping intact)
+          batchFn.get(p.file)
+        else
+          // DV-bearing: the row-index-carrying reader + per-batch
+          // compaction keyed on exact parquet row indexes — valid under
+          // row-group/page skipping, no footer read, no running count
+          TxDvColumnar.filtered(dvBatchFn.get(p.file), p.dvPos, dataRead)
+      })
 
   override def createReader(
       partition: org.apache.spark.sql.connector.read.InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-    val p = partition.asInstanceOf[TxFileSplit]
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
     val joined = StructType(dataRead.fields :+
       org.apache.spark.sql.types.StructField(TxRowLevel.FileCol,
         org.apache.spark.sql.types.StringType, nullable = false) :+
@@ -1256,10 +1249,22 @@ class TxRowReaderFactory(
       val i = joined.fieldIndex(f.name)
       BoundReference(i, f.dataType, f.nullable)
     })
+    TxRowReaderFactory.reader(partition.asInstanceOf[TxSplitBin].splits
+      .iterator.flatMap(rowsOf(_, proj)))
+  }
+
+  /** One split's rows through `proj`: Spark's parquet row reader, the
+    * split's deleted positions dropped, `_file`/`_pos` joined on when
+    * the scan produces them.
+    */
+  private def rowsOf(p: TxFileSplit,
+                     proj: org.apache.spark.sql.catalyst.expressions.UnsafeProjection)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     val fileRow = new GenericInternalRow(Array[Any](
       org.apache.spark.unsafe.types.UTF8String.fromString(p.abs)))
-    val base0 = readerFn(GraftV2Bridge.partitionedFile(
-      p.abs, p.start, p.length, p.fileSize))
+    val base0 = readerFn(p.file)
     // `posOf(0)` = the EMITTED row's parquet row index — the position
     // the del files record, surviving DV filtering intact: a row's id
     // must be its ORIGINAL position, never a post-delete renumbering.
@@ -1304,25 +1309,30 @@ class TxRowReaderFactory(
           ready = false; nextRow
         }
       }
-    val rows: Iterator[InternalRow] =
-      if (!needsFile && !needsPos) base.map(proj)
-      else {
-        val jr = new JoinedRow()
-        val jr2 = new JoinedRow()
-        val posRow = new GenericInternalRow(1)
-        base.map { r =>
-          posRow.update(0, posOf(0))
-          proj(jr2(jr(r, fileRow), posRow))
-        }
+    if (!needsFile && !needsPos) base.map(proj)
+    else {
+      val jr = new JoinedRow()
+      val jr2 = new JoinedRow()
+      val posRow = new GenericInternalRow(1)
+      base.map { r =>
+        posRow.update(0, posOf(0))
+        proj(jr2(jr(r, fileRow), posRow))
       }
-    new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
     }
   }
+}
+
+object TxRowReaderFactory {
+  /** A partition reader over a bin's concatenated split iterators. */
+  private def reader[T](it: Iterator[T])
+      : org.apache.spark.sql.connector.read.PartitionReader[T] =
+    new org.apache.spark.sql.connector.read.PartitionReader[T] {
+      private var current: T = _
+      override def next(): Boolean =
+        if (it.hasNext) { current = it.next(); true } else false
+      override def get(): T = current
+      override def close(): Unit = ()
+    }
 }
 
 /** A [[org.apache.spark.sql.connector.read.Scan]] that IS the delegate
@@ -1451,11 +1461,10 @@ class TxMicroBatchStream(spark: SparkSession, table: TxSnapshotTable,
   override def planInputPartitions(start: OffsetV2, end: OffsetV2)
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val s = off(start); val e = off(end)
-    val parts = Seq.newBuilder[org.apache.spark.sql.connector.read.InputPartition]
+    val parts = Seq.newBuilder[TxFileSplit]
     def fileParts(files: Seq[String],
                   dvs: Map[String, Array[Long]] = Map.empty): Unit = {
-      val st = TxTable.liveFileStatuses(spark, path,
-        TxTable.State(files, Map.empty, Map.empty, None, Map.empty, Nil))
+      val st = TxTable.liveFileStatuses(spark, path, files)
       files.foreach { f =>
         val fst = st(f)
         parts += TxFileSplit(fst.getPath.toString, 0L, fst.getLen,
@@ -1510,7 +1519,11 @@ class TxMicroBatchStream(spark: SparkSession, table: TxSnapshotTable,
           "or consume the row-level change feed via " +
           "spark.readStream.format(\"txtable\").load(path)")
     }
-    parts.result().toArray
+    // whole files (the stream never splits one), packed like a batch scan
+    val splits = parts.result()
+    GraftV2Bridge.packSplits(spark, splits, (s: TxFileSplit) => s.file,
+      GraftV2Bridge.maxSplitBytes(spark, splits.map(_.length)))
+      .map(TxSplitBin(_)).toArray
   }
 
   override def createReaderFactory()

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{GraftTxParquetIndex, GraftV2Bridge}
 
 /** A dependency-free transactional table layer over parquet — the
   * lakehouse commit-log shape (Delta/Iceberg's core mechanics) with
@@ -883,17 +884,34 @@ object TxTable {
         // to the names the footers carry (by-name parquet resolution
         // under the LOGICAL name of a renamed column would silently
         // null-fill it); identity for unmapped tables
-        spark.read.schema(TxMapping.toPhysicalSchema(schemaFromB64(b)))
-          .parquet(files.map(f => s"$path/$f"): _*)
+        readLogFiles(spark, path, files,
+          TxMapping.toPhysicalSchema(schemaFromB64(b)))
       case None =>
         // explicit footer-cached schema: every file carries the full
         // schema when no evolution commit exists (the schema-on-write
         // invariant [[requireSchemaMatch]] enforces), so feeding one
         // file's cached footer skips the per-construct driver-side
         // schema inference a bare spark.read.parquet re-pays
-        spark.read.schema(stateSchema(spark, path, st))
-          .parquet(files.map(f => s"$path/$f"): _*)
+        readLogFiles(spark, path, files, stateSchema(spark, path, st))
     }
+
+  /** Files the commit log names — data, position-delete or change
+    * files, relative to `path` — as one parquet frame under `schema`.
+    * The relation sits on the statuses [[liveFileStatuses]] resolves
+    * (one `listStatus` per staging directory), so building it lists no
+    * path: `spark.read.parquet(paths)` would list every path again and,
+    * past `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * paths, start a Spark job to do it.
+    */
+  private[graft] def readLogFiles(spark: SparkSession, path: String,
+                                  files: Seq[String],
+                                  schema: org.apache.spark.sql.types.StructType)
+      : DataFrame = {
+    val st = liveFileStatuses(spark, path, files)
+    GraftV2Bridge.parquetFrame(spark, new GraftTxParquetIndex(spark,
+      new org.apache.hadoop.fs.Path(path), files.map(f => f -> st(f)),
+      _ => st.keySet), schema)
+  }
 
   /** The snapshot read every consumer goes through: raw files, MINUS
     * the state's position deletes when any exist (merge-on-read),
@@ -1194,20 +1212,21 @@ object TxTable {
       s"could not dropColumn on $path after $MaxCommitRetries lost races")
   }
 
-  /** Resolve a snapshot's live files to [[org.apache.hadoop.fs.FileStatus]]es —
-    * one `listStatus` per STAGING DIRECTORY, not one `getFileStatus`
-    * per file: live files group into `data-*` commit dirs, so a
-    * 100k-file table costs O(commits) metadata RPCs instead of 100k
-    * serial round-trips. A file the log references but the store lost
-    * fails loudly with the commit-log framing (the silent alternative
-    * is a partial scan reading as a smaller table). Used by the
-    * [[TxSnapshotTable]] scans.
+  /** Resolve files the log names (relative to `path`) to
+    * [[org.apache.hadoop.fs.FileStatus]]es — one `listStatus` per
+    * STAGING DIRECTORY, not one `getFileStatus` per file: live files
+    * group into `data-*` commit dirs, so a 100k-file table costs
+    * O(commits) metadata RPCs instead of 100k serial round-trips. A
+    * file the log references but the store lost fails loudly with the
+    * commit-log framing (the silent alternative is a partial scan
+    * reading as a smaller table). Used by the [[TxSnapshotTable]] scans
+    * and [[readLogFiles]].
     */
   private[graft] def liveFileStatuses(spark: SparkSession, path: String,
-                                      st: State)
+                                      files: Seq[String])
       : Map[String, org.apache.hadoop.fs.FileStatus] = {
     val hfs = fs(spark, path)
-    val listed = st.files
+    val listed = files
       .groupBy(f => f.lastIndexOf('/') match {
         case -1 => ""
         case i  => f.substring(0, i)
@@ -1215,12 +1234,14 @@ object TxTable {
       .flatMap { case (dir, fls) =>
         val want = fls.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
         val root = if (dir.isEmpty) path else s"$path/$dir"
-        hfs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+        // a vanished staging dir is missing files, named below
+        (try hfs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+         catch { case _: java.io.FileNotFoundException => Nil })
           .filter(s => want.contains(s.getPath.getName))
           .map(s => (if (dir.isEmpty) s.getPath.getName
                      else s"$dir/${s.getPath.getName}") -> s)
       }
-    val missing = st.files.filterNot(listed.contains)
+    val missing = files.filterNot(listed.contains)
     require(missing.isEmpty,
       s"txtable at $path: the commit log references data files the " +
         s"store no longer holds: ${missing.take(5).mkString(", ")}" +
@@ -1699,7 +1720,8 @@ object TxTable {
       : (Int, Map[String, String]) = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val data = spark.read.parquet(files.map(f => s"$path/$f"): _*)
+    val data = readLogFiles(spark, path, files,
+        footerSchema(spark, path, files.head))
       .select(input_file_name().as("_f"), col(colName).as("_v"))
       .filter(col("_v").isNotNull)
     val counts = data.groupBy("_f").count().collect()
@@ -2077,8 +2099,8 @@ object TxTable {
       else {
         // files carry PHYSICAL names; the feed speaks the TO-version's
         // logical names — read physical, DV-filter, rename at the end
-        val base = spark.read.schema(TxMapping.toPhysicalSchema(schema))
-          .parquet(fs.toSeq.sorted.map(f => s"$path/$f"): _*)
+        val base = readLogFiles(spark, path, fs.toSeq.sorted,
+          TxMapping.toPhysicalSchema(schema))
         val dvApplied =
           if (st.dels.isEmpty) base
           else {
@@ -2198,8 +2220,8 @@ object TxTable {
       if (c.cdf.nonEmpty)
         // one commit's staged cdf files share one schema (staged in a
         // single write) — footer-cached, no per-call inference
-        Some(spark.read.schema(footerSchema(spark, path, c.cdf.head))
-          .parquet(c.cdf.map(f => s"$path/$f"): _*)
+        Some(readLogFiles(spark, path, c.cdf,
+            footerSchema(spark, path, c.cdf.head))
           .withColumn(VersionCol, lit(c.version)))
       else if (c.action == "dv") {
         // position-delete commit without staged cdf: the feed is still
@@ -2211,8 +2233,7 @@ object TxTable {
         // exclusion is needed here.
         val hfs2 = fs(spark, path)
         val pre = foldState(hfs2, path, c.version - 1)
-        val delsDf = spark.read.schema(DelSchema)
-          .parquet(c.dels.map(f => s"$path/$f"): _*)
+        val delsDf = readLogFiles(spark, path, c.dels, DelSchema)
         val refFiles = delsDf.select("f").distinct()
           .collect().map(_.getString(0)).toSeq.sorted
         val deletes = readWithPos(spark, path, pre, refFiles)
@@ -2224,8 +2245,8 @@ object TxTable {
         val both =
           if (c.files.isEmpty) deletes
           else deletes.unionByName(
-            spark.read.schema(footerSchema(spark, path, c.files.head))
-              .parquet(c.files.map(f => s"$path/$f"): _*)
+            readLogFiles(spark, path, c.files,
+                footerSchema(spark, path, c.files.head))
               .withColumn(ChangeCol, lit("insert")))
         Some(toLogicalAt(both, c.version)
           .withColumn(VersionCol, lit(c.version)))
@@ -2236,8 +2257,8 @@ object TxTable {
         // (ALTER ADD COLUMN / SET TBLPROPERTIES) is zero change rows.
         if (c.files.isEmpty) None
         else Some(toLogicalAt(
-          spark.read.schema(footerSchema(spark, path, c.files.head))
-            .parquet(c.files.map(f => s"$path/$f"): _*), c.version)
+          readLogFiles(spark, path, c.files,
+            footerSchema(spark, path, c.files.head)), c.version)
           .withColumn(ChangeCol, lit("insert"))
           .withColumn(VersionCol, lit(c.version)))
       }
@@ -3071,7 +3092,7 @@ object TxTable {
   /** (f, pos) rows of a state's position-delete files. */
   private[graft] def delRows(spark: SparkSession, path: String,
                              st: State): DataFrame =
-    spark.read.schema(DelSchema).parquet(st.dels.map(f => s"$path/$f"): _*)
+    readLogFiles(spark, path, st.dels, DelSchema)
 
   /** Cap on the position-delete bytes [[delPositions]] may collect to
     * the driver. Merge-on-read deletes are for SMALL mutations and
@@ -3098,23 +3119,14 @@ object TxTable {
       .orElse(props.get(DvMaxDriverBytesProp).map(_.toLong))
       .getOrElse(64L * 1024 * 1024)
 
-  /** Driver-side per-file sorted positions — the V2 scan's
-    * per-partition filter sets ([[graft.api.TxFileScan]]). Bounded BY
-    * GUARD, not by hope: position deletes are for SMALL mutations (the
-    * point of merge-on-read) and compactSmall/optimize purge them; a
-    * backlog past [[DvMaxDriverBytesConf]] (default 64 MB) fails
-    * loudly naming the purge verb instead of silently exhausting the
-    * driver. The API snapshot read is unaffected — it applies dels as
-    * a distributed anti-join ([[minusDels]]) and never collects them.
-    */
   /** Process-level cache of built position maps, keyed by (path, del
     * file list) — CONTENT-ADDRESSED: staging names are never reused
     * and del files are immutable, so an equal key always names equal
     * content. Without it every SQL query on a DV-bearing table
     * rebuilds the map (loadTable returns a fresh instance per
-    * statement) — one extra Spark job per query for data that cannot
-    * have changed. Bounded: small (deletes are small by contract and
-    * guarded by [[DvMaxDriverBytesConf]]) and capped at 16 entries.
+    * statement). Bounded:
+    * small (deletes are small by contract and guarded by
+    * [[DvMaxDriverBytesConf]]) and capped at 16 entries.
     */
   private val delPosCache =
     new java.util.LinkedHashMap[(String, Seq[String]),
@@ -3134,13 +3146,26 @@ object TxTable {
         size() > 16 || (size() > 1 && totalPositions > MaxTotalPositions)
     }
 
+  /** Driver-side per-file sorted positions — the V2 scan's
+    * per-partition filter sets ([[graft.api.TxFileScan]]). Bounded BY
+    * GUARD, not by hope: position deletes are for SMALL mutations (the
+    * point of merge-on-read) and compactSmall/optimize purge them; a
+    * backlog past [[DvMaxDriverBytesConf]] (default 64 MB) fails
+    * loudly naming the purge verb instead of silently exhausting the
+    * driver. The API snapshot read is unaffected — it applies dels as
+    * a distributed anti-join ([[minusDels]]) and never collects them.
+    * A cache miss reads every del file of the version on one driver
+    * thread: at the cap that is about 15M positions, about 3 s on a
+    * 4-core host.
+    */
   private[graft] def delPositions(spark: SparkSession, path: String,
                                   st: State): Map[String, Array[Long]] =
     if (st.dels.isEmpty) Map.empty
     else {
-      // the cap check runs BEFORE the cache lookup: the guard's
-      // contract ("over-cap DV reads fail loudly") must not depend on
-      // whether an earlier statement happened to populate the cache
+      // the cap check runs BEFORE the cache lookup and before any del
+      // byte is read: the guard's contract ("over-cap DV reads fail
+      // loudly") must not depend on whether an earlier statement
+      // happened to populate the cache
       val lens = delFileLens(spark, path, st.dels)
       val bytes = st.dels.map(lens.getOrElse(_, 0L)).sum
       val cap = dvDriverCap(spark, st.props)
@@ -3151,17 +3176,30 @@ object TxTable {
           "(SQL: CALL <catalog>.system.compact_small) to materialize the " +
           s"deletes, or raise $DvMaxDriverBytesConf (session) / " +
           s"$DvMaxDriverBytesProp (table property)")
-      val key = (path, st.dels)
       delPosCache.synchronized {
-        val hit = delPosCache.get(key)
+        val hit = delPosCache.get((path, st.dels))
         if (hit != null) return hit
       }
-      import org.apache.spark.sql.functions.{collect_list, sort_array}
-      val built = delRows(spark, path, st).groupBy("f")
-        .agg(sort_array(collect_list("pos")).as("ps"))
-        .collect()
-        .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-      delPosCache.synchronized { delPosCache.put(key, built); () }
+      val missing = st.dels.filterNot(lens.contains)
+      require(missing.isEmpty,
+        s"txtable at $path: the commit log references position-delete " +
+          s"files the store no longer holds: ${missing.take(5).mkString(", ")}")
+      // a miss reads every del file of the version on the driver, one
+      // after another, through the row reader the scans use: no Spark
+      // job, and the cap above bounds the bytes read
+      val read = GraftV2Bridge.parquetRowReader(spark, DelSchema, DelSchema)
+      val out = scala.collection.mutable.HashMap[String,
+        scala.collection.mutable.ArrayBuilder.ofLong]()
+      st.dels.foreach { d =>
+        read(GraftV2Bridge.partitionedFile(s"$path/$d", lens(d))).foreach { r =>
+          out.getOrElseUpdate(r.getUTF8String(0).toString,
+            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
+        }
+      }
+      val built = out.map { case (f, b) =>
+        val ps = b.result(); java.util.Arrays.sort(ps); f -> ps
+      }.toMap
+      delPosCache.synchronized { delPosCache.put((path, st.dels), built); () }
       built
     }
 

@@ -136,6 +136,37 @@ object GraftV2Bridge {
     FilePartition.maxSplitBytes(spark, fileLens.map(_ + open).sum)
   }
 
+  /** Spark's own bin packing of file splits into tasks: splits sorted
+    * largest first (as the native file scans hand them over), then
+    * `FilePartition.getFilePartitions` — each bin takes splits while
+    * their lengths plus `filesOpenCostInBytes` each fit `maxSplitBytes`.
+    * `file` describes an item as the split Spark packs; each bin comes
+    * back as the caller's items, in the order the bin reads them.
+    */
+  def packSplits[T](spark: SparkSession, items: Seq[T],
+                    file: T => PartitionedFile,
+                    maxSplitBytes: Long): Seq[Seq[T]] = {
+    val byFile = new java.util.IdentityHashMap[PartitionedFile, T]()
+    val files = items.map { t => val f = file(t); byFile.put(f, t); f }
+      .sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, files, maxSplitBytes)
+      .map(_.files.toSeq.map(byFile.get))
+  }
+
+  /** A DataFrame over a parquet [[HadoopFsRelation]] on `index` — what
+    * `spark.read.schema(dataSchema).parquet(paths)` builds, minus the
+    * path listing: the index arrives with its file statuses resolved.
+    * `_metadata.*` and `input_file_name()` resolve as on any file scan.
+    */
+  def parquetFrame(spark: SparkSession, index: FileIndex,
+                   dataSchema: StructType): org.apache.spark.sql.DataFrame = {
+    val rel = HadoopFsRelation(index, StructType(Nil), dataSchema, None,
+      new parquet.ParquetFileFormat(), Map.empty)(spark)
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LogicalRelation(rel))
+  }
+
   /** Executor-side parquet write support for the DSv2 `BatchWrite`:
     * `prepareWrite` wires the ParquetWriteSupport schema + committer
     * onto the job conf and returns the serializable factory whose

@@ -1235,7 +1235,7 @@ class ApiSpec extends AnyFunSuite {
   test("cross-process literal cache: exact disk round-trip + source-change invalidation") {
     import java.nio.file.Files
     // a private corpus copy, so mtime bumps never touch shared testdata
-    val dir = Files.createTempDirectory("litcache")
+    val dir = SparkTestSession.tempDir("litcache")
     for (t <- Seq("embeddings", "documents"))
       Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
         dir.resolve(s"$t.parquet"))
@@ -1327,7 +1327,7 @@ class ApiSpec extends AnyFunSuite {
     // page checksum): one value's bytes sit mid-file, and changing it to
     // another non-extreme value leaves the size, every page and chunk
     // statistic and so the whole footer untouched
-    val dir = Files.createTempDirectory("stalemid")
+    val dir = SparkTestSession.tempDir("stalemid")
     val tmp = dir.resolve("w").toString
     spark.range(26000).select((col("id") * 2).as("v")).coalesce(1).write
       .option("compression", "none")
@@ -1679,7 +1679,7 @@ class ApiSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the corpus frame is in-memory: a marker file stands in for the
     // source files it is a deterministic function of
-    val dir = java.nio.file.Files.createTempDirectory("bandidx")
+    val dir = SparkTestSession.tempDir("bandidx")
     val src = java.nio.file.Files.writeString(dir.resolve("corpus.txt"), "v1")
     def cached() = Dedup.cachedBandIndex(spark, dir.toString, Seq(src.toString))(corpusSh)
     def outcome = graft.api.BuildCache.outcome("bands", dir.toString)
@@ -1718,7 +1718,7 @@ class ApiSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val fresh = Dedup.segmentHashes(corpus, "doc_id", "text", 3)
     val direct = result(fresh)
-    val dir = java.nio.file.Files.createTempDirectory("segidx")
+    val dir = SparkTestSession.tempDir("segidx")
     val src = java.nio.file.Files.writeString(dir.resolve("corpus.txt"), "v1")
     def cached(segTokens: Int) = Dedup.cachedSegmentIndex(spark, dir.toString,
       Seq(src.toString), segTokens)(fresh)
@@ -2004,7 +2004,7 @@ class ApiSpec extends AnyFunSuite {
     // run over the common sfDir pins nothing new once any earlier suite
     // has warmed the same shingle cache — a unique path makes the plan
     // (and thus the pinned frames) unambiguously this test's own
-    val dir = java.nio.file.Files.createTempDirectory("clearspec")
+    val dir = SparkTestSession.tempDir("clearspec")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sfDir, "documents.parquet"),
       dir.resolve("documents.parquet"))

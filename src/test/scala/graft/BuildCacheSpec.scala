@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.api.{BuildCache, Dedup}
 import graft.ops.{Pipeline, Sources}
 import graft.ops.H.t
+import graft.shelf.Tables
 import graft.streaming.Streams
 
 /** The one cross-process build cache, row by row over every build it
@@ -98,7 +99,7 @@ class BuildCacheSpec extends AnyFunSuite {
     * testdata.
     */
   private def corpus(): String = {
-    val dir = Files.createTempDirectory("buildcache")
+    val dir = SparkTestSession.tempDir("buildcache")
     Seq("orders", "customer", "documents", "embeddings", "events").foreach { n =>
       Files.copy(Paths.get(s"$sfDir/$n.parquet"), dir.resolve(s"$n.parquet"))
     }
@@ -157,7 +158,7 @@ class BuildCacheSpec extends AnyFunSuite {
   }
 
   test("an entry with a file missing from its manifest is rebuilt, not served") {
-    val dir = Files.createTempDirectory("manifest")
+    val dir = SparkTestSession.tempDir("manifest")
     val input = Files.writeString(dir.resolve("in.txt"), "x")
     def build(): String = BuildCache(spark, "spec_legs", 1, Seq(input.toString),
         dir.toString) { out =>
@@ -181,7 +182,7 @@ class BuildCacheSpec extends AnyFunSuite {
   }
 
   test("concurrent publishers of one key each get a complete entry, no staging left") {
-    val dir = Files.createTempDirectory("pubrace")
+    val dir = SparkTestSession.tempDir("pubrace")
     val input = Files.writeString(dir.resolve("corpus.txt"), "v1")
     val sh = Dedup.shingles(t(spark, sfDir, "documents").filter(col("doc_id") < 40),
       "doc_id", "text")
@@ -223,6 +224,26 @@ class BuildCacheSpec extends AnyFunSuite {
     Graft.clear(spark)
     assert(!Files.exists(Paths.get(a)) && !Files.exists(Paths.get(b)),
       "unpublished builds are deleted at Graft.clear")
+  }
+
+  test("an entry whose input is gone is swept; one whose inputs exist stays") {
+    def entry(name: String): (Path, String) = {
+      val dir = SparkTestSession.tempDir(name)
+      val input = Files.writeString(dir.resolve("in.txt"), name)
+      (dir, BuildCache(spark, "spec_orphan", 1, Seq(input.toString),
+        dir.toString)(out => spark.range(3).write.mode("overwrite").parquet(out)))
+    }
+    val (goneDir, gone) = entry("orphan")
+    val (keptDir, kept) = entry("kept")
+    Tables.deleteRecursively(goneDir)
+    assert(BuildCache.sweepOrphans() >= 1)
+    assert(!Files.exists(Paths.get(gone)), "the entry of a deleted input is gone")
+    assert(!Files.exists(recipeDir("spec_orphan", goneDir.toString)),
+      "and so is its emptied (recipe, scope) directory")
+    assert(Files.exists(Paths.get(kept)) && spark.read.parquet(kept).count() === 3,
+      "an entry whose inputs exist stays")
+    assert(BuildCache(spark, "spec_orphan", 1, Seq(keptDir.resolve("in.txt").toString),
+      keptDir.toString)(_ => fail("a kept entry is served, not rebuilt")) === kept)
   }
 
   test("src/main keeps one cache root: no marker files, shm paths or old roots") {

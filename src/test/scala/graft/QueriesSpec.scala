@@ -17,6 +17,16 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh temp directory, deleted when the test JVM exits — so the
+    * build-cache entries a spec scopes to it are swept as orphans by the
+    * next process's first publish instead of piling up.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(scala.util.Try(graft.shelf.Tables.deleteRecursively(dir)))
+    dir
+  }
 }
 
 class RegistrySpec extends AnyFunSuite {

@@ -180,7 +180,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.api.BuildCache
     // own source dir — the shared sfDir store may already be warm from
     // an earlier process, which would make cold/warm observations racy
-    val dir = java.nio.file.Files.createTempDirectory("preplay").toString
+    val dir = SparkTestSession.tempDir("preplay").toString
     import spark.implicits._
     def write(rows: Seq[(Long, Long, String, Double)]): Unit = {
       // a single FILE named events.parquet, like the real testdata —

@@ -880,4 +880,163 @@ class TxDvSpec extends AnyFunSuite {
       assert(TxTable.latestVersion(spark, p) === 1L)
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
+
+  // ---- reads that plan from the commit log: packed small files and
+  // driver-extended position maps ----
+
+  /** A table of 40 small files (25 rows each, ids 0 until 1000, one
+    * staging), then a position delete of every id divisible by 7.
+    */
+  private def fortySmallFiles(p: String): Seq[Long] = {
+    TxTable.overwrite(spark, p,
+      spark.range(0, 1000, 1, 40).selectExpr("id", "concat('v', id) AS v"))
+    assert(TxTable.history(spark, p).last.files.size === 40)
+    TxTable.deleteWhereDv(spark, p, col("id") % 7 === 0)
+    (0L until 1000L).filter(_ % 7 != 0)
+  }
+
+  private def dataFiles(p: String): Seq[String] =
+    TxTable.history(spark, p).head.files.map(f => s"$p/$f")
+
+  test("a DV-bearing scan of small files plans as many tasks as the native scan") {
+    val p = java.nio.file.Files.createTempDirectory("txdvpk").toString + "/t"
+    fortySmallFiles(p)
+    val native = spark.read.parquet(dataFiles(p): _*).rdd.getNumPartitions
+    val df = spark.read.format("txtable").load(p)
+    assert(df.queryExecution.executedPlan.toString.contains("TxFileScan"))
+    assert(df.rdd.getNumPartitions === native,
+      "small files share tasks under Spark's own packing policy")
+    assert(native < 40, s"the native scan packs the 40 files ($native tasks)")
+  }
+
+  test("one task reading several files keeps SQL DML and reads exact") {
+    def catalog(name: String, dvDml: Boolean): (String, Seq[Long]) = {
+      val w = java.nio.file.Files.createTempDirectory(s"txdv$name").toString
+      spark.conf.set(s"spark.sql.catalog.$name", "graft.api.TxCatalog")
+      spark.conf.set(s"spark.sql.catalog.$name.warehouse", w)
+      spark.conf.set(s"spark.sql.catalog.$name.dv_dml", dvDml.toString)
+      (s"$w/t", fortySmallFiles(s"$w/t"))
+    }
+    def read(sql: String): Map[Long, String] = spark.sql(sql).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+    // copy-on-write DELETE (a subquery forces the row-level rewrite)
+    // and UPDATE, each over packed DV-bearing splits
+    val (cow, live) = catalog("gpkc", dvDml = false)
+    var model = live.map(i => i -> s"v$i").toMap
+    assert(spark.sql("SELECT id FROM gpkc.t").rdd.getNumPartitions < 40)
+    spark.sql("DELETE FROM gpkc.t WHERE id IN " +
+      "(SELECT id FROM range(1000) WHERE id % 11 = 5)")
+    model = model.filter(_._1 % 11 != 5)
+    assert(read("SELECT id, v FROM gpkc.t") === model, "COW DELETE")
+    spark.sql("UPDATE gpkc.t SET v = concat(v, '!') WHERE id % 13 = 2")
+    model = model.map { case (i, v) => i -> (if (i % 13 == 2) v + "!" else v) }
+    assert(read("SELECT id, v FROM gpkc.t") === model, "COW UPDATE")
+    assert(spark.read.format("txtable").load(cow).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap === model, "format read")
+
+    // merge-on-read UPDATE: row ids are (_file, _pos) read from packed
+    // splits; each split anchors its own positions
+    val (mor, live2) = catalog("gpkd", dvDml = true)
+    val origin = spark.read.parquet(dataFiles(mor): _*)
+      .select(col("id"), col("_metadata.file_path"), col("_metadata.row_index"))
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    val ids = spark.sql("SELECT id, _file, _pos FROM gpkd.t").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
+    assert(ids.length === live2.size)
+    ids.filter(_._1 % 5 == 1).foreach { case (i, filePos) =>
+      assert(filePos === origin(i), s"_file/_pos of id $i")
+    }
+    spark.sql("UPDATE gpkd.t SET v = concat(v, '?') WHERE id % 17 = 4")
+    assert(TxTable.history(spark, mor).last.action === "dv")
+    assert(read("SELECT id, v FROM gpkd.t") === live2.map(i =>
+      i -> (if (i % 17 == 4) s"v$i?" else s"v$i")).toMap, "MOR UPDATE")
+  }
+
+  test("a DV-bearing read counts its input bytes like the native scan") {
+    val p = java.nio.file.Files.createTempDirectory("txdvib").toString + "/t"
+    TxTable.overwrite(spark, p, spark.range(0, 200000, 1, 8)
+      .selectExpr("id", "concat('v', id) AS v", "id * 3 AS w"))
+    val files = dataFiles(p)
+    TxTable.deleteWhereDv(spark, p, col("id") % 7 === 0)
+    def inputBytes(df: org.apache.spark.sql.DataFrame): Double =
+      graft.obs.SparkCounters.during(spark.sparkContext) {
+        df.agg(sum("w")).collect(); ()
+      }("input_bytes")
+    val native = inputBytes(spark.read.parquet(files: _*))
+    val dv = inputBytes(spark.read.format("txtable").load(p))
+    assert(native > 0 && dv >= 0.9 * native,
+      s"input bytes: DV-bearing read $dv, native scan of the same files $native")
+  }
+
+  /** The position map as a Spark job computes it — the reference the
+    * driver-side read must equal. */
+  private def referencePositions(p: String, st: TxTable.State)
+      : Map[String, Seq[Long]] =
+    if (st.dels.isEmpty) Map.empty
+    else TxTable.delRows(spark, p, st).groupBy("f")
+      .agg(sort_array(collect_list("pos"))).collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+
+  test("delPositions reads on the driver with no Spark job and equals the Spark reference") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.util.Pretty
+    sealed trait Op
+    case class Append(n: Int) extends Op
+    case class Delete(m: Int, r: Int) extends Op
+    case class Update(m: Int, r: Int) extends Op
+    case object Compact extends Op
+    val op: Gen[Op] = Gen.frequency(
+      2 -> Gen.choose(1, 40).map(Append),
+      3 -> Gen.zip(Gen.choose(2, 9), Gen.choose(0, 8)).map { case (m, r) => Delete(m, r % m) },
+      3 -> Gen.zip(Gen.choose(2, 9), Gen.choose(0, 8)).map { case (m, r) => Update(m, r % m) },
+      1 -> Gen.const(Compact))
+    var next = 0L
+    def rows(n: Int) = {
+      val df = spark.range(next, next + n).selectExpr("id", "id * 10 AS w")
+      next += n; df
+    }
+    def run(ops: List[Op]): Boolean = {
+      val p = java.nio.file.Files.createTempDirectory("txdvprop").toString + "/t"
+      TxTable.overwrite(spark, p, rows(60).repartition(3))
+      ops.forall { o =>
+        o match {
+          case Append(n)    => TxTable.append(spark, p, rows(n))
+          case Delete(m, r) => TxTable.deleteWhereDv(spark, p, col("id") % m === r)
+          case Update(m, r) => TxTable.updateWhereDv(spark, p, col("id") % m === r,
+            Map("w" -> (col("w") + 1)))
+          case Compact      => TxTable.compactSmall(spark, p)
+        }
+        val st = TxTable.snapshotState(spark, p, TxTable.latestVersion(spark, p))
+        var got = Map.empty[String, Array[Long]]
+        val jobs = graft.obs.SparkCounters.during(spark.sparkContext) {
+          got = TxTable.delPositions(spark, p, st)
+        }("jobs")
+        val want = referencePositions(p, st)
+        val same = got.map { case (f, ps) => f -> ps.toSeq } == want
+        assert(same, s"after $o: positions differ from the Spark reference")
+        assert(jobs === 0.0, s"after $o: delPositions started $jobs Spark jobs")
+        same && jobs == 0.0
+      }
+    }
+    val prop = Prop.forAll(Gen.choose(2, 6).flatMap(Gen.listOfN(_, op)))(run)
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(4), prop)
+    assert(result.passed, Pretty.pretty(result))
+  }
+
+  test("the DV cap fails before any position-delete byte is read") {
+    val p = java.nio.file.Files.createTempDirectory("txdvcap2").toString + "/t"
+    fortySmallFiles(p)
+    val st = TxTable.snapshotState(spark, p, TxTable.latestVersion(spark, p))
+    // an unreadable del file: only the cap check can keep its bytes unread
+    st.dels.foreach(d => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$p/$d"), "not parquet " * 64))
+    spark.conf.set(TxTable.DvMaxDriverBytesConf, "1")
+    try {
+      val e = intercept[IllegalStateException](TxTable.delPositions(spark, p, st))
+      assert(e.getMessage.contains("compact_small"), e.getMessage)
+    } finally spark.conf.unset(TxTable.DvMaxDriverBytesConf)
+    // under the default cap the same call reads the broken file and fails
+    intercept[Exception](TxTable.delPositions(spark, p, st))
+  }
 }

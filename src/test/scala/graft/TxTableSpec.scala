@@ -2218,4 +2218,24 @@ class TxTableSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("appId"))
   }
+
+  test("TxTable.read over 40 files starts no listing job; a lost file fails by name") {
+    val t = fresh()
+    TxTable.overwrite(spark, t,
+      spark.range(0, 800, 1, 40).selectExpr("id", "concat('v', id) AS v"))
+    val files = TxTable.history(spark, t).last.files
+    assert(files.size === 40)
+    def jobs(build: => org.apache.spark.sql.DataFrame): Double =
+      graft.obs.SparkCounters.during(spark.sparkContext) { build; () }("jobs")
+    assert(jobs(TxTable.read(spark, t)) === 0.0,
+      "40 log-named files exceed the parallel-listing threshold of 32")
+    TxTable.deleteWhereDv(spark, t, col("id") % 9 === 0)
+    assert(jobs(TxTable.read(spark, t)) === 0.0, "nor with position deletes")
+    val withPos = TxTable.read(spark, t)
+    assert(withPos.count() === 800L - 89L)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$t/${files.head}"))
+    val e = intercept[IllegalArgumentException](TxTable.read(spark, t).count())
+    assert(e.getMessage.contains("commit log references data files the store no longer holds"),
+      e.getMessage)
+  }
 }
