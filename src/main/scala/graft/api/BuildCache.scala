@@ -60,27 +60,55 @@ object BuildCache {
   def apply(spark: SparkSession, recipe: String, ver: Int, inputs: Seq[String],
             scope: String, params: Seq[(String, Any)] = Nil)(
       build: String => Unit): String = {
-    val (key, publishable) = keyOf(recipe, ver, inputs, scope, params,
+    val k = key(spark, recipe, ver, inputs, scope, params)
+    lookup(k).getOrElse(publish(spark, k)(build))
+  }
+
+  /** A key of [[apply]], its inputs fingerprinted when it is made. A
+    * caller that builds outside [[apply]] makes the key before it reads
+    * the inputs, so what it publishes is keyed to what it read.
+    */
+  private[graft] final case class Key(recipe: String, scope: String, text: String,
+                                      publishable: Boolean) {
+    def dir: Path = entryDir(recipe, scope, text)
+  }
+
+  private[graft] def key(spark: SparkSession, recipe: String, ver: Int,
+                         inputs: Seq[String], scope: String,
+                         params: Seq[(String, Any)] = Nil): Key = {
+    val (text, publishable) = keyOf(recipe, ver, inputs, scope, params,
       spark.sparkContext.hadoopConfiguration)
-    val entry = entryDir(recipe, scope, key)
-    if (intact(entry, key)) { record(recipe, scope, served = true); return entry.toString }
-    record(recipe, scope, served = false)
+    Key(recipe, scope, text, publishable)
+  }
+
+  /** The intact entry of `k`, counted served; None is counted built. */
+  private[graft] def lookup(k: Key): Option[String] = {
+    val hit = intact(k.dir, k.text)
+    record(k.recipe, k.scope, served = hit)
+    if (hit) Some(k.dir.toString) else None
+  }
+
+  /** Build `k` into a fresh directory and publish it: the build step of
+    * [[apply]], for a caller whose [[lookup]] missed.
+    */
+  private[graft] def publish(spark: SparkSession, k: Key)(build: String => Unit): String = {
+    val entry = k.dir
     val stage = entry.resolveSibling(
       s"${entry.getFileName}_${ProcessHandle.current().pid()}_${nonce()}")
     Files.createDirectories(stage)
     try {
       build(stage.toString)
-      Files.writeString(stage.resolve(KeyFile), sealOf(stage, key))
+      Files.writeString(stage.resolve(KeyFile), sealOf(stage, k.text))
     } catch { case e: Throwable => quietlyDelete(stage); throw e }
-    if (!publishable)
+    if (!k.publishable)
       SessionMemo.withRelease[String](spark, "buildCache.unpublished",
         stage.toString, d => quietlyDelete(Paths.get(d)))(stage.toString)
     else {
-      if (Files.exists(entry) && !intact(entry, key)) retire(entry)
+      if (Files.exists(entry) && !intact(entry, k.text)) retire(entry)
       try Files.move(stage, entry, StandardCopyOption.ATOMIC_MOVE)
       catch { case e: java.io.IOException =>
         quietlyDelete(stage)
-        if (!intact(entry, key)) throw e
+        if (!intact(entry, k.text)) throw e
       }
       sweep(entry)
       if (orphansSwept.compareAndSet(false, true)) scala.util.Try(sweepOrphans())

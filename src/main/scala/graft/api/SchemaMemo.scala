@@ -79,6 +79,32 @@ object SchemaMemo {
            _: java.nio.file.InvalidPathException => None
     }
 
+  /** CSV schemas as `inferSchema` finds them, keyed by content: (the
+    * file's sha256, the reader options, [[sqlSettings]]). Inference
+    * costs two Spark jobs (the header, then a full scan for the types);
+    * a hit costs none. Cleared wholesale past the cap, as the relation
+    * memo is.
+    */
+  private val csvSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String], String), StructType]()
+  private val CsvMemoCap = 512
+
+  /** The schema of the CSV content `sha256` read under `options`:
+    * `infer` runs on a miss only.
+    */
+  def csvSchema(s: SparkSession, sha256: String, options: Map[String, String])(
+      infer: => StructType): StructType = {
+    if (csvSchemas.size() > CsvMemoCap) csvSchemas.clear()
+    csvSchemas.computeIfAbsent((sha256, options, sqlSettings(s)), _ => infer)
+  }
+
+  /** The session's `spark.sql.*` settings, sorted: part of the key of
+    * anything derived from a read under them.
+    */
+  private[graft] def sqlSettings(s: SparkSession): String =
+    s.conf.getAll.filter(_._1.startsWith("spark.sql.")).toSeq.sorted
+      .map { case (k, v) => s"$k=$v" }.mkString(", ")
+
   /** The schema `spark.read.parquet(file)` infers for one parquet file,
     * decoded from its footer on the calling thread: no Spark job.
     */

@@ -908,7 +908,7 @@ object TxTable {
                                   schema: org.apache.spark.sql.types.StructType)
       : DataFrame = {
     val st = liveFileStatuses(spark, path, files)
-    GraftV2Bridge.parquetFrame(spark, new GraftTxParquetIndex(spark,
+    GraftV2Bridge.fileFrame(spark, new GraftTxParquetIndex(spark,
       new org.apache.hadoop.fs.Path(path), files.map(f => f -> st(f)),
       _ => st.keySet), schema)
   }

@@ -24,6 +24,11 @@ import org.roaringbitmap.longlong.Roaring64NavigableMap
   * an exchange of one serialized buffer per (task, group), and the
   * final merge.
   *
+  * Two more forms carry the bitmap itself between aggregations: with
+  * `toBuffer` the result is the serialized bitmap (BINARY) instead of
+  * its cardinality, and with `buffersOf = Some(t)` the child is such a
+  * BINARY column of bitmaps of `t` values, which `update` ORs.
+  *
   * Memory: the buffer grows with the distinct count, not the row count.
   * Per 2^16-value block a dense range costs about 1 bit per value (a
   * bitmap container; a contiguous run shrinks to a few bytes once
@@ -35,21 +40,27 @@ import org.roaringbitmap.longlong.Roaring64NavigableMap
 final case class ExactDistinctAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
+    override val inputAggBufferOffset: Int = 0,
+    buffersOf: Option[DataType] = None,
+    toBuffer: Boolean = false)
   extends TypedImperativeAggregate[AnyRef] {
+
+  private def valueType: DataType = buffersOf.getOrElse(child.dataType)
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = LongType
+  override def dataType: DataType = if (toBuffer) BinaryType else LongType
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (ExactDistinctAgg.supports(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"exact distinct expects an integral, date or timestamp column, got ${child.dataType.sql}")
+    if (!ExactDistinctAgg.supports(valueType)) TypeCheckResult.TypeCheckFailure(
+      s"exact distinct expects an integral, date or timestamp column, got ${valueType.sql}")
+    else if (buffersOf.isDefined && child.dataType != BinaryType) TypeCheckResult.TypeCheckFailure(
+      s"exact distinct over bitmaps expects a BINARY column, got ${child.dataType.sql}")
+    else TypeCheckResult.TypeCheckSuccess
 
   // The 64-bit map runs without its cardinality cache: after `or` and
   // `deserializePortable` the 1.3.0 cache can index past its own array.
-  override def createAggregationBuffer(): AnyRef = child.dataType match {
+  override def createAggregationBuffer(): AnyRef = valueType match {
     case LongType | TimestampType | TimestampNTZType =>
       new Roaring64NavigableMap(/* signedLongs = */ false, /* cacheCardinalities = */ false)
     case _ => new RoaringBitmap()
@@ -57,11 +68,15 @@ final case class ExactDistinctAgg(
 
   override def update(buf: AnyRef, input: InternalRow): AnyRef = {
     val v = child.eval(input)
-    if (v != null) buf match {
-      case b: RoaringBitmap => b.add(v.asInstanceOf[Number].intValue)
-      case b: Roaring64NavigableMap => b.addLong(v.asInstanceOf[Long])
+    if (v == null) buf
+    else if (buffersOf.isDefined) merge(buf, deserialize(v.asInstanceOf[Array[Byte]]))
+    else {
+      buf match {
+        case b: RoaringBitmap => b.add(v.asInstanceOf[Number].intValue)
+        case b: Roaring64NavigableMap => b.addLong(v.asInstanceOf[Long])
+      }
+      buf
     }
-    buf
   }
 
   override def merge(a: AnyRef, b: AnyRef): AnyRef = {
@@ -72,10 +87,12 @@ final case class ExactDistinctAgg(
     a
   }
 
-  override def eval(buf: AnyRef): Any = buf match {
-    case b: RoaringBitmap => b.getLongCardinality
-    case b: Roaring64NavigableMap => b.getLongCardinality
-  }
+  override def eval(buf: AnyRef): Any =
+    if (toBuffer) serialize(buf)
+    else buf match {
+      case b: RoaringBitmap => b.getLongCardinality
+      case b: Roaring64NavigableMap => b.getLongCardinality
+    }
 
   override def serialize(buf: AnyRef): Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
@@ -119,6 +136,17 @@ object ExactDistinctAgg {
   }
 
   /** `count(DISTINCT c)` for a column of a [[supports]]ed type. */
-  def apply(c: Column): Column =
-    GraftColumn.of(ExactDistinctAgg(GraftColumn.expression(c)).toAggregateExpression())
+  def apply(c: Column): Column = of(ExactDistinctAgg(GraftColumn.expression(c)))
+
+  /** The serialized bitmap of `c`'s non-null values, for [[merge]]. */
+  def partial(c: Column): Column =
+    of(ExactDistinctAgg(GraftColumn.expression(c), toBuffer = true))
+
+  /** `count(DISTINCT)` over the union of the [[partial]] bitmaps in
+    * `buffers`, taken of values of type `t`.
+    */
+  def merge(buffers: Column, t: DataType): Column =
+    of(ExactDistinctAgg(GraftColumn.expression(buffers), buffersOf = Some(t)))
+
+  private def of(agg: ExactDistinctAgg): Column = GraftColumn.of(agg.toAggregateExpression())
 }

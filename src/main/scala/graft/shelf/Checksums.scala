@@ -116,7 +116,7 @@ private[graft] object StatCache {
   private[graft] final case class Stat(dev: Long, ino: Long, size: Long,
                                        mtimeNs: Long, ctimeNs: Long)
 
-  private val RacyNanos = TimeUnit.SECONDS.toNanos(2)
+  private[graft] val RacyNanos = TimeUnit.SECONDS.toNanos(2)
 
   private val entries = new ConcurrentHashMap[Path, (Stat, String)]()
 

@@ -113,12 +113,22 @@ object Tables {
   private def execSql(spark: SparkSession, root: Path, sqlFile: Path,
                       deps: Seq[StepURI], dest: Path,
                       write: WriteConfig): Unit = {
-    val depPaths = deps.map(d => dependencyPath(root, d).toString)
-    val names = Naming.simplifyDependencyNames(depPaths)
+    val frames = deps.map { d =>
+      if (d.scheme == "table") {
+        val path = tablePath(root, d).toString
+        path -> SchemaMemo.read(spark, path)
+      } else {
+        val s = Snapshots.load(root, d)
+        val path = s.dataPath(root).toString
+        path -> readSnapshot(spark, path, s.checksum)
+      }
+    }
+    val byPath = frames.toMap
+    val names = Naming.simplifyDependencyNames(frames.map(_._1))
     var sql = Files.readString(sqlFile)
     names.foreach { case (name, path) =>
       val view = s"dep_$name"
-      readAny(spark, path).createOrReplaceTempView(view)
+      byPath(path).createOrReplaceTempView(view)
       sql = sql.replace(s"{$name}", view)
     }
     sql = sql.replace("{output_file}", dest.toString)
@@ -187,14 +197,22 @@ object Tables {
     if (uri.scheme == "table") tablePath(root, uri)
     else Snapshots.load(root, uri).dataPath(root)
 
-  /** Read a dependency by extension: parquet tables (through the
-    * stat-keyed [[graft.api.SchemaMemo]]: no schema-inference job),
-    * csv/json/text snapshots.
+  private val CsvOptions = Map("header" -> "true")
+
+  /** Read a snapshot's data by extension: parquet (through the
+    * stat-keyed [[graft.api.SchemaMemo]]: no schema-inference job), csv,
+    * json or text. A CSV's schema is inferred once per `sha256` (the
+    * snapshot's recorded checksum of its content) through
+    * [[graft.api.SchemaMemo.csvSchema]], and given to the reader after
+    * that.
     */
-  def readAny(spark: SparkSession, path: String): DataFrame =
+  def readSnapshot(spark: SparkSession, path: String, sha256: String): DataFrame =
     if (path.endsWith(".parquet")) SchemaMemo.read(spark, path)
-    else if (path.endsWith(".csv"))
-      spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    else if (path.endsWith(".csv")) {
+      val csv = spark.read.options(CsvOptions)
+      csv.schema(SchemaMemo.csvSchema(spark, sha256, CsvOptions)(
+        csv.option("inferSchema", "true").csv(path).schema)).csv(path)
+    }
     else if (path.endsWith(".json")) spark.read.json(path)
     else spark.read.text(path)
 

@@ -153,15 +153,17 @@ object GraftV2Bridge {
       .map(_.files.toSeq.map(byFile.get))
   }
 
-  /** A DataFrame over a parquet [[HadoopFsRelation]] on `index` — what
-    * `spark.read.schema(dataSchema).parquet(paths)` builds, minus the
-    * path listing: the index arrives with its file statuses resolved.
-    * `_metadata.*` and `input_file_name()` resolve as on any file scan.
+  /** A DataFrame over a [[HadoopFsRelation]] of `format` (parquet by
+    * default) on `index` — what `spark.read.schema(dataSchema)` builds
+    * over the same files, minus the path listing: the index arrives with
+    * its file statuses resolved. `_metadata.*` and `input_file_name()`
+    * resolve as on any file scan.
     */
-  def parquetFrame(spark: SparkSession, index: FileIndex,
-                   dataSchema: StructType): org.apache.spark.sql.DataFrame = {
+  def fileFrame(spark: SparkSession, index: FileIndex, dataSchema: StructType,
+                format: FileFormat = new parquet.ParquetFileFormat(),
+                options: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
     val rel = HadoopFsRelation(index, StructType(Nil), dataSchema, None,
-      new parquet.ParquetFileFormat(), Map.empty)(spark)
+      format, options)(spark)
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LogicalRelation(rel))
@@ -293,8 +295,9 @@ class GraftMetaAwareParquetScanBuilder(
   * metadata RPCs, [[graft.api.TxTable.liveFileStatuses]]), `listFiles` delegates
   * pruning to the caller's log-metadata closure, and there is no
   * partition discovery at all (a txtable clusters inside files; its
-  * pruning index IS the log). Lives here because the parent class is
-  * `private[sql]`; all policy stays in graft.
+  * pruning index IS the log). `graft.api.Profile` uses it the same way
+  * over the input files whose partials it must compute. Lives here
+  * because the parent class is `private[sql]`; all policy stays in graft.
   */
 class GraftTxParquetIndex(
     spark: SparkSession,

@@ -10,13 +10,15 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Arbitrary, Gen, Prop, Test}
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
-import graft.api.Profile
+import graft.api.{BuildCache, Profile}
 import graft.functions.ExactDistinctAgg
 import graft.obs.{PlanPhases, SparkCounters}
 
 /** The bitmap distinct count: it equals `countDistinct` on every type it
   * takes, `Profile.profile` keeps its rows, and its plan has no row
-  * expansion and shuffles one buffer per task.
+  * expansion and shuffles one buffer per task. Over a bare file scan
+  * the profile merges per-file partials, and still equals the single
+  * aggregation whatever happened to the files since the last profile.
   */
 class ProfileSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -166,5 +168,177 @@ class ProfileSpec extends AnyFunSuite {
     // sparse, plus a few bytes per block
     assert(everyOther <= 31 * (8192 + 16))
     assert(random32 <= 2 * 1000000 + 16 * 65536)
+  }
+
+  // ---- per-file partials over a CSV directory ----
+
+  private val csvCols = Seq("i", "l", "d", "ts")
+  private val csvSchemas = Seq("i INT, l BIGINT, d DATE, ts TIMESTAMP",
+    "i BIGINT, l BIGINT, d DATE, ts TIMESTAMP")
+
+  /** A value of `column`: every value of a column has one width, so a
+    * rewrite that keeps the nulls keeps the file's size.
+    */
+  private def csvValue(r: scala.util.Random, column: Int): String = column match {
+    case 0 => (100 + r.nextInt(900)).toString
+    case 1 => (1000000 + r.nextInt(9000000)).toString
+    case 2 => f"20${r.nextInt(100)}%02d-${1 + r.nextInt(12)}%02d-${1 + r.nextInt(28)}%02d"
+    case _ => f"2024-03-${1 + r.nextInt(28)}%02d ${r.nextInt(24)}%02d:${r.nextInt(60)}%02d:00"
+  }
+  /** Fields of one CSV row, None for an empty (null) field. */
+  private def csvRow(r: scala.util.Random, allNull: Boolean): Seq[Option[String]] =
+    csvCols.indices.map(i => if (allNull || r.nextInt(6) == 0) None else Some(csvValue(r, i)))
+
+  /** A directory of CSV files the property rewrites between profiles. */
+  private final class CsvDir(val dir: java.nio.file.Path, seed: Long) {
+    private val r = new scala.util.Random(seed)
+    var sep = ","
+    var schema = csvSchemas.head
+    private var rows = Map.empty[String, Seq[Seq[Option[String]]]]
+    private var next = 0
+
+    def names: Seq[String] = rows.keys.toSeq.sorted
+    private def write(name: String): Unit = {
+      val text = (csvCols +: rows(name).map(_.map(_.getOrElse(""))))
+        .map(_.mkString(sep) + "\n").mkString
+      java.nio.file.Files.writeString(dir.resolve(name), text)
+    }
+    def add(allNull: Boolean = false): Unit = {
+      val name = f"f$next%02d.csv"; next += 1
+      rows += name -> Seq.fill(1 + r.nextInt(30))(csvRow(r, allNull)); write(name)
+    }
+    def remove(name: String): Unit = { rows -= name; java.nio.file.Files.delete(dir.resolve(name)) }
+    def rewrite(name: String): Unit = {
+      rows += name -> Seq.fill(1 + r.nextInt(30))(csvRow(r, allNull = false)); write(name)
+    }
+    /** New values under the same nulls, and the old mtime set back. */
+    def rewriteSameSize(name: String): Unit = {
+      val p = dir.resolve(name)
+      val (size, mtime) = (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p))
+      rows += name -> rows(name).map(_.zipWithIndex.map { case (v, i) => v.map(_ => csvValue(r, i)) })
+      write(name)
+      assert(java.nio.file.Files.size(p) === size)
+      java.nio.file.Files.setLastModifiedTime(p, mtime)
+    }
+    def respell(newSep: String): Unit = { sep = newSep; names.foreach(write) }
+    def append(name: String): Unit = {
+      rows += name -> (rows(name) ++ Seq.fill(5)(csvRow(r, allNull = false))); write(name)
+    }
+
+    def frame: DataFrame = spark.read.option("header", "true").option("sep", sep)
+      .schema(schema).csv(dir.toString)
+  }
+
+  /** `Profile.profile` over the directory equals the single aggregation. */
+  private def matches(d: CsvDir): Boolean = {
+    val got = Profile.profile(d.frame, csvCols)
+    val want = reference(d.frame, csvCols)
+    got.schema == want.schema && got.collect().toSeq == want.collect().toSeq
+  }
+
+  private def servedAndBuilt(d: CsvDir, names: Seq[String]): (Int, Int) = {
+    val o = names.map(n => BuildCache.outcome("profile-part", d.dir.resolve(n).toString))
+    (o.map(_._1).sum, o.map(_._2).sum)
+  }
+
+  private final case class Step(name: String, run: CsvDir => Unit) {
+    override def toString: String = name
+  }
+
+  private val step: Gen[Step] = Gen.oneOf(
+    Step("rewrite", d => d.names.headOption.foreach(d.rewrite)),
+    Step("same-size rewrite", d => d.names.lastOption.foreach(d.rewriteSameSize)),
+    Step("add", d => d.add()),
+    Step("add all-null", d => d.add(allNull = true)),
+    Step("remove", d => d.names.headOption.foreach(d.remove)),
+    Step("remove all", d => d.names.foreach(d.remove)),
+    Step("sep", d => d.respell(if (d.sep == ",") ";" else ",")),
+    Step("schema", d => d.schema = csvSchemas.filterNot(_ == d.schema).head),
+    Step("time zone", _ => spark.conf.set("spark.sql.session.timeZone",
+      if (spark.conf.get("spark.sql.session.timeZone") == "UTC") "America/Los_Angeles" else "UTC")))
+
+  test("per-file profile equals the single aggregation over random file changes") {
+    assume(java.nio.file.FileSystems.getDefault.supportedFileAttributeViews.contains("unix"))
+    var seen = Seq.empty[(CsvDir, Seq[String])]
+    val prop = Prop.forAllNoShrink(Gen.listOfN(6, step), Gen.choose(0L, Long.MaxValue)) { (steps, seed) =>
+      val d = new CsvDir(SparkTestSession.tempDir("profcsv"), seed)
+      try {
+        (0 until 3).foreach(_ => d.add())
+        Thread.sleep(2200) // out of the racy window: these partials publish
+        val ok = matches(d) && steps.forall { s => s.run(d); matches(d) }
+        seen :+= d -> (0 until 10).map(k => f"f$k%02d.csv")
+        ok
+      } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(5), prop)
+    assert(result.passed, Pretty.pretty(result))
+    val (served, built) = seen.map { case (d, ns) => servedAndBuilt(d, ns) }
+      .foldLeft((0, 0)) { case ((a, b), (c, e)) => (a + c, b + e) }
+    info(s"partials: $served served, $built built")
+    assert(served > 0 && built > 0)
+  }
+
+  test("a file rewritten inside the racy window is never served a stale partial") {
+    assume(java.nio.file.FileSystems.getDefault.supportedFileAttributeViews.contains("unix"))
+    val d = new CsvDir(SparkTestSession.tempDir("profracy"), 7)
+    d.add(); d.add()
+    val Seq(a, b) = d.names
+    assert(matches(d))
+    assert(servedAndBuilt(d, Seq(a, b)) === (0, 2))
+    // written just now: used once, never published
+    d.rewriteSameSize(a)
+    assert(matches(d))
+    assert(servedAndBuilt(d, Seq(a, b)) === (0, 4))
+    Thread.sleep(2200)
+    assert(matches(d))
+    assert(matches(d))
+    assert(servedAndBuilt(d, Seq(a, b)) === (2, 6))
+    // a published partial is keyed by its file's ctime
+    d.rewriteSameSize(b)
+    assert(matches(d))
+    assert(servedAndBuilt(d, Seq(a, b)) === (3, 7))
+  }
+
+  test("a frame listed before its file grew publishes no partial of that file") {
+    assume(java.nio.file.FileSystems.getDefault.supportedFileAttributeViews.contains("unix"))
+    val d = new CsvDir(SparkTestSession.tempDir("proflisted"), 11)
+    d.add(); d.add()
+    val Seq(a, b) = d.names
+    val listed = d.frame
+    d.append(b)
+    Thread.sleep(2200) // out of the racy window: only the listing differs
+    assert(Profile.profile(listed, csvCols).collect().toSeq ===
+      reference(listed, csvCols).collect().toSeq)
+    // b, as listed, is read once and keyed by nothing
+    assert(servedAndBuilt(d, Seq(a, b)) === (0, 1))
+    assert(matches(d))
+    assert(servedAndBuilt(d, Seq(a, b)) === (1, 2))
+    assert(matches(d))
+    assert(servedAndBuilt(d, Seq(a, b)) === (3, 2))
+  }
+
+  test("a listed file that is gone is left to the scan") {
+    val d = new CsvDir(SparkTestSession.tempDir("profgone"), 13)
+    d.add(); d.add()
+    val listed = d.frame
+    d.remove(d.names.head)
+    spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
+    try assert(Profile.profile(listed, csvCols).collect().toSeq ===
+      reference(listed, csvCols).collect().toSeq)
+    finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
+  }
+
+  test("non-bitmap or non-bare-scan inputs plan the single aggregation lazily") {
+    val d = new CsvDir(SparkTestSession.tempDir("profshape"), 3)
+    (0 until 3).foreach(_ => d.add())
+    def jobsAtCall(df: DataFrame, cols: Seq[String]): Int =
+      SparkCounters.during(spark.sparkContext)(Profile.profile(df, cols))("jobs").toInt
+    val strings = spark.read.option("header", "true").csv(d.dir.toString)
+    assert(jobsAtCall(d.frame.where(col("i") > 500), csvCols) === 0)
+    assert(jobsAtCall(strings, Seq("i")) === 0)
+    assert(jobsAtCall(d.frame.select(col("i"), col("l") + 1), Seq("i")) === 0)
+    assert(jobsAtCall(d.frame.select("ts", "i"), Seq("i")) > 0)
+    assert(Profile.profile(strings, Seq("i")).collect().toSeq ===
+      reference(strings, Seq("i")).collect().toSeq)
   }
 }

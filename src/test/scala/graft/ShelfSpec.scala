@@ -1080,6 +1080,75 @@ class ShelfEndToEndSpec extends AnyFunSuite {
     assert(row.getAs[Int]("total") === 30)
   }
 
+  /** The short call sites of the Spark jobs `body` starts (each job's
+    * result stage is named after it). */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val sc = SparkTestSession.spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    org.apache.spark.GraftListenerBus.drain()
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftListenerBus.drain() }
+    finally sc.removeSparkListener(l)
+    sites.asScala.toSeq
+  }
+
+  test("a CSV dependency read by content key matches inferSchema, and infers once") {
+    val spark = SparkTestSession.spark
+    val dir = SparkTestSession.tempDir("csvschema")
+    val files = Seq(
+      "mixed.csv" -> ("n,x,t,e,q\n1,1.5,2024-01-02 03:04:05,,\"a,b\"\n" +
+        "-7,2e3,2023-12-31 23:59:59,x,\"c, d\"\n,,,,\n"),
+      "header_only.csv" -> "a,b\n")
+    files.foreach { case (name, text) =>
+      val p = dir.resolve(name)
+      Files.writeString(p, text)
+      val sha = Checksums.checksumFile(p)
+      val want = spark.read.option("header", "true").option("inferSchema", "true").csv(p.toString)
+      val first = Tables.readSnapshot(spark, p.toString, sha)
+      var second: org.apache.spark.sql.DataFrame = null
+      assert(jobSites { second = Tables.readSnapshot(spark, p.toString, sha) } === Nil, name)
+      for (df <- Seq(first, second)) {
+        assert(df.schema === want.schema, name)
+        assert(df.collect().toSeq === want.collect().toSeq, name)
+      }
+    }
+    assert(spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(dir.resolve("mixed.csv").toString).schema.map(_.dataType.typeName) ===
+      Seq("integer", "double", "timestamp", "string", "string"))
+  }
+
+  test("rebuilding a SQL step infers the schema of the touched CSV only") {
+    val (shelf, root) = freshShelf()
+    val src = Files.createTempDirectory("csvdeps")
+    def csv(name: String, v: Int): Path = {
+      val p = src.resolve(name)
+      Files.writeString(p, s"dim_k,v\n1,$v\n2,${v + 1}\n")
+      p
+    }
+    val a = shelf.snapshot(csv("a.csv", 10), "cs/a", today = today)
+    val b = shelf.snapshot(csv("b.csv", 20), "cs/b", today = today)
+    val script = root.resolve("src/steps/tables/cs/tot/2026-08-12.sql")
+    Files.createDirectories(script.getParent)
+    Files.writeString(script,
+      "SELECT CAST(SUM(v) AS BIGINT) AS dim_total FROM (SELECT v FROM {a} UNION ALL SELECT v FROM {b})")
+    val uri = StepURI.table("cs/tot/2026-08-12")
+    shelf.catalog = shelf.catalog.addStep(uri, Seq(a, b)); shelf.catalog.save()
+    def total = SparkTestSession.spark.read.parquet(Tables.tablePath(root, uri).toString)
+      .collect()(0).getLong(0)
+    val coldSites = jobSites(assert(shelf.run() === Seq(uri)))
+    val cold = coldSites.count(_.startsWith("csv at Tables.scala"))
+    assert(total === 62L)
+    // one snapshot changes: only its new content is inferred
+    shelf.snapshot(csv("a.csv", 30), "cs/a", force = true, today = today)
+    val warm = jobSites(assert(shelf.run() === Seq(uri))).count(_.startsWith("csv at Tables.scala"))
+    assert(total === 102L)
+    assert(cold > 0 && warm * 2 === cold, s"csv jobs: cold $cold, after one touch $warm; ${coldSites.mkString("; ")}")
+  }
+
   test("JSON snapshot dependency reads through the SQL step") {
     val (shelf, root) = freshShelf()
     val f = Files.createTempFile("j", ".json")
